@@ -1,15 +1,16 @@
 """Seeded benchmark inputs.
 
-``ensure(data_root, seed)`` builds, once per seed, everything the three
-workloads read and caches it under ``data_root/seed<N>/``:
+``ensure(data_root, seed, part)`` builds, once per seed, one part of
+what the workloads read and caches it under ``data_root/seed<N>/``:
 
 * ``corpus/documents.parquet/`` -- the word-count corpus: Zipf(s=1.1)
   draws over a 1M-word vocabulary, joined by mixed delimiters
   (spaces, punctuation, digits, newlines) with sentence-initial
   capitals, split into many parquet files.
 * ``tables/{documents,events}.parquet`` -- the tables the ``python_udf``
-  queries read, with the schemas, value domains and row counts of the
-  repo's sf0.1 test tables, rows in a seed-permuted order.
+  queries read, generated with the schemas, row counts and value
+  distributions measured on the repo's sf0.1 test tables (see the
+  constants below), rows in a seed-permuted order.
 
 The same seed gives the same bytes: every column comes from a numpy
 generator keyed on (seed, table) and parquet files are written from
@@ -38,16 +39,36 @@ DELIMS = (
     ("; ", 0.015), (" 42 ", 0.01), ("\t", 0.01), ("'s ", 0.005), (" (x) ", 0.01),
 )
 
+# The constants below reproduce the repo's sf0.1 test tables
+# (documents.parquet, events.parquet), measured from those files:
+# * documents: 5000 rows, doc_id 0..4999. Every text is 10..100 words
+#   (uniform; median 54) drawn uniformly from the 30 words below. 250
+#   rows (5%) are near-duplicates: a copy of another row's text with
+#   " dup" appended. A copy of a copy carries "dup dup", and two copies
+#   of one row are exact duplicates, as in the measured file (4 and 8
+#   rows). lang is en 41%, de/es/fr/zh about 15% each. source is
+#   src<doc_id % 20>. n_chars is len(text).
+# * events: 100000 rows, event_id 0..99999 in ts order. ts is
+#   timestamp[us] (the file's own unit), uniform over the 30 days from
+#   2024-01-01, so gaps average 25.9 s. user_id is uniform over 0..1499,
+#   event_type uniform over the five types, value exponential with mean
+#   50 rounded to cents (measured: mean 49.87, median 34.77, max
+#   560.21), props '{"k": <0..99>}' uniform.
 DOC_WORDS = (
-    "query row stream the spark line small fast group customer batch sort "
-    "value hash filter big data dup part column order scan a slow agg key "
-    "window table merge vector join"
+    "a agg batch big column customer data fast filter group hash join key "
+    "line merge order part query row scan slow small sort spark stream "
+    "table the value vector window"
 ).split()
-# Row counts are those of the repo's sf0.1 test tables.
 N_DOCUMENTS = 5000
+DOC_MIN_WORDS, DOC_MAX_WORDS = 10, 100
+N_NEAR_DUPS = 250
+LANGS = (("en", 0.40), ("de", 0.15), ("es", 0.15), ("fr", 0.15), ("zh", 0.15))
 N_EVENTS = 100_000
 N_USERS = 1500
+EVENT_DAYS = 30
 EVENT_TYPES = ("signup", "click", "error", "view", "purchase")
+VALUE_MEAN = 50.0
+PROPS_KEYS = 100
 TABLES = ("documents", "events")
 
 _US_PER_DAY = 86_400_000_000
@@ -112,20 +133,13 @@ def make_corpus(out_dir: str, seed: int, target_bytes: int = CORPUS_BYTES,
 def _documents(seed: int) -> pa.Table:
     rng = _rng(seed, 2)
     vocab = np.array(DOC_WORDS, dtype=object)
-    texts = []
-    for _ in range(N_DOCUMENTS):
-        texts.append(" ".join(vocab[rng.integers(0, len(vocab), rng.integers(8, 100))]))
-    # ~3% near-duplicates of an earlier document (0-2 words replaced),
-    # so the LSH and dedup stages have real candidates to find.
-    for i in np.flatnonzero(rng.random(N_DOCUMENTS) < 0.03):
-        if i == 0:
-            continue
-        toks = texts[int(rng.integers(0, i))].split(" ")
-        for _ in range(int(rng.integers(0, 3))):
-            toks[int(rng.integers(0, len(toks)))] = vocab[rng.integers(0, len(vocab))]
-        texts[i] = " ".join(toks)
-    langs = np.array(["en", "de", "es", "fr", "zh"], dtype=object)
-    lang = langs[rng.choice(5, N_DOCUMENTS, p=[0.4, 0.15, 0.15, 0.15, 0.15])]
+    lengths = rng.integers(DOC_MIN_WORDS, DOC_MAX_WORDS + 1, N_DOCUMENTS)
+    texts = [" ".join(vocab[rng.integers(0, len(vocab), n)]) for n in lengths]
+    for i in rng.choice(N_DOCUMENTS, N_NEAR_DUPS, replace=False):
+        j = (int(i) + int(rng.integers(1, N_DOCUMENTS))) % N_DOCUMENTS  # any other row
+        texts[i] = texts[j] + " dup"
+    langs = np.array([code for code, _ in LANGS], dtype=object)
+    lang = langs[rng.choice(len(LANGS), N_DOCUMENTS, p=[p for _, p in LANGS])]
     ids = np.arange(N_DOCUMENTS, dtype=np.int64)
     return pa.table({
         "doc_id": ids,
@@ -139,14 +153,14 @@ def _documents(seed: int) -> pa.Table:
 def _events(seed: int) -> pa.Table:
     rng = _rng(seed, 5)
     start = np.datetime64("2024-01-01", "us").astype(np.int64)
-    ts = np.sort(start + rng.integers(0, 30 * _US_PER_DAY, N_EVENTS))
+    ts = np.sort(start + rng.integers(0, EVENT_DAYS * _US_PER_DAY, N_EVENTS))
     return pa.table({
         "event_id": np.arange(N_EVENTS, dtype=np.int64),
         "ts": pa.array(ts, pa.timestamp("us")),
         "user_id": rng.integers(0, N_USERS, N_EVENTS),
-        "event_type": pa.array(np.array(EVENT_TYPES, dtype=object)[rng.integers(0, 5, N_EVENTS)], pa.string()),
-        "value": np.round(np.minimum(rng.gamma(2.0, 50.0, N_EVENTS), 560.0), 2),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, N_EVENTS)], pa.string()),
+        "event_type": pa.array(np.array(EVENT_TYPES, dtype=object)[rng.integers(0, len(EVENT_TYPES), N_EVENTS)], pa.string()),
+        "value": np.round(rng.exponential(VALUE_MEAN, N_EVENTS), 2),
+        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, PROPS_KEYS, N_EVENTS)], pa.string()),
     })
 
 
@@ -158,44 +172,42 @@ def make_tables(out_dir: str, seed: int) -> None:
         _write(t.take(_rng(seed, 100 + i).permutation(t.num_rows)), os.path.join(out_dir, f"{name}.parquet"))
 
 
-def _tree_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    return sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs)
-
-
-def ensure(data_root: str, seed: int) -> dict:
-    """Paths and sizes of the inputs for ``seed``, generating them on
-    first use. ``gen_s`` is the generation time (0.0 when cached)."""
-    final = os.path.join(data_root, f"seed{seed}")
-    marker = os.path.join(final, "inputs.json")
+def ensure(data_root: str, seed: int, part: str) -> dict:
+    """Paths and sizes of one ``part`` of the inputs for ``seed``
+    (``corpus`` or ``tables``), generating it on first use. ``gen_s``
+    is the generation time (0.0 when cached)."""
+    seed_dir = os.path.join(data_root, f"seed{seed}")
+    final = os.path.join(seed_dir, part)
+    marker = final + ".json"
     if os.path.exists(marker):
         with open(marker) as fh:
             info = json.load(fh)
         info["gen_s"] = 0.0
     else:
-        info = _generate(final, seed)
-    info["corpus_dir"] = os.path.join(final, "corpus")
-    info["tables_dir"] = os.path.join(final, "tables")
+        info = _generate(final, seed, part)
+    info["seed_dir"] = seed_dir
+    info[f"{part}_dir"] = final
     return info
 
 
-def _generate(final: str, seed: int) -> dict:
+def _generate(final: str, seed: int, part: str) -> dict:
     t0 = time.perf_counter()
-    marker = os.path.join(final, "inputs.json")
     staging = f"{final}.tmp{os.getpid()}"
     shutil.rmtree(staging, ignore_errors=True)
-    make_corpus(os.path.join(staging, "corpus", "documents.parquet"), seed)
-    make_tables(os.path.join(staging, "tables"), seed)
+    if part == "corpus":
+        make_corpus(os.path.join(staging, "documents.parquet"), seed)
+    else:
+        make_tables(staging, seed)
     shutil.rmtree(final, ignore_errors=True)
     os.rename(staging, final)
+    files = [os.path.join(d, f) for d, _, fs in os.walk(final) for f in fs]
     info = {
         "seed": seed,
-        "corpus_bytes": _tree_bytes(os.path.join(final, "corpus")),
-        "corpus_files": CORPUS_FILES,
-        "table_bytes": {t: _tree_bytes(os.path.join(final, "tables", f"{t}.parquet")) for t in TABLES},
+        "part": part,
+        "input_bytes": sum(os.path.getsize(f) for f in files),
+        "input_files": len(files),
     }
-    with open(marker, "w") as fh:
+    with open(final + ".json", "w") as fh:
         json.dump(info, fh)
     info["gen_s"] = time.perf_counter() - t0
     return info

@@ -45,7 +45,7 @@ def expected(inputs: dict, workload: str, queries: list[str], oracles: dict[str,
              tmp_dir: str) -> tuple[dict, float]:
     """Oracle summaries for ``queries`` on this seed's inputs, cached next
     to the inputs; returns (summaries, seconds spent computing them)."""
-    path = os.path.join(os.path.dirname(inputs["tables_dir"]), f"oracle-{workload}.json")
+    path = os.path.join(inputs["seed_dir"], f"oracle-{workload}.json")
     if os.path.exists(path):
         with open(path) as fh:
             cached = json.load(fh)

@@ -42,12 +42,15 @@ WORKLOADS = {
         "dedup_lsh_candidates",
         "multimodal_image_features",
         "streaming_tumbling_counts",
+        "remote_fs_impl_scan_words",
     ),
 }
 QUERIES = tuple(q for qs in WORKLOADS.values() for q in qs)
 # Untimed passes before measuring: the first also compares full results
 # with the oracle and pays codegen; JIT compilation still runs after it.
-WARMUP_PASSES = 3
+# A wordcount pass took about 35% less CPU after six passes than after
+# two, so it warms up longer; a python_udf pass costs about 3x as much.
+WARMUP_PASSES = {"wordcount": 6, "python_udf": 2}
 
 # name -> unit; the order is the order of BENCHMARK.json.
 END_TO_END = {
@@ -103,6 +106,12 @@ PER_LAYER = {
 }
 
 
+# The driver heap, fixed (-Xms = -Xmx) and touched at start: the session's
+# 48g default does not fit a small host, and heap resizing and how much
+# of the heap GC happened to touch made peak RSS vary up to 2x between runs.
+DRIVER_MEMORY = "3g"
+
+
 def nproc() -> int:
     return len(os.sched_getaffinity(0))
 
@@ -120,8 +129,8 @@ def prepare_env() -> None:
         f"-Djava.io.tmpdir={os.path.join(tmp, 'java')} -XX:-UsePerfData "
         + os.environ.get("JAVA_TOOL_OPTIONS", "")
     ).strip()
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "3g")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(nproc()))
+    os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
+    os.environ["SPARK_GRAFT_CPUS"] = str(nproc())
     os.environ["SPARK_GRAFT_TOP_N"] = "50"
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
@@ -177,13 +186,25 @@ class Bench:
         with the oracle (the warm-up pass), otherwise row counts."""
         self.sink_qes = []
         c0 = procstat.tree_cpu_s(os.getpid())
+        s0 = steal_s()
         t0 = time.perf_counter()
         with self.tracer.span("pass", workload=self.workload, n=self.pass_no) as span:
             per_query = {q: self._query(q, full) for q in self.queries}
+            pins = self._release_pins()
         wall = time.perf_counter() - t0
         cpu = procstat.tree_cpu_s(os.getpid()) - c0
         self.pass_no += 1
-        return {"wall": wall, "cpu": cpu, "span": span.id if span else None, "queries": per_query}
+        return {"wall": wall, "cpu": cpu, "steal": steal_s() - s0, "span": span.id if span else None,
+                "queries": per_query, "pins_open": pins}
+
+    def _release_pins(self) -> int:
+        """The number of cached plans the pass left pinned
+        (``materialize``, the dual sink's cached counts), which are then
+        dropped with ``clearCache()``, the engine's documented release,
+        so that pins do not pile up from pass to pass."""
+        pins = int(self.spark._jsc.getPersistentRDDs().size())
+        self.spark.catalog.clearCache()
+        return pins
 
     def _query(self, q: str, full: bool) -> float:
         self.attempted += 1
@@ -243,7 +264,6 @@ class Bench:
                 top = word_count_dual_sink(docs, out, n=TOP_N)
             with self.tracer.span("top_n"):
                 got = [[r["word"], r["count"]] for r in top.collect()]
-            self.spark.catalog.clearCache()  # the documented release of the cached counts
         self.engine_s += time.perf_counter() - t0
         if self.tracer.enabled:
             self.sink_qes.append(top._jdf)
@@ -252,7 +272,15 @@ class Bench:
         if full:
             t = pq.read_table(out)
             return mismatch(exp, t.column_names, list(zip(*(c.to_pylist() for c in t.columns))))
-        return None
+        n = parquet_rows(out)
+        return None if n == exp["rows"] else f"count rows written {n}, expected {exp['rows']}"
+
+
+def parquet_rows(path: str) -> int:
+    """Rows of a parquet dataset, from the file footers only."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in pq.ParquetDataset(path).files)
 
 
 def measure(bench: Bench, seconds: float) -> list[dict]:
@@ -323,7 +351,7 @@ def layer_sample(bench: Bench, rec: dict, reader, listener, cores: int) -> dict[
         "sources.input_bytes": st["input_bytes"],
         "operators.wordcount.dual_sink_s": sum(s.duration for s in by_name("dual_sink")),
         "operators.wordcount.top_n_s": sum(s.duration for s in by_name("top_n")),
-        "materialize.pins_open": float(reader.pins_open()),
+        "materialize.pins_open": float(rec["pins_open"]),
         "spark.jobs": float(len(jobs)),
         "spark.stages": st["stages"],
         "spark.tasks": st["tasks"],
@@ -409,7 +437,8 @@ def main(argv=None) -> int:
     import inputs
     import oracle
 
-    info = inputs.ensure(os.path.join(WORK, "data"), args.seed)
+    part = "corpus" if args.workload == "wordcount" else "tables"
+    info = inputs.ensure(os.path.join(WORK, "data"), args.seed, part)
 
     t = time.perf_counter()
     from mock_map_reduce_spark import get_spark, registry
@@ -423,15 +452,16 @@ def main(argv=None) -> int:
     t = time.perf_counter()
     spark = get_spark("perfbench", extra_conf={
         "spark.ui.showConsoleProgress": "false",
-        # A fixed-size heap: no heap resizing while the run measures.
-        "spark.driver.extraJavaOptions": f"-Xms{os.environ['SPARK_DRIVER_MEMORY']}",
+        # A fixed-size, resident heap: no heap resizing while the run
+        # measures, and its RSS does not depend on what GC touched.
+        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
     })
     session_start_s = time.perf_counter() - t
     try:
         tracer = Tracer(enabled=False)
         bench = Bench(spark, args.workload, info, expect, tracer)
         warmup = [bench.run_pass(full=True)]  # JIT, codegen, worker spawn; full check
-        warmup += [bench.run_pass() for _ in range(WARMUP_PASSES - 1)]
+        warmup += [bench.run_pass() for _ in range(WARMUP_PASSES[args.workload] - 1)]
         bench.latency = {q: [] for q in bench.queries}
         setup_s = session_start_s + registry_load_s + bench.engine_s
         calib_pre = calibrate_mt(cores)
@@ -474,9 +504,9 @@ def main(argv=None) -> int:
         "trace": args.trace,
         "nproc": nproc(),
         "cores": cores,
-        "driver_memory": os.environ["SPARK_DRIVER_MEMORY"],
+        "driver_memory": DRIVER_MEMORY,
         "pyspark": __import__("pyspark").__version__,
-        "inputs": {k: info[k] for k in ("corpus_bytes", "corpus_files", "table_bytes")},
+        "inputs": {k: info[k] for k in ("part", "input_bytes", "input_files")},
         "gen_s": info["gen_s"],
         "oracle_s": oracle_s,
         "calib_mt_pre": calib_pre,
@@ -486,6 +516,8 @@ def main(argv=None) -> int:
         "registry_load_s": registry_load_s,
         "passes": len(plain),
         "pass_walls": [r["wall"] for r in plain],
+        "pass_cpus": [r["cpu"] for r in plain],
+        "pass_steals": [r["steal"] for r in plain],
         "pass_queries": [r["queries"] for r in plain],
         "warmup_queries": [r["queries"] for r in warmup],
         "traced_pass_walls": [r["wall"] for r in traced],

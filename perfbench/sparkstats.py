@@ -84,9 +84,6 @@ class StatusReader:
         self.new_jobs()
         self.new_sql_metrics()
 
-    def pins_open(self) -> int:
-        return int(self._jsc.getPersistentRDDs().size())
-
     def new_jobs(self) -> list[dict]:
         """Jobs submitted since the last call: id, epoch-second
         submit/complete times, stage ids, status."""

@@ -1,6 +1,6 @@
 """Run-to-run spread of the end-to-end metrics over several seeds.
 
-    python3 perfbench/spread.py --workload python_udf --seeds 1-10 [--seconds 12]
+    python3 perfbench/spread.py --workload python_udf --seeds 1-10 [--seconds 14]
 
 Runs ``perfbench/run.py`` once per seed, one after another, and prints
 for each metric its median over the runs and its spread: the distance

@@ -1,6 +1,7 @@
 import os
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 import inputs
@@ -43,11 +44,36 @@ def test_corpus_is_zipf_with_mixed_delimiters(tmp_path):
     assert 9 < counts[0] / counts[9] < 17
 
 
-def test_ensure_caches_per_seed(tmp_path, monkeypatch):
+def test_ensure_caches_each_part_per_seed(tmp_path, monkeypatch):
     calls = []
-    monkeypatch.setattr(inputs, "make_corpus", lambda out, seed: (calls.append(seed), os.makedirs(out)))
-    monkeypatch.setattr(inputs, "make_tables", lambda out, seed: os.makedirs(out))
-    first = inputs.ensure(str(tmp_path), 5)
-    second = inputs.ensure(str(tmp_path), 5)
-    assert calls == [5]
+    monkeypatch.setattr(inputs, "make_corpus", lambda out, seed: (calls.append(("corpus", seed)), os.makedirs(out)))
+    monkeypatch.setattr(inputs, "make_tables", lambda out, seed: (calls.append(("tables", seed)), os.makedirs(out)))
+    first = inputs.ensure(str(tmp_path), 5, "tables")
+    second = inputs.ensure(str(tmp_path), 5, "tables")
+    assert calls == [("tables", 5)]
     assert second["gen_s"] == 0.0 and first["tables_dir"] == second["tables_dir"]
+    inputs.ensure(str(tmp_path), 5, "corpus")
+    assert calls == [("tables", 5), ("corpus", 5)]
+
+
+def test_tables_have_the_measured_sf01_shape(tmp_path):
+    inputs.make_tables(str(tmp_path / "t"), seed=4)
+    docs = pq.read_table(str(tmp_path / "t" / "documents.parquet"))
+    texts = docs.column("text").to_pylist()
+    assert docs.num_rows == inputs.N_DOCUMENTS
+    assert sorted(docs.column("doc_id").to_pylist()) == list(range(inputs.N_DOCUMENTS))
+    assert sum(t.endswith(" dup") for t in texts) == inputs.N_NEAR_DUPS
+    words = [t.split(" ") for t in texts]
+    assert {w for ws in words for w in ws} == set(inputs.DOC_WORDS) | {"dup"}
+    bare = [[w for w in ws if w != "dup"] for ws in words]
+    assert min(map(len, bare)) >= inputs.DOC_MIN_WORDS and max(map(len, bare)) <= inputs.DOC_MAX_WORDS
+    assert docs.column("n_chars").to_pylist() == [len(t) for t in texts]
+
+    ev = pq.read_table(str(tmp_path / "t" / "events.parquet")).sort_by("event_id")
+    assert ev.num_rows == inputs.N_EVENTS
+    assert ev.schema.field("ts").type == pa.timestamp("us")
+    ts = ev.column("ts").cast(pa.int64()).to_numpy()
+    assert (np.diff(ts) >= 0).all()  # event_id follows ts, as in sf0.1
+    value = ev.column("value").to_numpy()
+    assert abs(value.mean() - inputs.VALUE_MEAN) < 1.5
+    assert set(np.unique(ev.column("user_id").to_numpy())) == set(range(inputs.N_USERS))

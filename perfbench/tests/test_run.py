@@ -21,9 +21,29 @@ class _Rows:
         return [()] * self.n
 
 
+class _Spark:
+    """Stands in for the session: two pins open after each pass until
+    ``clearCache()``."""
+
+    def __init__(self):
+        self.pins = 0
+        self.catalog = self
+        self._jsc = self
+
+    def getPersistentRDDs(self):
+        self.pins += 2
+        return self
+
+    def size(self):
+        return self.pins
+
+    def clearCache(self):
+        self.pins = 0
+
+
 def _bench(builders):
     queries = run.WORKLOADS["python_udf"]
-    bench = run.Bench(None, "python_udf", {"tables_dir": "unused"},
+    bench = run.Bench(_Spark(), "python_udf", {"tables_dir": "unused"},
                       {q: {"rows": 3} for q in queries}, Tracer(enabled=False))
     bench.builders = builders
     bench.limit_plan = dict.fromkeys(queries, True)
@@ -38,12 +58,13 @@ def test_raising_query_is_counted_and_the_pass_continues(capsys):
     bench.builders = {q: (lambda s, d: _Rows(3)) for q in queries}
     bench.builders[queries[0]] = boom
     rec = bench.run_pass()
+    assert rec["pins_open"] == 2
     assert bench.attempted == len(queries)
     assert bench.failed == 1
     assert bench.failures == [{"query": queries[0], "pass": 0, "error": "RuntimeError: injected failure"}]
     assert set(rec["queries"]) == set(queries)
     assert "FAILED" in capsys.readouterr().err
-    bench.run_pass()
+    assert bench.run_pass()["pins_open"] == 2  # released after each pass
     assert (bench.attempted, bench.failed) == (2 * len(queries), 2)
 
 
@@ -91,3 +112,15 @@ def test_benchmark_json_matches_the_metrics_the_run_reports():
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     assert all(0 < b <= 0.25 for b in bounds.values())
     assert bounds["setup_s"] == max(bounds.values())
+
+
+def test_parquet_rows_reads_the_footers_of_every_part(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "counts"
+    out.mkdir()
+    pq.write_table(pa.table({"word": ["a", "b"]}), str(out / "part-0.parquet"))
+    pq.write_table(pa.table({"word": ["c"]}), str(out / "part-1.parquet"))
+    (out / "_SUCCESS").write_text("")
+    assert run.parquet_rows(str(out)) == 3
