@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mock_map_reduce_spark.functions.materialize import materialize
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.operators.skew import salted_word_count
 from mock_map_reduce_spark.registry import query
 from mock_map_reduce_spark.sources import load_table, register_views
@@ -63,6 +64,7 @@ def q_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+        reuse_zip_directories()
         m = pdf["c_acctbal"].mean()
         sd = pdf["c_acctbal"].std(ddof=0)
         out = pdf[["c_custkey", "c_mktsegment"]].copy()
@@ -377,6 +379,7 @@ def q_arrow_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
     def weighted(table: pa.Table) -> pa.Table:
+        reuse_zip_directories()
         et = table.column("event_type")[0].as_py()
         wts = [(u % 5) + 1 for u in table.column("user_id").to_pylist()]
         import math
@@ -531,6 +534,7 @@ def q_arrow_map_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
 
     def stats(batches):
+        reuse_zip_directories()
         for b in batches:
             t = pa.Table.from_batches([b])
             out = pa.table(

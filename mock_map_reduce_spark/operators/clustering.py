@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from mock_map_reduce_spark.functions.localdf import local_df
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.operators.similarity import as_double_array
 
 
@@ -81,6 +82,7 @@ def _assign_arrow(
         return v.select(*cols).filter(F.lit(False))
 
     def fn(batches):
+        reuse_zip_directories()
         C = np.asarray(cmat, dtype=np.float64)  # k × d
         ids = np.asarray(cids, dtype=np.int64)
         d = C.shape[1]
@@ -403,6 +405,7 @@ def semdedup(
     thr = float(threshold)
 
     def _dominated_ids(key, tbl):
+        reuse_zip_directories()
         import numpy as np
         import pyarrow as pa
 
@@ -555,6 +558,7 @@ def power_iteration_pc1(
     # reshape. Same integer matmul, same chunk caps, same Decimal
     # partial rows — bit-identical sums.
     def _gram_partials(batches):
+        reuse_zip_directories()
         from decimal import Decimal
 
         import numpy as np

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread as _spread
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 # Normalized tokens for fuzzy dedup: lowercase alphabetic runs.
 _TOKEN_RE = "[^A-Za-z]+"
@@ -90,6 +91,7 @@ def shingles(
     out_schema = f"{id_col} {out_type}, gram string"
 
     def _gram_kernel(batches):
+        reuse_zip_directories()
         import re
 
         import pyarrow as pa
@@ -195,6 +197,7 @@ def minhash_signatures(
         )
 
         def _sig_kernel(batches):
+            reuse_zip_directories()
             import hashlib
             import re
 
@@ -587,6 +590,7 @@ def simhash(
         nib_count = bits // 4
 
         def _simhash_kernel(batches):
+            reuse_zip_directories()
             import hashlib
             import re
 

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.partitioning import spread
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 
 def _ship_module_by_value() -> None:
@@ -262,6 +263,7 @@ def image_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     end, Arrow-batched, payload dropped before anything shuffles."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         import numpy as np
 
         for pdf in batches:
@@ -298,6 +300,7 @@ def synthesize_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     side of the codec pair; ``image_features`` decodes it back)."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -397,6 +400,7 @@ def audio_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     fmt chunk, moments from the PCM data) — payload never shuffles."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         import numpy as np
 
         for pdf in batches:
@@ -430,6 +434,7 @@ def synthesize_audio_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     """Attach a deterministic WAV payload per doc id."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -474,6 +479,7 @@ def video_frame_features(
     only per-frame feature rows flow on."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         import numpy as np
 
         for pdf in batches:
@@ -499,6 +505,7 @@ def synthesize_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     """Attach a deterministic PPM-stream payload per doc id."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -524,6 +531,7 @@ def byte_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         import math
 
         import numpy as np
@@ -585,6 +593,7 @@ def frame_sample(media: DataFrame, frame_size: int = 256, stride: int = 2, id_co
     import numpy as np
 
     def sample(batches):
+        reuse_zip_directories()
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame_mean": []}
             for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
@@ -615,6 +624,7 @@ def resize_payload(media: DataFrame, factor: int = 4, id_col: str = "doc_id") ->
     import numpy as np
 
     def shrink(batches):
+        reuse_zip_directories()
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf["payload"]):

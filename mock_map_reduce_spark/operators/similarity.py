@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mock_map_reduce_spark.functions.partitioning import spread
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 
 def as_double_array(col: str | Column) -> Column:
@@ -473,10 +474,12 @@ def pq_codes(
         # Empty codebook (no rows with id < k): the old broadcast-join
         # formulation returned an empty frame; np.argmin over a
         # zero-width array would instead raise on executors — mirror
-        # _assign_arrow's empty-centroid guard (round-10 ADVICE).
+        # _assign_arrow's empty-centroid guard (round-10 ADVICE). Both
+        # branches cast the id to bigint, so they return one schema
+        # whatever the source id type.
         return (
             v.select(
-                F.col(id_col),
+                F.col(id_col).cast("bigint").alias(id_col),
                 F.lit(None).cast("int").alias("subspace"),
                 F.lit(None).cast("bigint").alias("code"),
                 F.lit(None).cast("double").alias("sqdist"),
@@ -485,6 +488,7 @@ def pq_codes(
         )
 
     def fn(batches):
+        reuse_zip_directories()
         import numpy as np
         import pyarrow as pa
 
@@ -529,7 +533,7 @@ def pq_codes(
                 names=[id_col, "subspace", "code", "d"],
             )
 
-    coded = v.select(id_col, "e").mapInArrow(
+    coded = v.select(F.col(id_col).cast("bigint").alias(id_col), "e").mapInArrow(
         fn, f"{id_col} bigint, subspace int, code bigint, d double"
     )
     return coded.select(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
+
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -425,6 +427,7 @@ def capped_running_sum(
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        reuse_zip_directories()
         pdf = pdf.sort_values([ts_col, id_col])
         bal = 0.0
         out = []
@@ -463,6 +466,7 @@ def ewma(
     events = events.select(key_col, id_col, ts_col, value_col)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        reuse_zip_directories()
         pdf = pdf.sort_values([ts_col, id_col])
         y = None
         out = []

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.partitioning import spread
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 # Maximal alphabetic runs: the reference splits on every non-alphabetic
 # character via isalpha() (slave.cc:87-97), preserving case (§1.4.5).
@@ -93,9 +94,14 @@ def word_count_rdd(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     spark = df.sparkSession
     pat = re.compile(TOKEN_DELIM_RE)
+
+    def tokenize(row):
+        reuse_zip_directories()
+        return (w for w in pat.split(row[0] or "") if w)
+
     counts = (
         df.select(text_col)
-        .rdd.flatMap(lambda row: (w for w in pat.split(row[0] or "") if w))
+        .rdd.flatMap(tokenize)
         .map(lambda w: (w, 1))
         .reduceByKey(lambda a, b: a + b)
     )

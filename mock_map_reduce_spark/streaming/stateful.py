@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
+
 RUNNING_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
 
@@ -34,6 +36,7 @@ def running_totals_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
@@ -88,6 +91,7 @@ def distinct_types_per_user(events: DataFrame) -> DataFrame:
 
     class DistinctTypes(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
+            reuse_zip_directories()
             self._seen = handle.getListState("seen", "t string")
             self._n = handle.getValueState("n", "n long")
 
@@ -144,6 +148,7 @@ def type_counts_per_user(events: DataFrame) -> DataFrame:
 
     class TypeCounts(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
+            reuse_zip_directories()
             self._m = handle.getMapState("counts", "t string", "n long")
 
         def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
@@ -203,6 +208,7 @@ def scd2_stream_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         cur, since = state.get if state.exists else (None, None)
         out: list[tuple] = []
         for pdf in pdfs:
@@ -259,6 +265,7 @@ def forward_fill_stream_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         last = state.get[0] if state.exists else None
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts_us", "event_id"])
@@ -311,6 +318,7 @@ def ewma_stream_per_user(events: DataFrame, alpha: float = 0.2) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
         y = state.get[0] if state.exists else None
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts_us", "event_id"])
@@ -386,6 +394,7 @@ def session_timeout_evictions(
 
     class SessionEvict(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
+            reuse_zip_directories()
             self._handle = handle
             self._sess = handle.getValueState(
                 "sess", "start_ms long, last_ms long, n long"
@@ -449,6 +458,16 @@ def session_timeout_evictions(
             sess = self._sess.get()  # None when absent — one RPC, not two
             if sess is not None:
                 start, last, n = (int(x) for x in sess)
+                # The re-arm in handleInputRows deletes prev_last +
+                # gap_ms without listing timers, so the one pending
+                # timer must sit at last + gap_ms. A raise, not an
+                # assert: ``python -O`` keeps the check.
+                due = expiredTimerInfo.getExpiryTimeInMs()
+                if due != last + gap_ms:
+                    raise RuntimeError(
+                        f"session timer for key {key[0]!r} fired at {due},"
+                        f" not at last_ms + gap_ms = {last + gap_ms}"
+                    )
                 self._sess.clear()
                 yield pd.DataFrame(
                     [(key[0], start, last, n, "timer")],

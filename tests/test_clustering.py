@@ -272,3 +272,19 @@ def test_pq_codes_empty_codebook_returns_empty(spark):
     out = pq_codes(v, dim=8, m=4, k=2)  # no vec_id < 2 exists
     assert out.columns == ["vec_id", "subspace", "code", "sqdist"]
     assert out.count() == 0
+
+    # An int id comes back as the kernel path's declared bigint from
+    # both branches, so the empty result has the non-empty schema.
+    schema = "vec_id int, embedding array<double>"
+    empty = pq_codes(
+        spark.createDataFrame([(100, [1.0] * 8), (101, [0.5] * 8)], schema),
+        dim=8, m=4, k=2,
+    )
+    full = pq_codes(
+        spark.createDataFrame([(0, [1.0] * 8), (1, [0.5] * 8), (5, [0.9] * 8)], schema),
+        dim=8, m=4, k=2,
+    )
+    assert empty.schema == full.schema
+    assert empty.schema["vec_id"].dataType.simpleString() == "bigint"
+    assert empty.count() == 0
+    assert full.count() == 3 * 4

@@ -262,3 +262,52 @@ def test_session_timeout_evictions_timer_semantics(spark, sf_dir):
     assert any(v == "timer" for *_, v in got), "no timer ever fired"
     # at least one user must still be inside the horizon (timer pending)
     assert len({u for u, *_ in got if _[-1] == "timer"}) < len(by_user)
+
+
+def test_session_timer_deadline_invariant_is_checked(spark):
+    """handleExpiredTimer checks the invariant the re-arm relies on:
+    the one pending timer sits at the stored last_ms + gap_ms. A timer
+    firing anywhere else raises (a raise, so ``python -O`` keeps it);
+    the right one emits the session and clears the state. The processor
+    is driven with fake state handles; the session only builds the
+    plan's column expressions."""
+    import pytest
+    from pyspark.sql.streaming.stateful_processor import ExpiredTimerInfo
+
+    from mock_map_reduce_spark.streaming.stateful import session_timeout_evictions
+
+    class Plan:  # stands in for the streaming DataFrame chain
+        def __getattr__(self, name):
+            return lambda *a, **kw: self
+
+        def transformWithStateInPandas(self, processor, **kw):  # noqa: N802
+            self.processor = processor
+            return self
+
+    class Value:
+        def __init__(self, v):
+            self.v = v
+
+        def get(self):
+            return self.v
+
+        def clear(self):
+            self.v = None
+
+    class Handle:
+        def __init__(self):
+            self.state = Value((1_000, 5_000, 3))
+
+        def getValueState(self, name, schema):  # noqa: N802
+            return self.state
+
+    gap_ms = 60_000
+    proc = session_timeout_evictions(Plan(), gap_ms=gap_ms).processor
+    handle = Handle()
+    proc.init(handle)
+    with pytest.raises(RuntimeError, match="last_ms \\+ gap_ms"):
+        list(proc.handleExpiredTimer((7,), None, ExpiredTimerInfo(5_000 + gap_ms + 1)))
+    assert handle.state.get() == (1_000, 5_000, 3)
+    (out,) = proc.handleExpiredTimer((7,), None, ExpiredTimerInfo(5_000 + gap_ms))
+    assert out.values.tolist() == [[7, 1_000, 5_000, 3, "timer"]]
+    assert handle.state.get() is None
