@@ -62,37 +62,18 @@ FROM e GROUP BY 1
 """,
 )
 def q_streaming_distinct_types_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas (Spark 4 typed-state API) driven to
-    completion: running per-user distinct-type counts from a ListState
-    + ValueState pair, vs the batch DISTINCT aggregate. The state
-    protocol speaks protobuf over a local socket — served here by the
-    repo's from-scratch minimal runtime (google/protobuf/), shipped to
-    executors via addPyFile — and requires the RocksDB state store
-    (one column family per state variable), scoped to this query and
-    restored after.
+    """applyInPandasWithState driven to completion: running per-user
+    distinct-type counts from an (array of seen types, tally) state
+    per user, vs the batch DISTINCT aggregate.
 
-    Scale: state per key is O(distinct types), bounded; the API's
-    per-state TTL is the knob that expires idle keys at unbounded
-    ingest (unused here: finite replay)."""
-    from mock_map_reduce_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        distinct_types_per_user,
-        ship_vendored_protobuf,
-    )
+    Scale: state per key is O(distinct types), bounded; an event-time
+    timeout is the knob that expires idle keys at unbounded ingest
+    (unused here: finite replay)."""
+    from mock_map_reduce_spark.streaming.stateful import distinct_types_per_user
 
-    ship_vendored_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = distinct_types_per_user(read_events_stream(spark, sf_dir))
-        run_to_memory(stream, "drv_stream_tws_distinct", mode="update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return spark.table("drv_stream_tws_distinct")
+    stream = distinct_types_per_user(read_events_stream(spark, sf_dir))
+    run_to_memory(stream, "drv_stream_distinct_types", mode="update")
+    return spark.table("drv_stream_distinct_types")
 
 
 @query(
@@ -104,32 +85,15 @@ FROM e GROUP BY 1, 2
 """,
 )
 def q_streaming_type_counts_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas MAP-state surface driven to
+    """applyInPandasWithState with a MAP-typed state driven to
     completion: per-user event-type histogram from a
-    MapState[type -> count], vs the batch two-key COUNT aggregate.
-    Together with streaming_distinct_types_stateful (ValueState +
-    ListState) this puts all three typed-state kinds — and their
-    protobuf protocol paths (updateValue / containsKey / getValue /
-    iterator) — in the oracle hash gate."""
-    from mock_map_reduce_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        ship_vendored_protobuf,
-        type_counts_per_user,
-    )
+    map<event_type, count> state, re-emitted in full every batch, vs
+    the batch two-key COUNT aggregate."""
+    from mock_map_reduce_spark.streaming.stateful import type_counts_per_user
 
-    ship_vendored_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = type_counts_per_user(read_events_stream(spark, sf_dir))
-        run_to_memory(stream, "drv_stream_tws_mapstate", mode="update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return spark.table("drv_stream_tws_mapstate")
+    stream = type_counts_per_user(read_events_stream(spark, sf_dir))
+    run_to_memory(stream, "drv_stream_type_counts", mode="update")
+    return spark.table("drv_stream_type_counts")
 
 
 @query(
@@ -165,39 +129,26 @@ WHERE sid < msid OR session_end_ms + 1800000 <= (SELECT w FROM wm)
 def q_streaming_session_timeout_evictions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """transformWithStateInPandas TIMERS in the hash gate: per-user
-    session tracking where idle sessions are EVICTED by an event-time
-    timer (registerTimer / handleExpiredTimer / deleteTimer) — the
-    state-expiry surface that keeps the store bounded at unbounded
-    ingest. Sessions closed by a >30 min silence inside the input carry
-    via='input'; the last open session of a user is emitted with
-    via='timer' iff its deadline (last event + 30 min) is at or before
-    the final watermark (max event time - 2 h) — users still inside
-    the horizon keep their timer pending and emit nothing. The oracle
-    replays exactly that: gap-sessionize in SQL, tag all non-final
-    sessions 'input', and keep a final session only when its deadline
-    cleared the watermark. Timers fire on WATERMARK, not wall clock,
-    so the replay is deterministic (see
+    """Event-time TIMEOUTS in the hash gate: per-user session
+    tracking where idle sessions are EVICTED when the watermark passes
+    their deadline (applyInPandasWithState with
+    ``GroupStateTimeout.EventTimeTimeout``) — the state-expiry surface
+    that keeps the store bounded at unbounded ingest. Sessions closed
+    by a >30 min silence inside the input carry via='input'; the last
+    open session of a user is emitted with via='timer' iff its
+    deadline (last event + 30 min) is at or before the final watermark
+    (max event time - 2 h) — users still inside the horizon keep their
+    timeout pending and emit nothing. The oracle replays exactly that:
+    gap-sessionize in SQL, tag all non-final sessions 'input', and
+    keep a final session only when its deadline cleared the watermark.
+    Timeouts fire on WATERMARK, not wall clock, so the replay is
+    deterministic (see
     streaming/stateful.py:session_timeout_evictions)."""
-    from mock_map_reduce_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        session_timeout_evictions,
-        ship_vendored_protobuf,
-    )
+    from mock_map_reduce_spark.streaming.stateful import session_timeout_evictions
 
-    ship_vendored_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = session_timeout_evictions(read_events_stream(spark, sf_dir))
-        run_to_memory(stream, "drv_stream_tws_timers", mode="append")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return spark.table("drv_stream_tws_timers")
+    stream = session_timeout_evictions(read_events_stream(spark, sf_dir))
+    run_to_memory(stream, "drv_stream_session_timeouts", mode="append")
+    return spark.table("drv_stream_session_timeouts")
 
 
 @query(

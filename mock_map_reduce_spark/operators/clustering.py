@@ -210,20 +210,21 @@ def _lloyd_rows(
     # MLlib convention (k-means persists its training input); released
     # before returning, so nothing outlives the loop.
     pinned = materialize(v, eager=False)
-    rows = _collect_cents(
-        pinned.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cid"), F.col("e").alias("ce")
+    try:
+        rows = _collect_cents(
+            pinned.filter(F.col("vec_id") < k).select(
+                F.col("vec_id").alias("cid"), F.col("e").alias("ce")
+            )
         )
-    )
-    if not rows:
-        release(pinned)
+        if not rows:
+            return rows
+        dim = len(rows[0][1])
+        for _ in range(n_iter):
+            assigned = _assign_arrow(pinned, rows, with_cos=False)
+            rows = _collect_cents(_update(assigned, dim))
         return rows
-    dim = len(rows[0][1])
-    for _ in range(n_iter):
-        assigned = _assign_arrow(pinned, rows, with_cos=False)
-        rows = _collect_cents(_update(assigned, dim))
-    release(pinned)
-    return rows
+    finally:
+        release(pinned)
 
 
 
@@ -281,20 +282,21 @@ def kcenter_init(
     # groupBy(vec_id) × pick-join chain per round is gone. Values are
     # unchanged: max-cosine and the (best, vec_id) argmin are computed
     # from the identical IEEE doubles and the identical tie order.
-    first = pool.agg(F.min(F.struct("vec_id", "e")).alias("s")).collect()[0]["s"]
-    if first is None:
+    try:
+        first = pool.agg(F.min(F.struct("vec_id", "e")).alias("s")).collect()[0]["s"]
+        if first is None:
+            return local_df(emb.sparkSession, [], "cid bigint, ce array<double>")
+        rows = [(int(first["vec_id"]), [float(x) for x in first["e"]])]
+        for _ in range(k - 1):
+            scored = _assign_arrow(pool, rows)
+            s = scored.agg(
+                F.min(F.struct(F.col("cos").alias("best"), F.col("vec_id"), F.col("e"))).alias("s")
+            ).collect()[0]["s"]
+            if s is None:
+                break
+            rows.append((int(s["vec_id"]), [float(x) for x in s["e"]]))
+    finally:
         release(pool)
-        return local_df(emb.sparkSession, [], "cid bigint, ce array<double>")
-    rows = [(int(first["vec_id"]), [float(x) for x in first["e"]])]
-    for _ in range(k - 1):
-        scored = _assign_arrow(pool, rows)
-        s = scored.agg(
-            F.min(F.struct(F.col("cos").alias("best"), F.col("vec_id"), F.col("e"))).alias("s")
-        ).collect()[0]["s"]
-        if s is None:
-            break
-        rows.append((int(s["vec_id"]), [float(x) for x in s["e"]]))
-    release(pool)
     return local_df(emb.sparkSession, rows, "cid bigint, ce array<double>")
 
 

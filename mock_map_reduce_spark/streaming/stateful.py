@@ -59,126 +59,82 @@ def running_totals_per_user(events: DataFrame) -> DataFrame:
 
 
 DISTINCT_SCHEMA = "user_id long, n_types long, n_events long"
+DISTINCT_STATE_SCHEMA = "seen array<string>, n long"
 
 
 def distinct_types_per_user(events: DataFrame) -> DataFrame:
-    """Running per-user distinct event-type count via Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (typed state handles instead of one
-    opaque tuple): a ListState accumulates the seen types, a
-    ValueState the event tally, both keyed in the executor state
-    store and updated per micro-batch.
+    """Running per-user distinct event-type count: per user, state
+    holds the sorted types seen so far and the event tally; each
+    micro-batch merges its types in and emits the updated snapshot.
 
-    Scale: state per key is O(distinct types) — bounded — and the
-    API's per-state TTL (not used here: the demo stream is finite)
-    is the knob that expires idle users at unbounded ingest.
-
-    Dependency note: the transformWithState protocol speaks protobuf
-    between the JVM and the Python state server. Environments without
-    the ``protobuf`` package use the repo's minimal from-scratch
-    runtime (/root/repo/google/protobuf — proto3 wire format +
-    generated-code API surface, see its module docstring);
-    ``ship_vendored_protobuf`` ships it to executors so worker
-    sys.path does not depend on the driver's cwd. The query also
-    needs the RocksDB state store provider (one column family per
-    state variable) — callers set
-    spark.sql.streaming.stateStore.providerClass before starting.
+    Scale: state per key is O(distinct types) — bounded. The demo
+    stream is finite, so no timeout is set; at unbounded ingest an
+    event-time timeout (as in ``session_timeout_evictions``) is the
+    knob that expires idle users.
     """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class DistinctTypes(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            reuse_zip_directories()
-            self._seen = handle.getListState("seen", "t string")
-            self._n = handle.getValueState("n", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            seen = {t for (t,) in self._seen.get()}
-            cur = self._n.get()  # None when absent — one RPC, not two
-            n = cur[0] if cur is not None else 0
-            for pdf in rows:
-                n += len(pdf)
-                new = set(pdf["event_type"].unique()) - seen
-                if new:
-                    self._seen.appendList([(t,) for t in sorted(new)])
-                    seen |= new
-            self._n.update((n,))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_types": [len(seen)], "n_events": [n]}
-            )
-
-        def close(self) -> None:
-            pass
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
+        seen, n = state.get if state.exists else ([], 0)
+        seen = set(seen)
+        for pdf in pdfs:
+            n += len(pdf)
+            seen.update(pdf["event_type"].unique())
+        state.update((sorted(seen), n))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "n_types": [len(seen)], "n_events": [n]}
+        )
 
     return (
         events.select("user_id", "event_type")
         .groupBy("user_id")
-        .transformWithStateInPandas(
-            DistinctTypes(),
+        .applyInPandasWithState(
+            update,
             outputStructType=DISTINCT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+            stateStructType=DISTINCT_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
 
 TYPE_COUNTS_SCHEMA = "user_id long, event_type string, n long"
+TYPE_COUNTS_STATE_SCHEMA = "counts map<string,bigint>"
 
 
 def type_counts_per_user(events: DataFrame) -> DataFrame:
-    """Per-user event-type histogram via transformWithStateInPandas
-    MAP state — the third typed-state surface (ValueState and
-    ListState are exercised by ``distinct_types_per_user``): a
-    MapState[event_type -> count] updated per micro-batch, the full
-    map re-emitted per snapshot. Exercises the map-state protocol
-    end-to-end (getMapState, containsKey, getValue, updateValue,
-    iterator) over the protobuf channel.
+    """Per-user event-type histogram: per user, state holds a map
+    event_type -> count; each micro-batch adds its (vectorized) tally
+    and re-emits the full map as one snapshot row per type.
 
-    Scale: state per key is O(distinct types) — bounded; the map
-    lives in the RocksDB store keyed (user, type), so updates touch
-    only the changed entries, never the whole map.
+    Scale: state per key is O(distinct types) — bounded.
     """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class TypeCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            reuse_zip_directories()
-            self._m = handle.getMapState("counts", "t string", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            local: dict[str, int] = {}
-            for pdf in rows:
-                # vectorized tally instead of a per-row Python loop
-                for t, c in pdf["event_type"].value_counts().items():
-                    local[t] = local.get(t, 0) + int(c)
-            for t, add in sorted(local.items()):
-                # getValue() returns None for a missing key — the
-                # separate containsKey probe was a second proto RPC
-                # per (user, type) against the state server.
-                cur = self._m.getValue((t,))
-                self._m.updateValue((t,), ((cur[0] if cur else 0) + add,))
-            snapshot = [(key[0], k[0], v[0]) for k, v in self._m.iterator()]
-            yield pd.DataFrame(
-                snapshot, columns=["user_id", "event_type", "n"]
-            )
-
-        def close(self) -> None:
-            pass
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
+        counts = dict(state.get[0]) if state.exists else {}
+        for pdf in pdfs:
+            for t, c in pdf["event_type"].value_counts().items():
+                counts[t] = counts.get(t, 0) + int(c)
+        state.update((counts,))
+        yield pd.DataFrame(
+            [(key[0], t, c) for t, c in sorted(counts.items())],
+            columns=["user_id", "event_type", "n"],
+        )
 
     return (
         events.select("user_id", "event_type")
         .groupBy("user_id")
-        .transformWithStateInPandas(
-            TypeCounts(),
+        .applyInPandasWithState(
+            update,
             outputStructType=TYPE_COUNTS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+            stateStructType=TYPE_COUNTS_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -346,223 +302,92 @@ def ewma_stream_per_user(events: DataFrame, alpha: float = 0.2) -> DataFrame:
         )
     )
 
+
 SESSION_EVICT_SCHEMA = (
     "user_id long, session_start_ms long, session_end_ms long,"
     " n_events long, via string"
 )
+SESSION_EVICT_STATE_SCHEMA = "start_ms long, last_ms long, n long"
+_SESSION_COLUMNS = ["user_id", "session_start_ms", "session_end_ms", "n_events", "via"]
 
 
 def session_timeout_evictions(
     events: DataFrame, gap_ms: int = 30 * 60 * 1000, watermark: str = "2 hours"
 ) -> DataFrame:
-    """Session tracking with TIMER-driven eviction — the
-    transformWithStateInPandas TIMER surface (register / expire /
-    delete), completing the typed-state API next to ValueState /
-    ListState (distinct_types_per_user) and MapState
-    (type_counts_per_user).
+    """Session tracking with event-time TIMEOUT eviction.
 
-    Per user, a ValueState holds the open session (start_ms, last_ms,
-    n). Input rows extend it; a >gap_ms silence INSIDE a batch closes
-    the session inline (via='input'). After each batch the processor
-    re-arms ONE event-time timer at last_ms + gap_ms; when the
-    WATERMARK passes it, ``handleExpiredTimer`` fires, emits the
-    session (via='timer') and clears the state — the idle-key eviction
-    that bounds the state store at unbounded ingest. Users whose last
-    event is within gap_ms of the final watermark keep their timer
-    pending and emit nothing — exactly the live-session set.
+    Per user, state holds the open session (start_ms, last_ms, n).
+    Input rows extend it; a >gap_ms silence INSIDE a batch closes the
+    session inline (via='input'). After each batch the session's
+    deadline last_ms + gap_ms becomes the key's timeout; when the
+    WATERMARK passes it, the function is called with
+    ``state.hasTimedOut``, emits the session (via='timer') and removes
+    the state — the idle-key eviction that bounds the state store at
+    unbounded ingest. Users whose last event is within gap_ms of the
+    final watermark keep their timeout pending and emit nothing —
+    exactly the live-session set.
 
-    Determinism (the oracle contract): timers fire on watermark
+    Determinism (the oracle contract): timeouts fire on watermark
     (event-time), never wall clock, so a replay of the same input
     produces the same evictions — via='timer' iff
     last_ms + gap_ms <= final watermark, where the final watermark is
     max(event time) - ``watermark``. Assumes the finite replay arrives
     in one micro-batch (single parquet file), as all stateful entries
-    here do; the timer batch itself is the no-new-data micro-batch
+    here do; the timeout batch itself is the no-new-data micro-batch
     Spark triggers when the watermark advances.
 
-    Scale: state per key is 3 longs + 1 timer — O(active users), not
-    O(events); the timer wheel is the state store's, sharded with the
-    keys.
+    Scale: state per key is 3 longs + 1 timeout — O(active users), not
+    O(events).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
 
-    class SessionEvict(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            reuse_zip_directories()
-            self._handle = handle
-            self._sess = handle.getValueState(
-                "sess", "start_ms long, last_ms long, n long"
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        reuse_zip_directories()
+        if state.hasTimedOut:
+            start, last, n = state.get
+            state.remove()
+            yield pd.DataFrame(
+                [(key[0], start, last, n, "timer")], columns=_SESSION_COLUMNS
             )
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):  # noqa: ANN001
-            # ONE get() instead of exists()+get(): ValueState.get()
-            # returns None when the variable has no value, and every
-            # state op here is a synchronous proto RPC over the local
-            # state-server socket — at 150k keys/batch the extra
-            # round trip per key is measurable wall time (guide §4:
-            # the per-row/per-key boundary cost is the bottleneck, so
-            # cross it as few times as possible).
-            prev = self._sess.get()
-            start = last = None
-            n = 0
-            if prev is not None:
-                start, last, n = (int(x) for x in prev)
-            prev_last = last
-            ts_all: list[int] = []
-            for pdf in rows:
-                # bulk int64 -> python-int conversion (tolist), not a
-                # per-element generator
-                ts_all.extend(pdf["ts_ms"].tolist())
-            out: list[tuple] = []
-            for t in sorted(ts_all):
-                if start is None:
-                    start = last = t
-                    n = 1
-                elif t - last > gap_ms:
-                    out.append((key[0], start, last, n, "input"))
-                    start = last = t
-                    n = 1
-                else:
-                    last = max(last, t)
-                    n += 1
-            # Re-arm: exactly one pending timer per key, at the open
-            # session's deadline. The pending timer's timestamp is
-            # derivable from the stored state (prev_last + gap_ms —
-            # this class's invariant), so the listTimers iterator RPC
-            # is unnecessary: delete the known deadline directly, and
-            # only when it actually moved (a fresh key has no timer;
-            # an unchanged deadline is already armed).
-            if last != prev_last:
-                if prev_last is not None:
-                    self._handle.deleteTimer(prev_last + gap_ms)
-                self._handle.registerTimer(last + gap_ms)
-            self._sess.update((start, last, n))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "user_id", "session_start_ms", "session_end_ms",
-                        "n_events", "via",
-                    ],
-                )
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):  # noqa: ANN001
-            sess = self._sess.get()  # None when absent — one RPC, not two
-            if sess is not None:
-                start, last, n = (int(x) for x in sess)
-                # The re-arm in handleInputRows deletes prev_last +
-                # gap_ms without listing timers, so the one pending
-                # timer must sit at last + gap_ms. A raise, not an
-                # assert: ``python -O`` keeps the check.
-                due = expiredTimerInfo.getExpiryTimeInMs()
-                if due != last + gap_ms:
-                    raise RuntimeError(
-                        f"session timer for key {key[0]!r} fired at {due},"
-                        f" not at last_ms + gap_ms = {last + gap_ms}"
-                    )
-                self._sess.clear()
-                yield pd.DataFrame(
-                    [(key[0], start, last, n, "timer")],
-                    columns=[
-                        "user_id", "session_start_ms", "session_end_ms",
-                        "n_events", "via",
-                    ],
-                )
-
-        def close(self) -> None:
-            pass
+            return
+        start, last, n = state.get if state.exists else (None, None, 0)
+        ts_all: list[int] = []
+        for pdf in pdfs:
+            # Epoch millis of the UTC session zone's naive timestamps
+            # (read_events_stream pins the zone to UTC).
+            ts_all.extend((pdf["ts"].astype("int64") // 1_000_000).tolist())
+        out: list[tuple] = []
+        for t in sorted(ts_all):
+            if start is None:
+                start = last = t
+                n = 1
+            elif t - last > gap_ms:
+                out.append((key[0], start, last, n, "input"))
+                start = last = t
+                n = 1
+            else:
+                last = max(last, t)
+                n += 1
+        state.update((start, last, n))
+        # Spark times a key out once its timeout is strictly BELOW the
+        # watermark; the oracle evicts a session whose deadline is AT
+        # or below it. One millisecond earlier makes the two agree.
+        state.setTimeoutTimestamp(last + gap_ms - 1)
+        if out:
+            yield pd.DataFrame(out, columns=_SESSION_COLUMNS)
 
     return (
         events.withWatermark("ts", watermark)
-        # Project ts AWAY once the millis are extracted: every column
-        # crossing into the TWS Python worker is converted per row, and
-        # the raw timestamp column was the most expensive of the three
-        # (pandas tz-aware conversion) while the handler only reads
-        # ts_ms. The watermark is plan-level metadata tracked upstream
-        # of this projection, so timer semantics are unchanged —
-        # verified result-identical at sf1 (951,630 rows). ~10-15%
-        # off the batch-0 wall (guide §4: pass only the columns the
-        # function needs).
-        .select("user_id", F.unix_millis("ts").alias("ts_ms"))
+        # ts must reach the function: an event-time timeout needs the
+        # watermarked column in the operator's input.
+        .select("user_id", "ts")
         .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionEvict(),
+        .applyInPandasWithState(
+            update,
             outputStructType=SESSION_EVICT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
+            stateStructType=SESSION_EVICT_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def ship_vendored_protobuf(spark) -> None:  # noqa: ANN001
-    """Make ``google.protobuf`` importable on executors when the
-    runtime in use is this repo's vendored minimal one.
-
-    transformWithStateInPandas WORKERS import the protobuf-generated
-    state protocol; shipping the package via ``addPyFile`` removes the
-    dependency on the JVM's working directory happening to be the repo
-    root. A real installed protobuf (version without our marker) is
-    assumed to exist on executors too — nothing is shipped then.
-    """
-    try:
-        import google.protobuf as gp
-    except ImportError:
-        return
-    if "mock-map-reduce-spark-min" not in getattr(gp, "__version__", ""):
-        return
-    import hashlib
-    import os
-    import tempfile
-    import zipfile
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(gp.__file__)))
-    )
-    pkg = os.path.join(root, "google")
-    srcs = sorted(
-        os.path.join(dp, fn)
-        for dp, _dirs, files in os.walk(pkg)
-        for fn in files
-        if fn.endswith(".py")
-    )
-    # Content-hash the zip name so an edited runtime is re-shipped
-    # instead of a stale cached zip being reused (code-review finding).
-    digest = hashlib.md5()
-    for f in srcs:
-        digest.update(f.encode())
-        digest.update(open(f, "rb").read())
-    # The transformWithState DRIVER-side runner (StreamingPythonRunner)
-    # builds its PYTHONPATH from the UDF's captured env, not from
-    # pyFiles — inject the package root there so the spawned process
-    # can import the runtime regardless of the JVM's cwd. Task workers
-    # additionally get the zip below via the normal pyFiles channel.
-    env = spark.sparkContext.environment
-    existing = env.get("PYTHONPATH", "")
-    if root not in existing.split(os.pathsep):
-        env["PYTHONPATH"] = (
-            root + (os.pathsep + existing if existing else "")
-        )
-    dst = os.path.join(
-        tempfile.gettempdir(),
-        f"mmr_vendored_protobuf_{os.getuid()}_{digest.hexdigest()[:12]}.zip",
-    )
-    if not os.path.exists(dst):
-        tmp = dst + f".{os.getpid()}.part"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for full in srcs:
-                z.write(full, os.path.relpath(full, root))
-        os.replace(tmp, dst)
-    spark.sparkContext.addPyFile(dst)

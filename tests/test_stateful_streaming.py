@@ -44,44 +44,24 @@ def test_running_totals_match_batch(spark, sf_dir):
 
 
 def test_distinct_types_transform_with_state(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 typed-state API): running
-    per-user distinct-type counts equal the batch DISTINCT aggregate.
-    Requires google.protobuf (the API's JVM<->Python state protocol)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf not available: transformWithState protocol needs it")
+    """Running per-user distinct-type counts (array + tally state)
+    equal the batch DISTINCT aggregate."""
     from mock_map_reduce_spark.streaming.stateful import distinct_types_per_user
 
-    # transformWithState keeps one column family per state variable;
-    # the default HDFSBackedStateStoreProvider can't, so the query
-    # needs the RocksDB provider (bundled with Spark 4).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     stream = distinct_types_per_user(read_events_stream(spark, sf_dir))
     q = (
         stream.writeStream.outputMode("update")
         .format("memory")
-        .queryName("tws_out")
+        .queryName("distinct_types_out")
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     got = {
         r.user_id: (r.n_types, r.n_events)
-        for r in spark.sql("SELECT * FROM tws_out").collect()
+        for r in spark.sql("SELECT * FROM distinct_types_out").collect()
     }
     batch = {
         r.user_id: (r.nt, r.n)
@@ -145,41 +125,24 @@ def test_ewma_stream_matches_batch_fold(spark, sf_dir):
 
 
 def test_type_counts_mapstate(spark, sf_dir):
-    """transformWithStateInPandas MAP state: per-user type histogram
-    equals the batch two-key COUNT aggregate (exercises updateValue /
-    containsKey / getValue / iterator over the protobuf channel)."""
-    import pytest
+    """Per-user type histogram from a map-typed state equals the batch
+    two-key COUNT aggregate."""
+    from mock_map_reduce_spark.streaming.stateful import type_counts_per_user
 
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf not available")
-    from mock_map_reduce_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        type_counts_per_user,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
     stream = type_counts_per_user(read_events_stream(spark, sf_dir))
     q = (
         stream.writeStream.outputMode("update")
         .format("memory")
-        .queryName("tws_map_out")
+        .queryName("type_counts_out")
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     got = {
         (r.user_id, r.event_type): r.n
-        for r in spark.sql("SELECT * FROM tws_map_out").collect()
+        for r in spark.sql("SELECT * FROM type_counts_out").collect()
     }
     batch = {
         (r.user_id, r.event_type): r.n
@@ -191,42 +154,25 @@ def test_type_counts_mapstate(spark, sf_dir):
     assert got == batch
 
 
-def test_session_timeout_evictions_timer_semantics(spark, sf_dir):
-    """transformWithStateInPandas TIMERS: the last open session of a
-    user is emitted via='timer' iff its deadline (last event + gap)
-    is at or before the final watermark; sessions broken by in-input
-    silence carry via='input'. Pins the register/expire/delete timer
-    path and its event-time (replay-deterministic) firing rule."""
-    import pytest
+def _run_session_evictions(spark, sf_dir, name):
+    from mock_map_reduce_spark.streaming.stateful import session_timeout_evictions
 
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf not available")
-    from mock_map_reduce_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        session_timeout_evictions,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
     stream = session_timeout_evictions(read_events_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tws_timer_out")
-        .start()
-    )
+    q = stream.writeStream.outputMode("append").format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    rows = spark.sql("SELECT * FROM tws_timer_out").collect()
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def test_session_timeout_evictions_timer_semantics(spark, sf_dir):
+    """Event-time TIMEOUTS: the last open session of a user is emitted
+    via='timer' iff its deadline (last event + gap) is at or before
+    the final watermark; sessions broken by in-input silence carry
+    via='input'. Pins the timeout path and its event-time
+    (replay-deterministic) firing rule."""
+    rows = _run_session_evictions(spark, sf_dir, "session_timeouts_out")
     assert rows, "expected at least one session emission"
 
     gap_ms, wm_delay_ms = 30 * 60 * 1000, 2 * 60 * 60 * 1000
@@ -264,50 +210,39 @@ def test_session_timeout_evictions_timer_semantics(spark, sf_dir):
     assert len({u for u, *_ in got if _[-1] == "timer"}) < len(by_user)
 
 
-def test_session_timer_deadline_invariant_is_checked(spark):
-    """handleExpiredTimer checks the invariant the re-arm relies on:
-    the one pending timer sits at the stored last_ms + gap_ms. A timer
-    firing anywhere else raises (a raise, so ``python -O`` keeps it);
-    the right one emits the session and clears the state. The processor
-    is driven with fake state handles; the session only builds the
-    plan's column expressions."""
-    import pytest
-    from pyspark.sql.streaming.stateful_processor import ExpiredTimerInfo
+def test_session_timeout_fires_at_but_not_after_the_watermark(spark, tmp_path):
+    """The timeout boundary: a session whose deadline (last event +
+    gap) is 1 ms before or exactly AT the final watermark is evicted
+    via='timer'; 1 ms after it stays pending. The oracle's rule is
+    deadline <= watermark, while Spark times a key out only when its
+    timeout is strictly below the watermark. Users 1-3 each have one
+    event; user 4's event sets the max event time, and with it the
+    final watermark (max - 2 h)."""
+    from datetime import datetime, timezone
 
-    from mock_map_reduce_spark.streaming.stateful import session_timeout_evictions
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    class Plan:  # stands in for the streaming DataFrame chain
-        def __getattr__(self, name):
-            return lambda *a, **kw: self
+    gap_ms, wm_delay_ms = 30 * 60 * 1000, 2 * 60 * 60 * 1000
+    t_max = int(datetime(2024, 1, 2, tzinfo=timezone.utc).timestamp() * 1000)
+    final_wm = t_max - wm_delay_ms
+    last_ms = {1: final_wm - gap_ms - 1, 2: final_wm - gap_ms, 3: final_wm - gap_ms + 1, 4: t_max}
+    users = sorted(last_ms)
+    table = pa.table(
+        {
+            "event_id": pa.array(users, pa.int64()),
+            "ts": pa.array([last_ms[u] * 1000 for u in users], pa.timestamp("us")),
+            "user_id": pa.array(users, pa.int64()),
+            "event_type": pa.array(["view"] * len(users)),
+            "value": pa.array([1.0] * len(users)),
+            "props": pa.array(["{}"] * len(users)),
+        }
+    )
+    pq.write_table(table, tmp_path / "events.parquet")
 
-        def transformWithStateInPandas(self, processor, **kw):  # noqa: N802
-            self.processor = processor
-            return self
-
-    class Value:
-        def __init__(self, v):
-            self.v = v
-
-        def get(self):
-            return self.v
-
-        def clear(self):
-            self.v = None
-
-    class Handle:
-        def __init__(self):
-            self.state = Value((1_000, 5_000, 3))
-
-        def getValueState(self, name, schema):  # noqa: N802
-            return self.state
-
-    gap_ms = 60_000
-    proc = session_timeout_evictions(Plan(), gap_ms=gap_ms).processor
-    handle = Handle()
-    proc.init(handle)
-    with pytest.raises(RuntimeError, match="last_ms \\+ gap_ms"):
-        list(proc.handleExpiredTimer((7,), None, ExpiredTimerInfo(5_000 + gap_ms + 1)))
-    assert handle.state.get() == (1_000, 5_000, 3)
-    (out,) = proc.handleExpiredTimer((7,), None, ExpiredTimerInfo(5_000 + gap_ms))
-    assert out.values.tolist() == [[7, 1_000, 5_000, 3, "timer"]]
-    assert handle.state.get() is None
+    rows = _run_session_evictions(spark, str(tmp_path), "session_boundary_out")
+    got = {
+        (r.user_id, r.session_start_ms, r.session_end_ms, r.n_events, r.via)
+        for r in rows
+    }
+    assert got == {(u, last_ms[u], last_ms[u], 1, "timer") for u in (1, 2)}

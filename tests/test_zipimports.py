@@ -107,8 +107,7 @@ def test_worker_task_installs_it_in_the_same_task(spark):
 
 def test_zip_shipped_after_install_stays_importable(spark, tmp_path):
     """``addPyFile`` after the workers installed the change: a later
-    task still imports the new zip (the vendored-protobuf shipping in
-    streaming/stateful.py depends on this)."""
+    task still imports the new zip, as the public API promises."""
     n = spark.sparkContext.defaultParallelism
     warm = spark.range(0, n, 1, n).mapInArrow(_probe(), "lazy boolean, earlier boolean")
     assert all(r.lazy for r in warm.collect())
@@ -143,14 +142,12 @@ WORKER_METHODS = {
     "applyInPandas",
     "applyInArrow",
     "applyInPandasWithState",
-    "transformWithStateInPandas",
     "pandas_udf",
     "flatMap",
     "mapPartitions",
 }
 # Classes whose instances run in a worker, and the method that runs first.
 WORKER_CLASS_ENTRY = {
-    "StatefulProcessor": "init",
     "DataSourceReader": "read",
     "DataSourceWriter": "write",
 }
@@ -292,9 +289,6 @@ def test_every_worker_function_calls_the_helper_first():
         ("def k(b):\n    return b\ndf.mapInArrow(k, 's')", False),
         ("def k(b):\n    x = 1\n    reuse_zip_directories()\ndf.mapInPandas(k, 's')", False),
         ("df.rdd.flatMap(lambda r: r)", False),
-        ("class P(StatefulProcessor):\n    def init(self, h):\n        pass\n", False),
-        ("class P:\n    def init(self, h):\n        pass\n"
-         "df.transformWithStateInPandas(P(), 's')", False),
         ("@udtf(returnType='a int')\nclass U:\n    def eval(self, x):\n"
          "        reuse_zip_directories()\n        yield (x,)\n", True),
         ("def outer():\n    def k(b):\n        return b\n    return df.applyInPandas(k, 's')", False),

@@ -46,19 +46,19 @@ DEDUP_SHUFFLE_CEILINGS: dict[str, int] = {
     "dedup_prefix_filter_jaccard_strict": 4 << 20,
     "dedup_semantic_semdedup": 16 << 20,
     "dedup_substring_spans": 12 << 20,
-    # transformWithStateInPandas family: one keyed exchange of the
-    # events table per run (~80-170 KB measured at sf0.01). The
-    # regression this guards is a processor that re-emits cumulative
-    # state snapshots per batch or loses the single-exchange shape —
-    # shuffle volume is O(events), so ~15x headroom like the dedup
-    # rows.
+    # applyInPandasWithState entries (per-user stateful streams): one
+    # keyed exchange of the events table per run (~70-105 KB measured
+    # at sf0.01). The regression this guards is a function that
+    # re-emits cumulative state snapshots per batch or loses the
+    # single-exchange shape — shuffle volume is O(events), so ~15x
+    # headroom like the dedup rows.
     "streaming_distinct_types_stateful": 1 << 20,
     "streaming_type_counts_mapstate": 1 << 20,
     "streaming_session_timeout_evictions": 2 << 20,
     # Stream-stream interval join: BOTH sides of the self-join are
     # keyed exchanges of the events table (plus state-store IO that
     # does not count as shuffle), so the expected volume is ~2x the
-    # TWS rows above. The regression guarded is a lost equi-key (pure
+    # stateful rows above. The regression guarded is a lost equi-key (pure
     # time-range join → per-batch cartesian re-pairing).
     "streaming_interval_join_outer": 4 << 20,
 }
