@@ -14,8 +14,8 @@ Scale design (100 TB):
     B^2/2 pairs, so one viral boilerplate string would otherwise emit
     billions.
   * Hash function is pluggable: md5 (bit-identical in DuckDB — used
-    by the oracle-checked catalog entries) or xxhash64 (faster JVM
-    path for production).
+    by the oracle-checked catalog entries, and for MinHash the faster
+    path too) or xxhash64 (JVM expressions, no oracle check).
   * Connected components: iterative smallest-label propagation over
     the candidate edge list; iterations are O(log(diameter)) and each
     is one join + agg — the standard scale-out approach when edges
@@ -32,6 +32,10 @@ from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 # Normalized tokens for fuzzy dedup: lowercase alphabetic runs.
 _TOKEN_RE = "[^A-Za-z]+"
+
+# Grams a Python-worker kernel buffers before it emits (shingles) or
+# hashes and reduces (MinHash) them. Read when the DataFrame is built.
+_GRAMS_PER_CHUNK = 1 << 18
 
 
 def _norm_tokens(text_col: str) -> Column:
@@ -85,10 +89,13 @@ def shingles(
     row-identical at sf0.1 before landing). The JVM chain was pure
     per-row string CPU with no codegen advantage (measured 0.87 s warm
     at sf0.1 vs ~0.3 s for the kernel); batching it in the worker is
-    guide §4.2. Docs shorter than n words yield no grams.
+    guide §4.2. Docs shorter than n words yield no grams. The kernel
+    emits a RecordBatch each time ``_GRAMS_PER_CHUNK`` rows are
+    buffered, so a long document cannot grow one unbounded batch.
     """
     out_type = docs.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {out_type}, gram string"
+    chunk = _GRAMS_PER_CHUNK  # read here, so a patched value ships
 
     def _gram_kernel(batches):
         reuse_zip_directories()
@@ -97,31 +104,36 @@ def shingles(
         import pyarrow as pa
 
         tok_re = re.compile(_TOKEN_RE)
+
+        def gram_batch(id_type, ids, grams):
+            return pa.RecordBatch.from_arrays(
+                [pa.array(ids, type=id_type), pa.array(grams, type=pa.string())],
+                names=[id_col, "gram"],
+            )
+
         for batch in batches:
             id_arr = batch.column(batch.schema.get_field_index(id_col))
             texts = batch.column(
                 batch.schema.get_field_index(text_col)
             ).to_pylist()
-            ids = id_arr.to_pylist()
             out_id: list = []
             out_gram: list[str] = []
-            for did, text in zip(ids, texts):
+            for did, text in zip(id_arr.to_pylist(), texts):
                 toks = [t for t in tok_re.split((text or "").lower()) if t]
                 if len(toks) < n:
                     continue
                 # dict.fromkeys == array_distinct: first occurrence wins
-                for g in dict.fromkeys(
+                grams = dict.fromkeys(
                     " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                ):
-                    out_id.append(did)
-                    out_gram.append(g)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=id_arr.type),
-                    pa.array(out_gram, type=pa.string()),
-                ],
-                names=[id_col, "gram"],
-            )
+                )
+                out_id.extend([did] * len(grams))
+                out_gram.extend(grams)
+                # emit each chunk as it fills; a chunk may split a doc
+                while len(out_gram) >= chunk:
+                    yield gram_batch(id_arr.type, out_id[:chunk], out_gram[:chunk])
+                    del out_id[:chunk], out_gram[:chunk]
+            if out_gram:
+                yield gram_batch(id_arr.type, out_id, out_gram)
 
     return _spread(
         docs.select(F.col(id_col), F.col(text_col)), heavy=True
@@ -165,32 +177,34 @@ def minhash_signatures(
 
     The k "permutations" are seeded hash functions; min over the
     shingle set approximates the Jaccard-preserving permutation min.
-    md5 keeps the catalog entries oracle-checkable (codegen'd
-    explode/groupBy formulation — see inline note); xxhash64 is the
-    alternate fast hash computed as a map-only fold (use_md5=False).
+    md5 keeps the catalog entries oracle-checkable and runs as a
+    map-only Arrow kernel (see inline note); xxhash64 (use_md5=False)
+    is a JVM expression fold with no oracle check, measured over 5x
+    slower than the md5 kernel at sf0.1.
 
     Docs with fewer than n tokens have no shingles and are excluded
     in both formulations.
     """
     if use_md5:
-        # Chunked-md5 scheme: one md5 hex digest (32 chars) yields FOUR
-        # 32-bit hash functions (8-hex-char substrings), so k=16
-        # signatures cost num_hashes/4 md5 evaluations per shingle.
+        # Chunked-md5 scheme: one md5 digest (16 bytes, 32 hex chars)
+        # yields FOUR 32-bit hash functions (8-hex-char substrings), so
+        # k=16 signatures cost num_hashes/4 md5 evaluations per shingle.
         #
-        # Round-11 formulation: ONE map-only Arrow pass per partition —
-        # the Python worker tokenizes, builds the distinct gram set,
-        # hashes (hashlib md5 == JVM/DuckDB md5, same hex), and keeps
-        # the per-chunk minimum, emitting exactly one row per doc with
-        # ≥ n tokens. The previous explode → md5 projection → substring
-        # → groupBy(min×k) pipeline was whole-stage-codegen but still
-        # materialized O(grams) rows and paid a partial-min aggregate +
-        # exchange; the kernel emits O(docs) rows and NO exchange at
-        # all (guide §4.2 — batch the custom logic in the worker, §2.4
-        # — remove the shuffle outright). Measured 2.2× at sf0.1 and
-        # bit-identical output (min over hex strings is the same
-        # byte-wise comparison in Python and the JVM; tokenization is
-        # the same [^A-Za-z]+ split on the same lowercased text).
+        # One map-only Arrow pass per partition, emitting exactly one
+        # row per doc with >= n tokens and no exchange. The worker
+        # tokenizes (the same [^A-Za-z]+ split on the same lowercased
+        # text as DuckDB) and gives each gram an integer code from a
+        # dict local to a chunk of about _GRAMS_PER_CHUNK grams (a
+        # chunk ends at a doc boundary), so each distinct gram is
+        # hashed once per chunk and seed, not once per doc. The
+        # digests, viewed as big-endian uint32, are gathered by code
+        # and each doc's minima come from one np.minimum.reduceat over
+        # its gram offsets. Output is bit-identical to the
+        # per-gram-string formulation: an 8-char lowercase hex string
+        # orders exactly like its big-endian uint32, and a minimum over
+        # a doc's gram multiset equals the minimum over its set.
         n_digests = (num_hashes + 3) // 4
+        chunk = _GRAMS_PER_CHUNK  # read here, so a patched value ships
         id_type = docs.schema[id_col].dataType.simpleString()
         out_schema = f"{id_col} {id_type}, " + ", ".join(
             f"h{i} string" for i in range(num_hashes)
@@ -201,45 +215,64 @@ def minhash_signatures(
             import hashlib
             import re
 
+            import numpy as np
             import pyarrow as pa
 
-            tok_re = re.compile(_TOKEN_RE)
+            # bytes tokens: ASCII letters are single UTF-8 bytes and every
+            # other character encodes to bytes >= 0x80, so the split is
+            # the same as on the str, and the grams are md5-ready keys
+            tok_re = re.compile(_TOKEN_RE.encode())
             md5 = hashlib.md5
             seeds = [f"{s}|".encode() for s in range(n_digests)]
+            names = [id_col] + [f"h{i}" for i in range(num_hashes)]
+
+            def signatures(id_arr, rows, codes, starts, grams):
+                gather = np.asarray(codes, dtype=np.intp)
+                offsets = np.asarray(starts, dtype=np.intp)
+                mins = np.empty((len(starts), 4 * n_digests), dtype=np.uint32)
+                for s, seed in enumerate(seeds):
+                    digests = b"".join([md5(seed + g).digest() for g in grams])
+                    words = np.frombuffer(digests, dtype=">u4").reshape(-1, 4)
+                    mins[:, 4 * s : 4 * s + 4] = np.minimum.reduceat(
+                        words[gather], offsets, axis=0
+                    )
+                return pa.RecordBatch.from_arrays(
+                    [id_arr.take(pa.array(rows, type=pa.int64()))]
+                    + [
+                        pa.array([f"{v:08x}" for v in col], type=pa.string())
+                        for col in mins[:, :num_hashes].T.tolist()
+                    ],
+                    names=names,
+                )
+
             for batch in batches:
                 id_arr = batch.column(batch.schema.get_field_index(id_col))
-                ids = id_arr.to_pylist()
                 texts = batch.column(batch.schema.get_field_index(text_col)).to_pylist()
-                out_ids: list = []
-                sig_cols: list[list[str]] = [[] for _ in range(num_hashes)]
-                for did, text in zip(ids, texts):
-                    toks = [t for t in tok_re.split((text or "").lower()) if t]
+                # rows: batch positions of the docs in this chunk;
+                # codes: every gram's code, doc after doc; starts: each
+                # doc's first position in codes; grams: gram -> code
+                # (insertion order is code order).
+                rows: list[int] = []
+                codes: list[int] = []
+                starts: list[int] = []
+                grams: dict[bytes, int] = {}
+                for row, text in enumerate(texts):
+                    toks = [t for t in tok_re.split((text or "").lower().encode()) if t]
                     if len(toks) < n:
                         continue
-                    grams = {
-                        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                    }
-                    mins: list[str | None] = [None] * num_hashes
-                    for g in grams:
-                        gb = g.encode()
-                        for s in range(n_digests):
-                            hx = md5(seeds[s] + gb).hexdigest()
-                            for c in range(4):
-                                k = s * 4 + c
-                                if k >= num_hashes:
-                                    break
-                                piece = hx[8 * c : 8 * c + 8]
-                                cur = mins[k]
-                                if cur is None or piece < cur:
-                                    mins[k] = piece
-                    out_ids.append(did)
-                    for k in range(num_hashes):
-                        sig_cols[k].append(mins[k])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_ids, type=id_arr.type)]
-                    + [pa.array(c, type=pa.string()) for c in sig_cols],
-                    names=[id_col] + [f"h{i}" for i in range(num_hashes)],
-                )
+                    rows.append(row)
+                    starts.append(len(codes))
+                    codes.extend(
+                        [
+                            grams.setdefault(b" ".join(toks[i : i + n]), len(grams))
+                            for i in range(len(toks) - n + 1)
+                        ]
+                    )
+                    if len(codes) >= chunk:
+                        yield signatures(id_arr, rows, codes, starts, grams)
+                        rows, codes, starts, grams = [], [], [], {}
+                if rows:
+                    yield signatures(id_arr, rows, codes, starts, grams)
 
         return _spread(
             docs.select(F.col(id_col), F.col(text_col)), heavy=True

@@ -171,26 +171,28 @@ def encode_bmp(width: int, height: int, rgb: bytes) -> bytes:
     rows bottom-up, each row padded to a 4-byte boundary."""
     import struct
 
+    import numpy as np
+
     if len(rgb) != width * height * 3:
         raise ValueError("rgb length != width*height*3")
-    pad = (4 - (width * 3) % 4) % 4
-    raster = bytearray()
-    for y in range(height - 1, -1, -1):  # bottom-up
-        row = rgb[y * width * 3 : (y + 1) * width * 3]
-        for x in range(width):  # RGB -> BGR
-            raster += row[x * 3 : x * 3 + 3][::-1]
-        raster += b"\x00" * pad
+    stride = (width * 3 + 3) // 4 * 4
+    raster = np.zeros((height, stride), dtype=np.uint8)
+    # bottom-up rows, RGB -> BGR
+    px = np.frombuffer(rgb, dtype=np.uint8).reshape(height, width, 3)
+    raster[:, : width * 3] = px[::-1, :, ::-1].reshape(height, width * 3)
     offset = 14 + 40
     return (
-        struct.pack("<2sIHHI", b"BM", offset + len(raster), 0, 0, offset)
-        + struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(raster), 2835, 2835, 0, 0)
-        + bytes(raster)
+        struct.pack("<2sIHHI", b"BM", offset + raster.nbytes, 0, 0, offset)
+        + struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, raster.nbytes, 2835, 2835, 0, 0)
+        + raster.tobytes()
     )
 
 
 def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     """Parse uncompressed 24-bit BMP into top-down RGB bytes."""
     import struct
+
+    import numpy as np
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
@@ -203,15 +205,13 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     bottom_up = height > 0
     height = abs(height)
     stride = (width * 3 + 3) // 4 * 4
-    rgb = bytearray(width * height * 3)
-    for out_y in range(height):
-        src_y = (height - 1 - out_y) if bottom_up else out_y
-        row = payload[offset + src_y * stride : offset + src_y * stride + width * 3]
-        for x in range(width):  # BGR -> RGB
-            rgb[(out_y * width + x) * 3 : (out_y * width + x) * 3 + 3] = row[
-                x * 3 : x * 3 + 3
-            ][::-1]
-    return width, height, bytes(rgb)
+    if len(payload) < offset + height * stride:
+        raise ValueError("truncated BMP raster")
+    rows = np.frombuffer(payload, dtype=np.uint8, count=height * stride, offset=offset)
+    px = rows.reshape(height, stride)[:, : width * 3].reshape(height, width, 3)
+    if bottom_up:
+        px = px[::-1]
+    return width, height, px[..., ::-1].tobytes()  # BGR -> RGB
 
 
 def synthesize_image(doc_id: int) -> bytes:

@@ -51,6 +51,126 @@ def test_shingles_short_doc_empty(docs):
     assert g.filter("doc_id = 5").count() == 0  # 1 token < n -> no grams
 
 
+# Inputs for the kernel parity tests: grams repeated within a doc and
+# across docs, mixed case with punctuation and digits, non-ASCII
+# letters, docs shorter than the shingle width, and a null text.
+KERNEL_TEXTS = [
+    "the cat sat on the mat and the cat sat on the mat again",
+    "The CAT sat, on the MAT!! 42 times -- the cat SAT on 7 mats",
+    "Café naïve résumé über Straße: the cat sat on the mat",
+    "İstanbul ÉCOLE à la carte, ÜBER alles; the cat",
+    "two words",
+    "",
+    None,
+    "a b c",
+    "x y z x y z x y z x y z",
+] + [
+    f"doc {i} says the cat sat near {'abcdefgh'[i % 8]} mats and {'ijklmnop'[i % 5]} hats"
+    for i in range(15)
+]
+
+
+def _per_gram_signature(text: str | None, num_hashes: int, n: int = 3):
+    """The per-gram formula the md5 MinHash kernel must reproduce: hash
+    k is hex chars [8*(k%4), 8*(k%4)+8) of md5("{k//4}|" + gram), and
+    the signature is its minimum taken as a string."""
+    import hashlib
+    import re
+
+    toks = [t for t in re.split(dd._TOKEN_RE, (text or "").lower()) if t]
+    grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    if not grams:
+        return None
+    return tuple(
+        min(
+            hashlib.md5(f"{k // 4}|{g}".encode()).hexdigest()[8 * (k % 4) : 8 * (k % 4) + 8]
+            for g in grams
+        )
+        for k in range(num_hashes)
+    )
+
+
+def _mapinarrow_kernel(monkeypatch, df, build):
+    """Run ``build(df)`` and return the function it handed to mapInArrow,
+    so a test can feed it Arrow batches in-process and see its output
+    batches (Spark re-batches them)."""
+    DataFrame = type(df)
+    seen = []
+    real = DataFrame.mapInArrow
+
+    def capture(self, fn, schema, *args, **kwargs):
+        seen.append(fn)
+        return real(self, fn, schema, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "mapInArrow", capture)
+        build(df)
+    monkeypatch.setattr(dd, "reuse_zip_directories", lambda: False)  # worker-only set-up
+    (fn,) = seen
+    return fn
+
+
+def test_minhash_kernel_matches_per_gram_formula(spark, monkeypatch):
+    rows = [Row(doc_id=i, text=t) for i, t in enumerate(KERNEL_TEXTS)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dd, "_GRAMS_PER_CHUNK", 7)  # read at build time
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")  # several Arrow batches per partition
+    try:
+        for k in (16, 10):
+            got = {r[0]: tuple(r[1:]) for r in dd.minhash_signatures(df, num_hashes=k).collect()}
+            want = {i: _per_gram_signature(t, k) for i, t in enumerate(KERNEL_TEXTS)}
+            assert got == {i: s for i, s in want.items() if s is not None}
+        # every batch without a qualifying doc: typed, empty result
+        short = spark.createDataFrame(
+            [Row(doc_id=i, text=t) for i, t in enumerate(["a b", None, "", "one", "x y"])],
+            "doc_id int, text string",
+        )
+        sig = dd.minhash_signatures(short, num_hashes=10)
+        assert sig.schema.simpleString() == (
+            "struct<doc_id:int," + ",".join(f"h{i}:string" for i in range(10)) + ">"
+        )
+        assert sig.collect() == []
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_minhash_kernel_splits_chunks_at_doc_boundaries(spark, monkeypatch):
+    import pyarrow as pa
+
+    df = spark.createDataFrame([Row(doc_id=0, text="a b c")])
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": list(range(len(KERNEL_TEXTS))), "text": KERNEL_TEXTS},
+        schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())]),
+    )
+    want = {i: _per_gram_signature(t, 10) for i, t in enumerate(KERNEL_TEXTS)}
+    for chunk, cut in ((7, True), (1 << 18, False)):
+        monkeypatch.setattr(dd, "_GRAMS_PER_CHUNK", chunk)
+        kernel = _mapinarrow_kernel(monkeypatch, df, lambda d: dd.minhash_signatures(d, num_hashes=10))
+        out = list(kernel([batch]))
+        assert (len(out) > 2) if cut else (len(out) == 1)  # chunks cut inside one batch
+        got = {r["doc_id"]: tuple(r[f"h{k}"] for k in range(10)) for b in out for r in b.to_pylist()}
+        assert got == {i: s for i, s in want.items() if s is not None}
+
+
+def test_shingles_chunk_a_long_document(spark, monkeypatch):
+    import pyarrow as pa
+
+    words = [a + b for a in "abcdefgh" for b in "abcdefgh"]  # 64 distinct tokens
+    text = " ".join(words + words[:10])  # the last 8 grams repeat earlier ones
+    df = spark.createDataFrame([Row(doc_id=1, text=text)])
+    whole = [tuple(r) for r in dd.shingles(df, n=3).collect()]
+    assert len(whole) == 64  # 72 grams, 8 of them repeats
+
+    monkeypatch.setattr(dd, "_GRAMS_PER_CHUNK", 5)
+    assert [tuple(r) for r in dd.shingles(df, n=3).collect()] == whole
+    kernel = _mapinarrow_kernel(monkeypatch, df, lambda d: dd.shingles(d, n=3))
+    out = list(kernel([pa.RecordBatch.from_pydict({"doc_id": [1], "text": [text]})]))
+    assert [b.num_rows for b in out] == [5] * 12 + [4]
+    assert [(r["doc_id"], r["gram"]) for b in out for r in b.to_pylist()] == whole
+
+
 def test_lsh_finds_planted_near_dups(docs):
     # 8 bands x 2 rows: detection probability ~0.999 at jaccard 0.75
     # (the one-word-changed near-dup); 4x4 default would miss ~22%.

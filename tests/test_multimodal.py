@@ -76,6 +76,47 @@ def test_bmp_golden_layout():
     assert payload[offset : offset + 8] == bytes([60, 50, 40, 0, 30, 20, 10, 0])
 
 
+def _bmp_raster_per_pixel(width: int, height: int, rgb: bytes) -> bytes:
+    """Reference raster, one pixel at a time: rows bottom-up, each pixel
+    RGB -> BGR, each row zero-padded to a 4-byte boundary."""
+    out = bytearray()
+    for y in range(height - 1, -1, -1):
+        for x in range(width):
+            i = (y * width + x) * 3
+            out += bytes([rgb[i + 2], rgb[i + 1], rgb[i]])
+        out += bytes(-width * 3 % 4)
+    return bytes(out)
+
+
+def test_bmp_raster_matches_per_pixel_reference():
+    for w in (1, 2, 3, 4, 5):  # every row padding, 0 to 3 bytes
+        rgb = bytes((7 * i + w) % 256 for i in range(w * 3 * 3))
+        payload = mm.encode_bmp(w, 3, rgb)
+        assert payload[54:] == _bmp_raster_per_pixel(w, 3, rgb)
+        assert mm.decode_bmp(payload) == (w, 3, rgb)
+
+
+def test_bmp_top_down_rows():
+    # a negative height marks a top-down raster: the first stored row
+    # is the top row, so no flip
+    import struct
+
+    top = bytes([1, 2, 3, 4, 5, 6, 7, 8, 9])
+    bottom = bytes([91, 92, 93, 94, 95, 96, 97, 98, 99])
+    payload = bytearray(mm.encode_bmp(3, 2, bottom + top))  # stores top first
+    struct.pack_into("<i", payload, 22, -2)
+    assert mm.decode_bmp(bytes(payload)) == (3, 2, top + bottom)
+
+
+def test_bmp_truncated_raster_raises():
+    payload = mm.encode_bmp(3, 2, bytes(range(18)))
+    assert len(payload) == 54 + 2 * 12
+    with pytest.raises(ValueError, match="truncated BMP raster"):
+        mm.decode_bmp(payload[:-1])  # last row's padding missing
+    with pytest.raises(ValueError, match="truncated BMP raster"):
+        mm.decode_bmp(payload[:54])
+
+
 def test_synthesize_image_formats_and_pixel_law():
     import numpy as np
 
