@@ -213,9 +213,10 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     total_median = round(sum(medians.values()), 3)
     calib = calibrate()
-    # The post-run constant is the last per-rep bracket sample — no
-    # extra calibration needed (the final rep round just measured it).
-    calib_mt = calib_mt_reps[-1]
+    # The post-run constant is taken after ALL work, the single-thread
+    # calibration included, so "post" brackets the whole run; the
+    # per-rep brackets stay in calib_mt_reps.
+    calib_mt = calibrate_mt()
 
     # STDOUT CONTRACT: exactly one compact JSON line in the r1-r6 shape
     # the driver parses ({metric, value, unit, queries, sf} + small

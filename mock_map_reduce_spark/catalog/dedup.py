@@ -3,9 +3,9 @@
 Oracle strategy: the MinHash pipeline is built on md5 (bit-identical
 in Spark and DuckDB), so even the LSH *candidate generation* is
 oracle-checked — the DuckDB twin re-derives shingles, signatures,
-band buckets, and pairs in SQL. SimHash depends on xxhash64 (no
-DuckDB twin) and connected components is iterative, so those two are
-rows-only here and pinned by pytest with planted duplicates.
+band buckets, and pairs in SQL. SimHash uses the same md5 trick
+(the token's bit pattern comes from its md5 hex nibbles), so its
+digests and candidates are oracle-checked too.
 
 Shared constants: 3-word shingles, 16 hashes, 4 bands — at the data's
 planted-duplicate similarity (~0.99 Jaccard) detection probability is
@@ -182,7 +182,7 @@ SELECT doc_id, h0, h7, h15 FROM sigs
 def q_dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (3 of 16 columns projected for the compare)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = dd.minhash_signatures(docs, NUM_HASHES, NGRAM, use_md5=True)
+    sig = dd.minhash_signatures(docs, NUM_HASHES, NGRAM)
     return sig.select("doc_id", "h0", "h7", "h15")
 
 
@@ -201,7 +201,7 @@ JOIN bands b ON a.band_idx = b.band_idx AND a.bucket = b.bucket AND a.doc_id < b
 def q_dedup_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash-LSH candidate generation, oracle-checked end-to-end."""
     docs = load_table(spark, sf_dir, "documents")
-    return dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM, use_md5=True)
+    return dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM)
 
 
 MAX_DOC_FREQ = 64  # stop-shingle cap: bounds any shingle's join fan-out to 64^2
@@ -299,9 +299,9 @@ def q_dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFr
     docs = load_table(spark, sf_dir, "documents")
     # Materialize the signature pipeline ONCE; the candidate generation
     # reuses it instead of re-running shingle+md5 from the raw corpus.
-    sigs = materialize(dd.minhash_signatures(docs, NUM_HASHES, NGRAM, use_md5=True))
+    sigs = materialize(dd.minhash_signatures(docs, NUM_HASHES, NGRAM))
     cand = materialize(dd.lsh_candidate_pairs(
-        docs, NUM_HASHES, BANDS, NGRAM, use_md5=True, signatures=sigs
+        docs, NUM_HASHES, BANDS, NGRAM, signatures=sigs
     ))
     cand_ids = (
         cand.select(F.col("id_a").alias("doc_id"))
@@ -377,7 +377,7 @@ def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- SimHash oracle fragments ----------------------------------------------
-# md5-nibble bit pattern (operators/dedup.simhash use_md5=True): bit b of
+# md5-nibble bit pattern (operators/dedup.simhash): bit b of
 # a token's 64-bit hash = bit (b%4) of hex nibble (b//4) of md5(tok).
 # Bit 63's power of two is written as the two's-complement MIN_BIGINT
 # literal — DuckDB raises on `1::BIGINT << 63` where Spark's shiftleft
@@ -415,10 +415,9 @@ sh AS (
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash digests, oracle-checked end-to-end via the
-    md5-nibble hash (the xxhash64 fast path stays the operator
-    default; pytest pins its planted-dup behavior)."""
+    md5-nibble hash."""
     docs = load_table(spark, sf_dir, "documents")
-    return dd.simhash(docs, use_md5=True)
+    return dd.simhash(docs)
 
 
 @query(
@@ -441,7 +440,7 @@ def q_dedup_simhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     block extraction is engine-agnostic (low 16 bits of a right shift
     are identical under arithmetic or logical semantics)."""
     docs = load_table(spark, sf_dir, "documents")
-    return dd.simhash_candidate_pairs(docs, BANDS, use_md5=True)
+    return dd.simhash_candidate_pairs(docs, BANDS)
 
 
 @query(
@@ -477,7 +476,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_fuzzy_survivors``).
     """
     docs = load_table(spark, sf_dir, "documents")
-    edges = dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM, use_md5=True)
+    edges = dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM)
     comp = dd.connected_components(edges, docs.select("doc_id"))
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
@@ -533,7 +532,7 @@ def _fuzzy_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components — the shared head of the fuzzy-survivor
     queries."""
     docs = load_table(spark, sf_dir, "documents")
-    cand = dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM, use_md5=True)
+    cand = dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM)
     grams = dd.shingles(docs, NGRAM)
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("ng"))
     # CANDIDATE-FIRST verification (round-8 scale fix): expand each
@@ -633,7 +632,7 @@ def q_dedup_incremental_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     index = docs.filter(F.col("doc_id") % 2 == 0)
-    return dd.incremental_lsh_candidates(batch, index, NUM_HASHES, BANDS, NGRAM, use_md5=True)
+    return dd.incremental_lsh_candidates(batch, index, NUM_HASHES, BANDS, NGRAM)
 
 
 # Quality-aware survivor selection: same duplicate clusters as
@@ -830,7 +829,7 @@ def q_dedup_lsh_recall_by_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     truth = dd.ngram_jaccard_pairs(
         docs, NGRAM, RECALL_FLOOR, max_doc_freq=MAX_DOC_FREQ
     )
-    cand = dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM, use_md5=True)
+    cand = dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM)
     flagged = truth.join(
         cand.withColumn("caught", F.lit(1)), ["id_a", "id_b"], "left"
     )

@@ -1,10 +1,10 @@
 """Multimodal catalog: binary payload plumbing + REAL image decode.
 
 binary_stats is oracle-checked (byte lengths + base64 prefix are
-deterministic in both engines); byte_features' mapInPandas extractor
+deterministic in both engines); byte_features' mapInArrow extractor
 is Python-side (no SQL twin) -> rows-only, pinned by pytest;
 image_features is the oracle-checked core: pure-stdlib PPM/BMP
-decoders run inside mapInPandas and the synthetic pixel law makes the
+decoders run inside mapInArrow and the synthetic pixel law makes the
 expected statistics closed-form in SQL, so a decoder bug (header
 offset, BGR order, bottom-up flip) fails the value hash.
 """
@@ -65,7 +65,7 @@ LEFT JOIN ent e USING (doc_id)
 """,
 )
 def q_multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched byte-feature extraction via mapInPandas — NOW
+    """Arrow-batched byte-feature extraction via mapInArrow — NOW
     oracle-checked (formerly the registry's one rows-only entry).
 
     The payload is the doc's UTF-8 bytes and the corpus is pure ASCII,
@@ -98,7 +98,7 @@ def q_multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each doc gets a deterministic synthetic image — encoded as netpbm
     PPM (even ids) or 24-bit BMP (odd ids) by the ENCODER half of the
     pure-stdlib codec pair — and ``image_features`` decodes it back
-    inside mapInPandas and reduces pixels to per-channel means. The
+    inside mapInArrow and reduces pixels to per-channel means. The
     pixel law is wrap-free (operators/multimodal.synthesize_image), so
     the oracle states the expected statistics in closed form: any
     decoder defect (PPM header/comment parsing, BMP BGR order, row
@@ -132,7 +132,7 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each doc gets a deterministic mono 16-bit PCM WAV (RIFF) clip —
     every third with a junk LIST chunk, so the decoder must genuinely
     walk the chunk list — and ``audio_features`` parses the fmt/data
-    chunks back inside mapInPandas. The sawtooth sample law spans
+    chunks back inside mapInArrow. The sawtooth sample law spans
     whole periods, so mean/peak/energy are closed-form
     (operators/multimodal.synthesize_audio): a header-offset,
     chunk-walk, or endianness bug fails the value hash.
@@ -201,11 +201,11 @@ LEFT JOIN ent e USING (doc_id)
 )
 def q_multimodal_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The resize → feature-extract CHAIN: two Arrow-batched
-    mapInPandas stages composed — resize_payload keeps every 4th
+    mapInArrow stages composed — resize_payload keeps every 4th
     payload byte (the media-downscale stand-in), byte_features reduces
     the RESIZED payload to moments — with the oracle stating the same
     statistics over positions 1, 5, 9, … of the source bytes. Proves
-    payload flows correctly BETWEEN Pandas-UDF stages (dtype, batch
+    payload flows correctly BETWEEN Arrow-UDF stages (dtype, batch
     shape, binary round-trip), not just through one.
 
     Scale: the resize exists to shrink what flows onward — payload

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mock_map_reduce_spark.functions.arrowcols import rows_batch, schema as arrow_schema
 from mock_map_reduce_spark.functions.materialize import materialize
 from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.operators.skew import salted_word_count
@@ -378,24 +379,22 @@ def q_arrow_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pyarrow as pa
 
+    out_ddl = "event_type string, n long, wsum long, wmean_raw double"
+    out_schema = arrow_schema(out_ddl)
+
     def weighted(table: pa.Table) -> pa.Table:
         reuse_zip_directories()
-        et = table.column("event_type")[0].as_py()
-        wts = [(u % 5) + 1 for u in table.column("user_id").to_pylist()]
         import math
 
+        et = table.column("event_type")[0].as_py()
+        wts = [(u % 5) + 1 for u in table.column("user_id").to_pylist()]
         vints = [
             int(math.floor(v * 1000000.0 + 0.5)) for v in table.column("value").to_pylist()
         ]
         swv = sum(w * v for w, v in zip(wts, vints))
         sw = sum(wts)
-        return pa.table(
-            {
-                "event_type": [et],
-                "n": [len(wts)],
-                "wsum": [sw],
-                "wmean_raw": [(float(swv) / sw) / 1000000.0],
-            }
+        return pa.Table.from_batches(
+            [rows_batch([(et, len(wts), sw, (float(swv) / sw) / 1000000.0)], out_schema)]
         )
 
     ev = (
@@ -403,9 +402,7 @@ def q_arrow_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select("event_type", "user_id", "value")
     )
-    out = ev.groupBy("event_type").applyInArrow(
-        weighted, "event_type string, n long, wsum long, wmean_raw double"
-    )
+    out = ev.groupBy("event_type").applyInArrow(weighted, out_ddl)
     return out.select(
         "event_type", "n", "wsum", F.round("wmean_raw", 6).alias("wmean")
     )
@@ -536,20 +533,15 @@ def q_arrow_map_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stats(batches):
         reuse_zip_directories()
         for b in batches:
-            t = pa.Table.from_batches([b])
-            out = pa.table(
-                {
-                    "lang": t.column("lang"),
-                    "n_bytes": pc.cast(
-                        pc.binary_length(t.column("text")), pa.int64()
-                    ),
-                    "n_spaces": pc.cast(
-                        pc.count_substring(t.column("text"), pattern=" "),
-                        pa.int64(),
-                    ),
-                }
+            text = b.column(b.schema.get_field_index("text"))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(b.schema.get_field_index("lang")),
+                    pc.cast(pc.binary_length(text), pa.int64()),
+                    pc.cast(pc.count_substring(text, pattern=" "), pa.int64()),
+                ],
+                names=["lang", "n_bytes", "n_spaces"],
             )
-            yield from out.to_batches()
 
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
     mapped = docs.mapInArrow(stats, "lang string, n_bytes long, n_spaces long")

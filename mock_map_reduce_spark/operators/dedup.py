@@ -13,9 +13,8 @@ Scale design (100 TB):
     classic boilerplate-text skew guard) — a bucket of B docs emits
     B^2/2 pairs, so one viral boilerplate string would otherwise emit
     billions.
-  * Hash function is pluggable: md5 (bit-identical in DuckDB — used
-    by the oracle-checked catalog entries, and for MinHash the faster
-    path too) or xxhash64 (JVM expressions, no oracle check).
+  * Hashes are md5, computed in map-only Arrow kernels: bit-identical
+    in DuckDB, so every catalog entry is oracle-checked.
   * Connected components: iterative smallest-label propagation over
     the candidate edge list; iterations are O(log(diameter)) and each
     is one join + agg — the standard scale-out approach when edges
@@ -26,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from mock_map_reduce_spark.functions.arrowcols import fixed_width, numeric, strings
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread as _spread
 from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
@@ -105,9 +105,9 @@ def shingles(
 
         tok_re = re.compile(_TOKEN_RE)
 
-        def gram_batch(id_type, ids, grams):
+        def gram_batch(id_arr, rows, grams):
             return pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=id_type), pa.array(grams, type=pa.string())],
+                [id_arr.take(numeric(rows, pa.int64())), strings(grams)],
                 names=[id_col, "gram"],
             )
 
@@ -116,9 +116,9 @@ def shingles(
             texts = batch.column(
                 batch.schema.get_field_index(text_col)
             ).to_pylist()
-            out_id: list = []
+            out_row: list[int] = []  # batch position of each gram's doc
             out_gram: list[str] = []
-            for did, text in zip(id_arr.to_pylist(), texts):
+            for row, text in enumerate(texts):
                 toks = [t for t in tok_re.split((text or "").lower()) if t]
                 if len(toks) < n:
                     continue
@@ -126,43 +126,18 @@ def shingles(
                 grams = dict.fromkeys(
                     " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
                 )
-                out_id.extend([did] * len(grams))
+                out_row.extend([row] * len(grams))
                 out_gram.extend(grams)
                 # emit each chunk as it fills; a chunk may split a doc
                 while len(out_gram) >= chunk:
-                    yield gram_batch(id_arr.type, out_id[:chunk], out_gram[:chunk])
-                    del out_id[:chunk], out_gram[:chunk]
+                    yield gram_batch(id_arr, out_row[:chunk], out_gram[:chunk])
+                    del out_row[:chunk], out_gram[:chunk]
             if out_gram:
-                yield gram_batch(id_arr.type, out_id, out_gram)
+                yield gram_batch(id_arr, out_row, out_gram)
 
     return _spread(
         docs.select(F.col(id_col), F.col(text_col)), heavy=True
     ).mapInArrow(_gram_kernel, out_schema)
-
-
-def _gram_hash(seed: int, gram: Column, use_md5: bool) -> Column:
-    if use_md5:
-        return F.md5(F.concat(F.lit(f"{seed}|"), gram))
-    return F.xxhash64(F.lit(seed), gram).cast("string")
-
-
-def _grams_of(toks: Column, n: int) -> Column:
-    """Distinct word n-gram shingles from a MATERIALIZED token array column.
-
-    ``toks`` must be a plain column reference (not an inline split
-    expression): the transform lambda evaluates its operand expression
-    per element, so an inline tokenizer would re-run the regex split
-    once per gram — O(tokens^2) per document.
-
-    Guard: F.sequence(0, -1) would count DOWN; docs with < n tokens
-    must yield an empty index list, not grams at negative offsets.
-    """
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
 
 
 def minhash_signatures(
@@ -171,126 +146,110 @@ def minhash_signatures(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_md5: bool = True,
 ) -> DataFrame:
     """MinHash signature per doc: (id, h0..h{k-1}).
 
     The k "permutations" are seeded hash functions; min over the
     shingle set approximates the Jaccard-preserving permutation min.
     md5 keeps the catalog entries oracle-checkable and runs as a
-    map-only Arrow kernel (see inline note); xxhash64 (use_md5=False)
-    is a JVM expression fold with no oracle check, measured over 5x
-    slower than the md5 kernel at sf0.1.
+    map-only Arrow kernel (see inline note).
 
-    Docs with fewer than n tokens have no shingles and are excluded
-    in both formulations.
+    Docs with fewer than n tokens have no shingles and are excluded.
     """
-    if use_md5:
-        # Chunked-md5 scheme: one md5 digest (16 bytes, 32 hex chars)
-        # yields FOUR 32-bit hash functions (8-hex-char substrings), so
-        # k=16 signatures cost num_hashes/4 md5 evaluations per shingle.
-        #
-        # One map-only Arrow pass per partition, emitting exactly one
-        # row per doc with >= n tokens and no exchange. The worker
-        # tokenizes (the same [^A-Za-z]+ split on the same lowercased
-        # text as DuckDB) and gives each gram an integer code from a
-        # dict local to a chunk of about _GRAMS_PER_CHUNK grams (a
-        # chunk ends at a doc boundary), so each distinct gram is
-        # hashed once per chunk and seed, not once per doc. The
-        # digests, viewed as big-endian uint32, are gathered by code
-        # and each doc's minima come from one np.minimum.reduceat over
-        # its gram offsets. Output is bit-identical to the
-        # per-gram-string formulation: an 8-char lowercase hex string
-        # orders exactly like its big-endian uint32, and a minimum over
-        # a doc's gram multiset equals the minimum over its set.
-        n_digests = (num_hashes + 3) // 4
-        chunk = _GRAMS_PER_CHUNK  # read here, so a patched value ships
-        id_type = docs.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, " + ", ".join(
-            f"h{i} string" for i in range(num_hashes)
-        )
-
-        def _sig_kernel(batches):
-            reuse_zip_directories()
-            import hashlib
-            import re
-
-            import numpy as np
-            import pyarrow as pa
-
-            # bytes tokens: ASCII letters are single UTF-8 bytes and every
-            # other character encodes to bytes >= 0x80, so the split is
-            # the same as on the str, and the grams are md5-ready keys
-            tok_re = re.compile(_TOKEN_RE.encode())
-            md5 = hashlib.md5
-            seeds = [f"{s}|".encode() for s in range(n_digests)]
-            names = [id_col] + [f"h{i}" for i in range(num_hashes)]
-
-            def signatures(id_arr, rows, codes, starts, grams):
-                gather = np.asarray(codes, dtype=np.intp)
-                offsets = np.asarray(starts, dtype=np.intp)
-                mins = np.empty((len(starts), 4 * n_digests), dtype=np.uint32)
-                for s, seed in enumerate(seeds):
-                    digests = b"".join([md5(seed + g).digest() for g in grams])
-                    words = np.frombuffer(digests, dtype=">u4").reshape(-1, 4)
-                    mins[:, 4 * s : 4 * s + 4] = np.minimum.reduceat(
-                        words[gather], offsets, axis=0
-                    )
-                return pa.RecordBatch.from_arrays(
-                    [id_arr.take(pa.array(rows, type=pa.int64()))]
-                    + [
-                        pa.array([f"{v:08x}" for v in col], type=pa.string())
-                        for col in mins[:, :num_hashes].T.tolist()
-                    ],
-                    names=names,
-                )
-
-            for batch in batches:
-                id_arr = batch.column(batch.schema.get_field_index(id_col))
-                texts = batch.column(batch.schema.get_field_index(text_col)).to_pylist()
-                # rows: batch positions of the docs in this chunk;
-                # codes: every gram's code, doc after doc; starts: each
-                # doc's first position in codes; grams: gram -> code
-                # (insertion order is code order).
-                rows: list[int] = []
-                codes: list[int] = []
-                starts: list[int] = []
-                grams: dict[bytes, int] = {}
-                for row, text in enumerate(texts):
-                    toks = [t for t in tok_re.split((text or "").lower().encode()) if t]
-                    if len(toks) < n:
-                        continue
-                    rows.append(row)
-                    starts.append(len(codes))
-                    codes.extend(
-                        [
-                            grams.setdefault(b" ".join(toks[i : i + n]), len(grams))
-                            for i in range(len(toks) - n + 1)
-                        ]
-                    )
-                    if len(codes) >= chunk:
-                        yield signatures(id_arr, rows, codes, starts, grams)
-                        rows, codes, starts, grams = [], [], [], {}
-                if rows:
-                    yield signatures(id_arr, rows, codes, starts, grams)
-
-        return _spread(
-            docs.select(F.col(id_col), F.col(text_col)), heavy=True
-        ).mapInArrow(_sig_kernel, out_schema)
-
-    base = (
-        _spread(docs.select(F.col(id_col), F.col(text_col)), heavy=True)
-        .select(F.col(id_col), _norm_tokens(text_col).alias("__toks"))
-        .select(F.col(id_col), _grams_of(F.col("__toks"), n).alias("__grams"))
-        .filter(F.size("__grams") > 0)
+    # Chunked-md5 scheme: one md5 digest (16 bytes, 32 hex chars)
+    # yields FOUR 32-bit hash functions (8-hex-char substrings), so
+    # k=16 signatures cost num_hashes/4 md5 evaluations per shingle.
+    #
+    # One map-only Arrow pass per partition, emitting exactly one
+    # row per doc with >= n tokens and no exchange. The worker
+    # tokenizes (the same [^A-Za-z]+ split on the same lowercased
+    # text as DuckDB) and gives each gram an integer code from a
+    # dict local to a chunk of about _GRAMS_PER_CHUNK grams (a
+    # chunk ends at a doc boundary), so each distinct gram is
+    # hashed once per chunk and seed, not once per doc. The
+    # digests, viewed as big-endian uint32, are gathered by code
+    # and each doc's minima come from one np.minimum.reduceat over
+    # its gram offsets. Output is bit-identical to the
+    # per-gram-string formulation: an 8-char lowercase hex string
+    # orders exactly like its big-endian uint32, and a minimum over
+    # a doc's gram multiset equals the minimum over its set. The hex
+    # strings are built in NumPy (nibble -> digit table) straight into
+    # the Arrow string buffer.
+    n_digests = (num_hashes + 3) // 4
+    chunk = _GRAMS_PER_CHUNK  # read here, so a patched value ships
+    id_type = docs.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_type}, " + ", ".join(
+        f"h{i} string" for i in range(num_hashes)
     )
-    sig_cols = [
-        F.array_min(
-            F.transform(F.col("__grams"), (lambda i: lambda g: _gram_hash(i, g, False))(i))
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return base.select(F.col(id_col), *sig_cols)
+
+    def _sig_kernel(batches):
+        reuse_zip_directories()
+        import hashlib
+        import re
+
+        import numpy as np
+        import pyarrow as pa
+
+        # bytes tokens: ASCII letters are single UTF-8 bytes and every
+        # other character encodes to bytes >= 0x80, so the split is
+        # the same as on the str, and the grams are md5-ready keys
+        tok_re = re.compile(_TOKEN_RE.encode())
+        md5 = hashlib.md5
+        seeds = [f"{s}|".encode() for s in range(n_digests)]
+        names = [id_col] + [f"h{i}" for i in range(num_hashes)]
+        hex_digits = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
+        nibble_shifts = np.arange(28, -1, -4, dtype=np.uint32)
+
+        def signatures(id_arr, rows, codes, starts, grams):
+            gather = np.asarray(codes, dtype=np.intp)
+            offsets = np.asarray(starts, dtype=np.intp)
+            mins = np.empty((len(starts), 4 * n_digests), dtype=np.uint32)
+            for s, seed in enumerate(seeds):
+                digests = b"".join([md5(seed + g).digest() for g in grams])
+                words = np.frombuffer(digests, dtype=">u4").reshape(-1, 4)
+                mins[:, 4 * s : 4 * s + 4] = np.minimum.reduceat(
+                    words[gather], offsets, axis=0
+                )
+            # (docs, k, 8) hex digits, most significant nibble first
+            digits = hex_digits[(mins[:, :num_hashes, None] >> nibble_shifts) & 15]
+            return pa.RecordBatch.from_arrays(
+                [id_arr.take(numeric(rows, pa.int64()))]
+                + [fixed_width(digits[:, i]) for i in range(num_hashes)],
+                names=names,
+            )
+
+        for batch in batches:
+            id_arr = batch.column(batch.schema.get_field_index(id_col))
+            texts = batch.column(batch.schema.get_field_index(text_col)).to_pylist()
+            # rows: batch positions of the docs in this chunk;
+            # codes: every gram's code, doc after doc; starts: each
+            # doc's first position in codes; grams: gram -> code
+            # (insertion order is code order).
+            rows: list[int] = []
+            codes: list[int] = []
+            starts: list[int] = []
+            grams: dict[bytes, int] = {}
+            for row, text in enumerate(texts):
+                toks = [t for t in tok_re.split((text or "").lower().encode()) if t]
+                if len(toks) < n:
+                    continue
+                rows.append(row)
+                starts.append(len(codes))
+                codes.extend(
+                    [
+                        grams.setdefault(b" ".join(toks[i : i + n]), len(grams))
+                        for i in range(len(toks) - n + 1)
+                    ]
+                )
+                if len(codes) >= chunk:
+                    yield signatures(id_arr, rows, codes, starts, grams)
+                    rows, codes, starts, grams = [], [], [], {}
+            if rows:
+                yield signatures(id_arr, rows, codes, starts, grams)
+
+    return _spread(
+        docs.select(F.col(id_col), F.col(text_col)), heavy=True
+    ).mapInArrow(_sig_kernel, out_schema)
 
 
 def lsh_band_buckets(
@@ -327,7 +286,6 @@ def lsh_candidate_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_md5: bool = True,
     max_bucket_size: int | None = None,
     via: str = "group",
     signatures: DataFrame | None = None,
@@ -358,7 +316,7 @@ def lsh_candidate_pairs(
     sig = (
         signatures
         if signatures is not None
-        else minhash_signatures(docs, num_hashes, n, text_col, id_col, use_md5)
+        else minhash_signatures(docs, num_hashes, n, text_col, id_col)
     )
     buckets = lsh_band_buckets(sig, num_hashes, bands, id_col)
     if via == "group":
@@ -589,123 +547,89 @@ def simhash(
     bits: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_md5: bool = False,
 ) -> DataFrame:
     """SimHash digest per doc: (id, simhash long).
 
     Token-level ``bits``-bit hashes vote per bit (+1 if set, -1 if
-    not); the digest takes the sign of each bit's tally. Whole
-    pipeline is JVM-side: explode tokens -> hash -> per-bit ±1 array
-    -> elementwise sum (explode + groupBy) -> sign -> bits folded
-    back into one long.
-
-    use_md5=True derives the token's bit pattern from the first
-    bits/4 hex chars of md5 (4 bits per nibble) instead of xxhash64 —
-    same trick as minhash_signatures — making the digest
-    bit-reproducible in DuckDB so the catalog entry is
-    oracle-checked. xxhash64 (default) is the fast single-fold path.
+    not); the digest takes the sign of each bit's tally. A token's bit
+    pattern is the first bits/4 hex chars of its md5 (4 bits per
+    nibble), the same trick as minhash_signatures, so the digest is
+    bit-reproducible in DuckDB and the catalog entry is oracle-checked.
     """
-    if use_md5:
-        # Round-11: ONE map-only Arrow pass. The previous md5 pipeline
-        # exploded tokens (corpus-scale rows), then posexploded a
-        # 64-element ±1 vote array per token (64× the token count!)
-        # through TWO aggregation exchanges — at sf10 that was 668 s
-        # and the candidate query's gate-infra failure. The kernel
-        # computes the identical digest per doc: hashlib md5 == JVM/
-        # DuckDB md5, nibble i = hex char i of the digest, bit b votes
-        # +1 iff (nib[b//4] >> (b%4)) & 1, digest bit set iff the
-        # token-vote tally is > 0, bits folded with int64 wraparound
-        # exactly like the JVM's shiftleft sum. Zero-token docs emit no
-        # row, as the explode formulation did. (guide §4.2 + §2.3:
-        # shuffle NOTHING instead of tokens×64 vote rows.)
-        id_type = docs.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, simhash bigint"
-        nib_count = bits // 4
+    # ONE map-only Arrow pass. An earlier md5 pipeline exploded tokens
+    # (corpus-scale rows), then posexploded a 64-element ±1 vote array
+    # per token (64× the token count!) through TWO aggregation
+    # exchanges — at sf10 that was 668 s and the candidate query's
+    # gate-infra failure. The kernel computes the identical digest per
+    # doc: hashlib md5 == JVM/DuckDB md5, nibble i = hex char i of the
+    # digest, bit b votes +1 iff (nib[b//4] >> (b%4)) & 1, digest bit
+    # set iff the token-vote tally is > 0, bits folded with int64
+    # wraparound exactly like the JVM's shiftleft sum. Zero-token docs
+    # emit no row, as the explode formulation did. (guide §4.2 + §2.3:
+    # shuffle NOTHING instead of tokens×64 vote rows.)
+    id_type = docs.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_type}, simhash bigint"
+    nib_count = bits // 4
 
-        def _simhash_kernel(batches):
-            reuse_zip_directories()
-            import hashlib
-            import re
+    def _simhash_kernel(batches):
+        reuse_zip_directories()
+        import hashlib
+        import re
 
-            import numpy as np
-            import pyarrow as pa
+        import numpy as np
+        import pyarrow as pa
 
-            tok_re = re.compile(_TOKEN_RE)
-            md5 = hashlib.md5
-            nbytes = (nib_count + 1) // 2
-            bitpos = np.arange(bits)
-            nibidx = bitpos // 4
-            shift = bitpos % 4
-            for batch in batches:
-                id_arr = batch.column(batch.schema.get_field_index(id_col))
-                texts = batch.column(
-                    batch.schema.get_field_index(text_col)
-                ).to_pylist()
-                out_id: list = []
-                out_sh: list[int] = []
-                for did, text in zip(id_arr.to_pylist(), texts):
-                    toks = [
-                        t for t in tok_re.split((text or "").lower()) if t
-                    ]
-                    if not toks:
-                        continue  # explode semantics: no tokens, no row
-                    raw = b"".join(md5(t.encode()).digest()[:nbytes] for t in toks)
-                    d = np.frombuffer(raw, dtype=np.uint8).reshape(
-                        len(toks), nbytes
-                    )
-                    # hex char order: char 2i = high nibble of byte i,
-                    # char 2i+1 = low nibble
-                    nib = np.empty((len(toks), nbytes * 2), dtype=np.uint8)
-                    nib[:, 0::2] = d >> 4
-                    nib[:, 1::2] = d & 15
-                    ones = ((nib[:, nibidx] >> shift) & 1).sum(
-                        axis=0, dtype=np.int64
-                    )
-                    # tally = ones - zeros = 2*ones - T; bit set iff > 0
-                    set_bits = np.nonzero(2 * ones - len(toks) > 0)[0]
-                    val = 0
-                    for b in set_bits:
-                        val |= 1 << int(b)
-                    if val >= 1 << 63:  # int64 two's-complement wrap,
-                        val -= 1 << 64  # matching the JVM shiftleft sum
-                    out_id.append(did)
-                    out_sh.append(val)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_id, type=id_arr.type),
-                        pa.array(out_sh, type=pa.int64()),
-                    ],
-                    names=[id_col, "simhash"],
+        tok_re = re.compile(_TOKEN_RE)
+        md5 = hashlib.md5
+        nbytes = (nib_count + 1) // 2
+        bitpos = np.arange(bits)
+        nibidx = bitpos // 4
+        shift = bitpos % 4
+        for batch in batches:
+            id_arr = batch.column(batch.schema.get_field_index(id_col))
+            texts = batch.column(
+                batch.schema.get_field_index(text_col)
+            ).to_pylist()
+            out_row: list[int] = []
+            out_sh: list[int] = []
+            for row, text in enumerate(texts):
+                toks = [
+                    t for t in tok_re.split((text or "").lower()) if t
+                ]
+                if not toks:
+                    continue  # explode semantics: no tokens, no row
+                raw = b"".join(md5(t.encode()).digest()[:nbytes] for t in toks)
+                d = np.frombuffer(raw, dtype=np.uint8).reshape(
+                    len(toks), nbytes
                 )
+                # hex char order: char 2i = high nibble of byte i,
+                # char 2i+1 = low nibble
+                nib = np.empty((len(toks), nbytes * 2), dtype=np.uint8)
+                nib[:, 0::2] = d >> 4
+                nib[:, 1::2] = d & 15
+                ones = ((nib[:, nibidx] >> shift) & 1).sum(
+                    axis=0, dtype=np.int64
+                )
+                # tally = ones - zeros = 2*ones - T; bit set iff > 0
+                set_bits = np.nonzero(2 * ones - len(toks) > 0)[0]
+                val = 0
+                for b in set_bits:
+                    val |= 1 << int(b)
+                if val >= 1 << 63:  # int64 two's-complement wrap,
+                    val -= 1 << 64  # matching the JVM shiftleft sum
+                out_row.append(row)
+                out_sh.append(val)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    id_arr.take(numeric(out_row, pa.int64())),
+                    numeric(out_sh, pa.int64()),
+                ],
+                names=[id_col, "simhash"],
+            )
 
-        return _spread(
-            docs.select(F.col(id_col), F.col(text_col)), heavy=True
-        ).mapInArrow(_simhash_kernel, out_schema)
-
-    toks = _spread(docs.select(F.col(id_col), F.col(text_col)), heavy=True).select(
-        F.col(id_col), F.explode(_norm_tokens(text_col)).alias("tok")
-    )
-    h = F.xxhash64("tok")
-    # Per-token ±1 vote per bit; bit positions are Python literals
-    # so shiftright gets the int it requires.
-    bit_votes = F.array(
-        *[
-            F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            for b in range(bits)
-        ]
-    )
-    votes = toks.select(
-        F.col(id_col), F.posexplode(bit_votes).alias("bit", "vote")
-    )
-    tallies = votes.groupBy(id_col, "bit").agg(F.sum("vote").alias("tally"))
-    return tallies.groupBy(id_col).agg(
-        F.sum(
-            F.when(
-                F.col("tally") > 0,
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))"),
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias("simhash")
-    )
+    return _spread(
+        docs.select(F.col(id_col), F.col(text_col)), heavy=True
+    ).mapInArrow(_simhash_kernel, out_schema)
 
 
 def simhash_candidate_pairs(
@@ -714,7 +638,6 @@ def simhash_candidate_pairs(
     bits: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_md5: bool = False,
 ) -> DataFrame:
     """Pairs whose simhash matches on >= 1 of ``bands`` bit-blocks.
 
@@ -724,7 +647,7 @@ def simhash_candidate_pairs(
     """
     block_bits = bits // bands
     mask = (1 << block_bits) - 1
-    sh = simhash(docs, bits, text_col, id_col, use_md5=use_md5)
+    sh = simhash(docs, bits, text_col, id_col)
     # One pass over the (shuffle-produced) simhash column — a unionAll
     # would recompute the whole simhash aggregation per band.
     block_arr = F.array(
@@ -858,7 +781,6 @@ def incremental_lsh_candidates(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_md5: bool = True,
 ) -> DataFrame:
     """(id_new, id_old) near-dup candidates between a NEW batch and an
     EXISTING corpus — the daily-ingest dedup pattern.
@@ -872,8 +794,8 @@ def incremental_lsh_candidates(
     incremental dedup costs O(batch + matched buckets), not
     O(corpus²) or even O(corpus).
     """
-    sb = minhash_signatures(batch, num_hashes, n, text_col, id_col, use_md5)
-    si = minhash_signatures(index, num_hashes, n, text_col, id_col, use_md5)
+    sb = minhash_signatures(batch, num_hashes, n, text_col, id_col)
+    si = minhash_signatures(index, num_hashes, n, text_col, id_col)
     bb = lsh_band_buckets(sb, num_hashes, bands, id_col).select(
         F.col(id_col).alias("id_new"), "band_idx", "bucket"
     )

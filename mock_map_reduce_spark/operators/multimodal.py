@@ -3,7 +3,7 @@ REAL pure-stdlib media codecs on the decode seam.
 
 Media columns (image/audio/video) are carried as ``binary`` payloads
 with a typed metadata struct; decode / feature-extraction runs as
-Arrow-batched Pandas functions over ``mapInPandas``. Decoding is
+Arrow-batched functions over ``mapInArrow``. Decoding is
 real, with zero codec dependencies: netpbm PPM(P6) + 24-bit BMP
 images, RIFF/WAVE PCM audio, and concatenated-PPM-stream video
 (ffmpeg's image2pipe shape); exotic codecs (JPEG/PNG) plug into the
@@ -14,21 +14,25 @@ Scale notes (100 TB of media): payloads dominate row size — they may
 move at most ONCE through the adaptive ``spread`` round-robin when the
 source is under-parallel (the same tradeoff as every heavy operator),
 and must NEVER enter a keyed shuffle (select metadata before groupBy /
-join; feature-extract first, then drop the payload). ``mapInPandas``
+join; feature-extract first, then drop the payload). ``mapInArrow``
 processes Arrow batches, so executor memory is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` x payload size —
 size that down for video-scale blobs.
+
+Worker memory: the kernels read payloads with ``to_pylist`` and build
+their output with ``functions/arrowcols``, so a Python worker that
+runs them never imports pandas (about 39 MB of RSS per worker that
+``mapInPandas`` would load). A null payload raises ValueError naming
+its id.
 """
 
 from __future__ import annotations
 
 import sys
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from mock_map_reduce_spark.functions.arrowcols import rows_batch, schema as arrow_schema
 from mock_map_reduce_spark.functions.partitioning import spread
 from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
@@ -36,7 +40,7 @@ from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 def _ship_module_by_value() -> None:
     """Pickle this module's functions BY VALUE into worker closures.
 
-    ``image_features``' mapInPandas closure calls the module-level
+    ``image_features``' mapInArrow closure calls the module-level
     codec functions (decode_image & co). cloudpickle serializes
     module-level functions by REFERENCE, so executors would need the
     repo on their sys.path — true when the driver process happens to
@@ -54,6 +58,23 @@ def _ship_module_by_value() -> None:
     except Exception:  # noqa: BLE001 - best-effort; cwd import still works
         pass
 
+
+def _payloads(batch, id_col: str, kind: str) -> tuple[list, list[bytes]]:
+    """(ids, payloads) of one Arrow batch as Python values. A null
+    payload raises ValueError naming its id."""
+    ids = batch.column(batch.schema.get_field_index(id_col)).to_pylist()
+    payloads = batch.column(batch.schema.get_field_index("payload")).to_pylist()
+    for doc_id, payload in zip(ids, payloads):
+        if payload is None:
+            raise ValueError(f"{kind} payload of {id_col} {doc_id} is null")
+    return ids, payloads
+
+
+def _ids(batch, id_col: str) -> list:
+    return batch.column(batch.schema.get_field_index(id_col)).to_pylist()
+
+
+PAYLOAD_SCHEMA = "doc_id long, payload binary"
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, mean_byte double, std_byte double, "
@@ -260,21 +281,23 @@ IMAGE_FEATURE_SCHEMA = (
 def image_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode image payloads (PPM/BMP via ``decode_image``) and emit
     per-image pixel statistics — the real decode path exercised end to
-    end, Arrow-batched, payload dropped before anything shuffles."""
+    end, Arrow-batched (``mapInArrow``, no pandas in the worker),
+    payload dropped before anything shuffles."""
+    out = arrow_schema(IMAGE_FEATURE_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(batches):
         reuse_zip_directories()
         import numpy as np
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                w, h, rgb = decode_image(bytes(payload))
+            for doc_id, payload in zip(*_payloads(batch, id_col, "image")):
+                w, h, rgb = decode_image(payload)
                 px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3).astype(np.float64)
                 means = px.mean(axis=(0, 1))
                 rows.append(
                     (
-                        int(doc_id),
+                        doc_id,
                         w,
                         h,
                         float(means[0]),
@@ -283,14 +306,9 @@ def image_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
                         float(px[0, :, 1].mean()),
                     )
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "mean_r", "mean_g", "mean_b", "top_row_g",
-                ],
-            )
+            yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInPandas(
+    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(
         extract, IMAGE_FEATURE_SCHEMA
     )
 
@@ -299,19 +317,14 @@ def synthesize_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     """Attach a deterministic image payload per doc id (the encoder
     side of the codec pair; ``image_features`` decodes it back)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": [synthesize_image(int(i)) for i in pdf[id_col]],
-                }
-            )
+    out = arrow_schema(PAYLOAD_SCHEMA)
 
-    return spread(docs.select(id_col), heavy=True).mapInPandas(
-        build, "doc_id long, payload binary"
-    )
+    def build(batches):
+        reuse_zip_directories()
+        for batch in batches:
+            yield rows_batch([(i, synthesize_image(i)) for i in _ids(batch, id_col)], out)
+
+    return spread(docs.select(id_col), heavy=True).mapInArrow(build, PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -398,19 +411,20 @@ AUDIO_FEATURE_SCHEMA = (
 def audio_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode WAV payloads and emit per-clip statistics (rate from the
     fmt chunk, moments from the PCM data) — payload never shuffles."""
+    out = arrow_schema(AUDIO_FEATURE_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(batches):
         reuse_zip_directories()
         import numpy as np
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                rate, samples = decode_wav(bytes(payload))
-                arr = np.asarray(samples, dtype=np.float64)
+            for doc_id, payload in zip(*_payloads(batch, id_col, "audio")):
+                rate, samples = decode_wav(payload)
+                arr = np.array(samples, dtype=np.float64)
                 rows.append(
                     (
-                        int(doc_id),
+                        doc_id,
                         rate,
                         int(arr.size),
                         float(arr.mean()),
@@ -418,14 +432,9 @@ def audio_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
                         float((arr * arr).mean()),
                     )
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "mean_sample", "peak", "energy",
-                ],
-            )
+            yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInPandas(
+    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(
         extract, AUDIO_FEATURE_SCHEMA
     )
 
@@ -433,19 +442,14 @@ def audio_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def synthesize_audio_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a deterministic WAV payload per doc id."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": [synthesize_audio(int(i)) for i in pdf[id_col]],
-                }
-            )
+    out = arrow_schema(PAYLOAD_SCHEMA)
 
-    return spread(docs.select(id_col), heavy=True).mapInPandas(
-        build, "doc_id long, payload binary"
-    )
+    def build(batches):
+        reuse_zip_directories()
+        for batch in batches:
+            yield rows_batch([(i, synthesize_audio(i)) for i in _ids(batch, id_col)], out)
+
+    return spread(docs.select(id_col), heavy=True).mapInArrow(build, PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -477,26 +481,23 @@ def video_frame_features(
     emit one row per sampled frame (the 1-to-N video primitive with a
     REAL frame decoder). Payloads are dropped at the operator edge;
     only per-frame feature rows flow on."""
+    out = arrow_schema(VIDEO_FRAME_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(batches):
         reuse_zip_directories()
         import numpy as np
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                for t, (w, h, rgb) in enumerate(decode_ppm_stream(bytes(payload))):
+            for doc_id, payload in zip(*_payloads(batch, id_col, "video")):
+                for t, (w, h, rgb) in enumerate(decode_ppm_stream(payload)):
                     if t % stride:
                         continue
                     px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                    rows.append(
-                        (int(doc_id), t, w, h, float(px[..., 2].mean()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "t", "width", "height", "frame_mean_b"]
-            )
+                    rows.append((doc_id, t, w, h, float(px[..., 2].mean())))
+            yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInPandas(
+    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(
         extract, VIDEO_FRAME_SCHEMA
     )
 
@@ -504,19 +505,14 @@ def video_frame_features(
 def synthesize_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a deterministic PPM-stream payload per doc id."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "payload": [synthesize_video(int(i)) for i in pdf[id_col]],
-                }
-            )
+    out = arrow_schema(PAYLOAD_SCHEMA)
 
-    return spread(docs.select(id_col), heavy=True).mapInPandas(
-        build, "doc_id long, payload binary"
-    )
+    def build(batches):
+        reuse_zip_directories()
+        for batch in batches:
+            yield rows_batch([(i, synthesize_video(i)) for i in _ids(batch, id_col)], out)
+
+    return spread(docs.select(id_col), heavy=True).mapInArrow(build, PAYLOAD_SCHEMA)
 
 
 _ship_module_by_value()
@@ -525,12 +521,13 @@ _ship_module_by_value()
 def byte_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic stand-in feature extractor over raw payload bytes.
 
-    mapInPandas: one Arrow batch in, one out — the exact plumbing a
+    mapInArrow: one Arrow batch in, one out — the exact plumbing a
     real decoder uses (same schema contract, same batch shape), with
     byte-histogram moments standing in for pixel statistics.
     """
+    out = arrow_schema(FEATURE_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(batches):
         reuse_zip_directories()
         import math
 
@@ -540,13 +537,13 @@ def byte_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
             # round-half-away for non-negative x — matches SQL round()
             return math.floor(x * 1e6 + 0.5) / 1e6
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(*_payloads(batch, id_col, "media")):
                 arr = np.frombuffer(payload, dtype=np.uint8)
                 n = int(arr.size)
                 if n == 0:
-                    rows.append((int(doc_id), 0, 0.0, 0.0, 0.0))
+                    rows.append((doc_id, 0, 0.0, 0.0, 0.0))
                     continue
                 # EXACT integer sums -> the float expressions below are
                 # order-proof and mirror the DuckDB oracle tree exactly
@@ -560,19 +557,16 @@ def byte_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 t = sum(int(c) * math.log2(int(c)) for c in counts if c)
                 rows.append(
                     (
-                        int(doc_id),
+                        doc_id,
                         n,
                         r6(s / n),
                         r6(math.sqrt(sq / n - r * r)),
                         r6(math.log2(n) - t / n),
                     )
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "mean_byte", "std_byte", "entropy_proxy"],
-            )
+            yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInPandas(extract, FEATURE_SCHEMA)
+    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(extract, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx long, frame_mean double"
@@ -583,30 +577,31 @@ def frame_sample(media: DataFrame, frame_size: int = 256, stride: int = 2, id_co
 
     The video-pipeline primitive: chunk the payload into fixed-size
     "frames", keep every ``stride``-th, emit per-frame features. Real
-    codecs plug into the same mapInPandas seam (decode_image); the
+    codecs plug into the same mapInArrow seam (decode_image); the
     chunking stand-in keeps batch shapes and the 1-to-N contract real.
 
     100 TB note: output fan-out is rows x frames — select/filter frame
     features BEFORE any join or shuffle; never carry the payload past
     this operator.
     """
-    import numpy as np
+    out = arrow_schema(FRAME_SCHEMA)
 
     def sample(batches):
         reuse_zip_directories()
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_mean": []}
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+        import numpy as np
+
+        for batch in batches:
+            rows = []
+            for doc_id, payload in zip(*_payloads(batch, id_col, "media")):
                 arr = np.frombuffer(payload, dtype=np.uint8)
                 n_frames = max((len(arr) + frame_size - 1) // frame_size, 0)
                 for fi in range(0, n_frames, stride):
                     chunk = arr[fi * frame_size : (fi + 1) * frame_size]
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(fi)
-                    out["frame_mean"].append(float(np.round(chunk.mean(), 6)) if len(chunk) else 0.0)
-            yield pd.DataFrame(out)
+                    mean = float(np.round(chunk.mean(), 6)) if len(chunk) else 0.0
+                    rows.append((doc_id, fi, mean))
+            yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInPandas(sample, FRAME_SCHEMA)
+    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(sample, FRAME_SCHEMA)
 
 
 RESIZE_SCHEMA = "doc_id long, payload binary, n_bytes long"
@@ -621,16 +616,15 @@ def resize_payload(media: DataFrame, factor: int = 4, id_col: str = "doc_id") ->
     the ORIGINAL payload is dropped from the plan immediately (at
     100 TB the resize exists precisely to shrink what flows onward).
     """
-    import numpy as np
+    out = arrow_schema(RESIZE_SCHEMA)
 
     def shrink(batches):
         reuse_zip_directories()
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                arr = np.frombuffer(payload, dtype=np.uint8)[::factor]
-                b = arr.tobytes()
-                rows.append((int(doc_id), b, len(b)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "n_bytes"])
+            for doc_id, payload in zip(*_payloads(batch, id_col, "media")):
+                b = payload[::factor]
+                rows.append((doc_id, b, len(b)))
+            yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInPandas(shrink, RESIZE_SCHEMA)
+    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(shrink, RESIZE_SCHEMA)

@@ -25,6 +25,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from mock_map_reduce_spark.functions.arrowcols import fixed_dim, numeric
 from mock_map_reduce_spark.functions.partitioning import spread
 from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
@@ -498,37 +499,25 @@ def pq_codes(
             n = tbl.num_rows
             if n == 0:
                 continue
-            ecol = tbl.column(tbl.schema.get_field_index("e"))
-            flat = np.asarray(ecol.values, dtype=np.float64)
-            offs = np.asarray(ecol.offsets, dtype=np.int64)
-            # Dense-layout guard: raise on ragged/null rows instead of
-            # silently mis-coding every later vector (round-10 VERDICT
-            # hardening item).
-            if ecol.null_count or not np.all(np.diff(offs) == dim):
-                raise ValueError(
-                    "pq_codes kernel requires dense fixed-dim "
-                    f"null-free embedding lists (dim {dim}); got "
-                    "ragged or null rows"
-                )
-            E = flat[offs[0] : offs[0] + n * dim].reshape(n, dim)
+            # raises on ragged/null rows instead of silently mis-coding
+            # every later vector
+            E = fixed_dim(tbl.column(tbl.schema.get_field_index("e")), "pq_codes", dim=dim)
             idc = tbl.column(tbl.schema.get_field_index(id_col))
-            out_id, out_s, out_code, out_d = [], [], [], []
+            out_code, out_d = [], []
             for s in range(m):
                 dists = np.zeros((n, C.shape[0]))
                 for i in range(s * sub, (s + 1) * sub):
                     diff = E[:, i, None] - C[None, :, i]
                     dists = dists + diff * diff
                 best = np.argmin(dists, axis=1)
-                out_id.append(idc)
-                out_s.append(np.full(n, s, dtype=np.int32))
                 out_code.append(code_ids[best])
                 out_d.append(dists[np.arange(n), best])
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.concat_arrays([pa.array(c) if not isinstance(c, pa.Array) else c for c in out_id]),
-                    pa.array(np.concatenate(out_s), type=pa.int32()),
-                    pa.array(np.concatenate(out_code), type=pa.int64()),
-                    pa.array(np.concatenate(out_d), type=pa.float64()),
+                    pa.concat_arrays([idc] * m),
+                    numeric(np.repeat(np.arange(m), n), pa.int32()),
+                    numeric(np.concatenate(out_code), pa.int64()),
+                    numeric(np.concatenate(out_d), pa.float64()),
                 ],
                 names=[id_col, "subspace", "code", "d"],
             )

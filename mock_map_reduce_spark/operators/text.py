@@ -283,7 +283,8 @@ def repetition_ratio(
     """
     # Materialize the token array as a real column first — the gram
     # transform references it per element, and an inline tokenizer
-    # would re-run the regex split once per gram (see dedup._grams_of).
+    # would re-run the regex split once per gram: a higher-order
+    # function's lambda re-evaluates its operand expression per element.
     base = docs_in.select(F.col(id_col), _word_tokens(text_col).alias("__w"))
     grams = F.when(
         F.size("__w") >= n,
@@ -589,7 +590,8 @@ def bpe_train(
         # transform lambda (`split(seq,' ')[i+1]`), which re-ran the
         # split once PER ELEMENT (no common-subexpression elimination
         # inside higher-order functions) — the same O(tokens²) trap
-        # _grams_of documents. Pair strings are unchanged.
+        # repetition_ratio's gram transform avoids. Pair strings are
+        # unchanged.
         pairs = (
             cur.select("freq", F.split("seq", " ").alias("__t"))
             .select(

@@ -2,8 +2,7 @@
 
 The oracle gate covers exact/minhash/jaccard equivalence with DuckDB;
 these tests pin semantic behavior — planted near-dups must be found,
-unrelated docs must not collide — including the xxhash64 paths the
-oracle can't check.
+unrelated docs must not collide — and the worker kernels' edge cases.
 """
 
 from __future__ import annotations
@@ -180,8 +179,9 @@ def test_lsh_finds_planted_near_dups(docs):
     assert not any(4 in p or 5 in p for p in pairs)  # unrelated/short never
 
 
-def test_lsh_xxhash_fast_path_agrees_on_planted(docs):
-    pairs = {(r.id_a, r.id_b) for r in dd.lsh_candidate_pairs(docs, bands=8, use_md5=False).collect()}
+def test_lsh_precomputed_signatures_agree_on_planted(docs):
+    sig = dd.minhash_signatures(docs)
+    pairs = {(r.id_a, r.id_b) for r in dd.lsh_candidate_pairs(docs, bands=8, signatures=sig).collect()}
     assert {(1, 2), (1, 3), (2, 3)} <= pairs
     assert not any(4 in p for p in pairs)
 
@@ -298,12 +298,12 @@ def test_simhash_md5_path_matches_planted_behavior(spark):
         Row(doc_id=4, text=UNRELATED),
     ]
     df = spark.createDataFrame(rows)
-    sh = {r.doc_id: r.simhash for r in dd.simhash(df, use_md5=True).collect()}
+    sh = {r.doc_id: r.simhash for r in dd.simhash(df).collect()}
     assert sh[1] == sh[2]          # identical text -> identical digest
     assert sh[1] != sh[4]          # unrelated text -> different digest
     pairs = {
         (r.id_a, r.id_b)
-        for r in dd.simhash_candidate_pairs(df, use_md5=True).collect()
+        for r in dd.simhash_candidate_pairs(df).collect()
     }
     assert (1, 2) in pairs
 
@@ -439,7 +439,7 @@ def test_lsh_recall_audit_catches_planted_dups(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     truth = dd.ngram_jaccard_pairs(docs, 3, 0.1, max_doc_freq=64)
-    cand = dd.lsh_candidate_pairs(docs, 16, 4, 3, use_md5=True)
+    cand = dd.lsh_candidate_pairs(docs, 16, 4, 3)
     flagged = truth.join(cand.withColumn("caught", F.lit(1)), ["id_a", "id_b"], "left")
     got = {
         r.j_bucket: (r.n_pairs, r.caught_sum)
