@@ -200,13 +200,17 @@ LEFT JOIN ent e USING (doc_id)
 """,
 )
 def q_multimodal_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The resize → feature-extract CHAIN: two Arrow-batched
-    mapInArrow stages composed — resize_payload keeps every 4th
-    payload byte (the media-downscale stand-in), byte_features reduces
-    the RESIZED payload to moments — with the oracle stating the same
-    statistics over positions 1, 5, 9, … of the source bytes. Proves
-    payload flows correctly BETWEEN Arrow-UDF stages (dtype, batch
-    shape, binary round-trip), not just through one.
+    """The resize → feature-extract CHAIN: two Arrow-batched kernels
+    composed — resize_payload keeps every 4th payload byte (the
+    media-downscale stand-in), byte_features reduces the RESIZED
+    payload to moments — with the oracle stating the same statistics
+    over positions 1, 5, 9, … of the source bytes. Both kernels run in
+    ONE Python worker (``arrow_map`` fuses them into one mapInArrow),
+    which checks the resized batches against the declared resize
+    schema before byte_features reads them; the JVM round trip between
+    two separate maps (binary column back through Spark) is covered by
+    ``tests/test_multimodal.py``, which rebuilds the chain with a
+    filter in between and compares rows.
 
     Scale: the resize exists to shrink what flows onward — payload
     drops to 1/4 before features, and only (id, 4 scalars) survive

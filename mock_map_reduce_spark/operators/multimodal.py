@@ -3,7 +3,11 @@ REAL pure-stdlib media codecs on the decode seam.
 
 Media columns (image/audio/video) are carried as ``binary`` payloads
 with a typed metadata struct; decode / feature-extraction runs as
-Arrow-batched functions over ``mapInArrow``. Decoding is
+Arrow-batched kernels through ``functions/arrowmap.arrow_map``, one
+``mapInArrow`` each. A map applied straight to another map's output
+(synthesize -> decode, resize -> features) runs in the same Python
+worker as that map: one ``MapInArrow``, so the payload is made and
+read without crossing back to the JVM in between. Decoding is
 real, with zero codec dependencies: netpbm PPM(P6) + 24-bit BMP
 images, RIFF/WAVE PCM audio, and concatenated-PPM-stream video
 (ffmpeg's image2pipe shape); exotic codecs (JPEG/PNG) plug into the
@@ -22,8 +26,10 @@ size that down for video-scale blobs.
 Worker memory: the kernels read payloads with ``to_pylist`` and build
 their output with ``functions/arrowcols``, so a Python worker that
 runs them never imports pandas (about 39 MB of RSS per worker that
-``mapInPandas`` would load). A null payload raises ValueError naming
-its id.
+``mapInPandas`` would load), and a fused chain holds one worker per
+task, not one per map. A null payload raises ValueError naming its id;
+a null id given to a synthesizer raises ValueError naming the id
+column.
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ import sys
 from pyspark.sql import DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.arrowcols import rows_batch, schema as arrow_schema
-from mock_map_reduce_spark.functions.partitioning import spread
+from mock_map_reduce_spark.functions.arrowmap import arrow_map
 from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 
@@ -70,8 +76,13 @@ def _payloads(batch, id_col: str, kind: str) -> tuple[list, list[bytes]]:
     return ids, payloads
 
 
-def _ids(batch, id_col: str) -> list:
-    return batch.column(batch.schema.get_field_index(id_col)).to_pylist()
+def _ids(batch, id_col: str, kind: str) -> list:
+    """The ids of one Arrow batch as Python values. A null id raises
+    ValueError naming the id column."""
+    ids = batch.column(batch.schema.get_field_index(id_col))
+    if ids.null_count:
+        raise ValueError(f"null {id_col}: no {kind} payload to synthesize")
+    return ids.to_pylist()
 
 
 PAYLOAD_SCHEMA = "doc_id long, payload binary"
@@ -308,9 +319,7 @@ def image_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 )
             yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(
-        extract, IMAGE_FEATURE_SCHEMA
-    )
+    return arrow_map(extract, media, [id_col, "payload"], IMAGE_FEATURE_SCHEMA)
 
 
 def synthesize_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -322,9 +331,9 @@ def synthesize_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     def build(batches):
         reuse_zip_directories()
         for batch in batches:
-            yield rows_batch([(i, synthesize_image(i)) for i in _ids(batch, id_col)], out)
+            yield rows_batch([(i, synthesize_image(i)) for i in _ids(batch, id_col, "image")], out)
 
-    return spread(docs.select(id_col), heavy=True).mapInArrow(build, PAYLOAD_SCHEMA)
+    return arrow_map(build, docs, [id_col], PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -434,9 +443,7 @@ def audio_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 )
             yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(
-        extract, AUDIO_FEATURE_SCHEMA
-    )
+    return arrow_map(extract, media, [id_col, "payload"], AUDIO_FEATURE_SCHEMA)
 
 
 def synthesize_audio_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -447,9 +454,9 @@ def synthesize_audio_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     def build(batches):
         reuse_zip_directories()
         for batch in batches:
-            yield rows_batch([(i, synthesize_audio(i)) for i in _ids(batch, id_col)], out)
+            yield rows_batch([(i, synthesize_audio(i)) for i in _ids(batch, id_col, "audio")], out)
 
-    return spread(docs.select(id_col), heavy=True).mapInArrow(build, PAYLOAD_SCHEMA)
+    return arrow_map(build, docs, [id_col], PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -497,9 +504,7 @@ def video_frame_features(
                     rows.append((doc_id, t, w, h, float(px[..., 2].mean())))
             yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(
-        extract, VIDEO_FRAME_SCHEMA
-    )
+    return arrow_map(extract, media, [id_col, "payload"], VIDEO_FRAME_SCHEMA)
 
 
 def synthesize_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -510,9 +515,9 @@ def synthesize_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     def build(batches):
         reuse_zip_directories()
         for batch in batches:
-            yield rows_batch([(i, synthesize_video(i)) for i in _ids(batch, id_col)], out)
+            yield rows_batch([(i, synthesize_video(i)) for i in _ids(batch, id_col, "video")], out)
 
-    return spread(docs.select(id_col), heavy=True).mapInArrow(build, PAYLOAD_SCHEMA)
+    return arrow_map(build, docs, [id_col], PAYLOAD_SCHEMA)
 
 
 _ship_module_by_value()
@@ -566,7 +571,7 @@ def byte_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 )
             yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(extract, FEATURE_SCHEMA)
+    return arrow_map(extract, media, [id_col, "payload"], FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx long, frame_mean double"
@@ -601,7 +606,7 @@ def frame_sample(media: DataFrame, frame_size: int = 256, stride: int = 2, id_co
                     rows.append((doc_id, fi, mean))
             yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(sample, FRAME_SCHEMA)
+    return arrow_map(sample, media, [id_col, "payload"], FRAME_SCHEMA)
 
 
 RESIZE_SCHEMA = "doc_id long, payload binary, n_bytes long"
@@ -627,4 +632,4 @@ def resize_payload(media: DataFrame, factor: int = 4, id_col: str = "doc_id") ->
                 rows.append((doc_id, b, len(b)))
             yield rows_batch(rows, out)
 
-    return spread(media.select(id_col, "payload"), heavy=True).mapInArrow(shrink, RESIZE_SCHEMA)
+    return arrow_map(shrink, media, [id_col, "payload"], RESIZE_SCHEMA)

@@ -143,22 +143,23 @@ def test_offsets_past_int32_raise_a_clear_error():
 
 def _kernel(spark, monkeypatch, outer: str, run):
     """Call ``run()`` and return the function an operator defined in
-    ``outer`` handed to mapInArrow or applyInArrow."""
+    ``outer`` handed to mapInArrow, applyInArrow or arrow_map."""
     df = spark.range(1)
     seen = []
 
-    def capture(m, cls, method):
-        real = getattr(cls, method)
+    def capture(m, owner, name):
+        real = getattr(owner, name)
 
-        def wrapper(self, fn, *args, **kwargs):
-            seen.append(fn)
-            return real(self, fn, *args, **kwargs)
+        def wrapper(*args, **kwargs):
+            seen.append(args[0] if owner is mm else args[1])  # arrow_map(kernel, ...)
+            return real(*args, **kwargs)
 
-        m.setattr(cls, method, wrapper)
+        m.setattr(owner, name, wrapper)
 
     with monkeypatch.context() as m:
         capture(m, type(df), "mapInArrow")  # the session's DataFrame class
         capture(m, type(df.groupBy("id")), "applyInArrow")
+        capture(m, mm, "arrow_map")
         run()
     mine = [f for f in seen if f.__qualname__.split(".<locals>.")[0] == outer]
     assert mine, f"{outer} handed no function to mapInArrow/applyInArrow"
@@ -313,7 +314,9 @@ KERNELS = {
 def test_every_arrow_kernel_is_in_the_pandas_free_list(monkeypatch):
     """(file, top-level def) of every mapInArrow/applyInArrow site the
     zip-import guard finds under operators/ and in catalog/scale.py."""
-    monkeypatch.setattr(test_zipimports, "WORKER_METHODS", {"mapInArrow", "applyInArrow"})
+    monkeypatch.setattr(
+        test_zipimports, "WORKER_METHODS", {"mapInArrow", "applyInArrow", "arrow_map"}
+    )
     sites = set()
     paths = sorted((ENGINE / "operators").glob("*.py")) + [ENGINE / "catalog" / "scale.py"]
     for path in paths:
@@ -347,11 +350,7 @@ print(json.dumps({"loaded": loaded, "pandas": "pandas" in sys.modules,
 """
 
 
-@pytest.mark.parametrize("site", sorted(KERNELS), ids=lambda s: s[1])
-def test_kernel_runs_without_pandas(spark, sf_dir, monkeypatch, tmp_path, site):
-    build, make_input, grouped = KERNELS[site]
-    fn = _kernel(spark, monkeypatch, site[1], lambda: build(spark, sf_dir))
-    batch = make_input()
+def _run_fresh(fn, grouped: bool, batch: pa.RecordBatch, tmp_path) -> dict:
     sink = pa.BufferOutputStream()
     with pa.ipc.new_stream(sink, batch.schema) as w:
         w.write_batch(batch)
@@ -368,7 +367,28 @@ def test_kernel_runs_without_pandas(spark, sf_dir, monkeypatch, tmp_path, site):
     got = json.loads(proc.stdout)
     assert not got["loaded"], "unpickling the kernel imported pandas"
     assert got["rows"] > 0
+    return got
+
+
+@pytest.mark.parametrize("site", sorted(KERNELS), ids=lambda s: s[1])
+def test_kernel_runs_without_pandas(spark, sf_dir, monkeypatch, tmp_path, site):
+    build, make_input, grouped = KERNELS[site]
+    fn = _kernel(spark, monkeypatch, site[1], lambda: build(spark, sf_dir))
+    got = _run_fresh(fn, grouped, make_input(), tmp_path)
     assert not got["pandas"], f"{site[1]}'s kernel imported pandas"
+
+
+def test_fused_chain_runs_without_pandas(spark, monkeypatch, tmp_path):
+    """The one function a fused image chain hands to mapInArrow
+    (synthesize, schema check, select, decode) ships and runs alone."""
+    maps = []
+    cls = type(spark.range(1))
+    real = cls.mapInArrow
+    monkeypatch.setattr(cls, "mapInArrow", lambda df, fn, *a: maps.append(fn) or real(df, fn, *a))
+    mm.image_features(mm.synthesize_image_table(_docs(spark)))
+    got = _run_fresh(maps[-1], False, _id_batch(), tmp_path)  # the consumer's map
+    assert got["rows"] == 3
+    assert not got["pandas"], "the fused image chain imported pandas"
 
 
 @pytest.mark.parametrize(
@@ -388,4 +408,20 @@ def test_null_payload_names_its_id(spark, monkeypatch, operator, synth, kind):
         payload=ac.column([synth(4), None], pa.binary()),
     )
     with pytest.raises(ValueError, match=f"^{kind} payload of doc_id 5 is null$"):
+        list(fn([batch]))
+
+
+@pytest.mark.parametrize(
+    "synthesizer, kind",
+    [
+        (mm.synthesize_image_table, "image"),
+        (mm.synthesize_audio_table, "audio"),
+        (mm.synthesize_video_table, "video"),
+    ],
+)
+def test_null_id_names_its_column(spark, monkeypatch, synthesizer, kind):
+    fn = _kernel(spark, monkeypatch, synthesizer.__name__, lambda: synthesizer(_docs(spark)))
+    monkeypatch.setattr(mm, "reuse_zip_directories", lambda: False)  # worker-only set-up
+    batch = _batch(doc_id=ac.numeric([4, 0], pa.int64(), valid=[True, False]))
+    with pytest.raises(ValueError, match=f"^null doc_id: no {kind} payload to synthesize$"):
         list(fn([batch]))

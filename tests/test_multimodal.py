@@ -3,11 +3,18 @@
 from __future__ import annotations
 
 import math
+import os
+import uuid
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import Row, functions as F
 
+from mock_map_reduce_spark import registry
+from mock_map_reduce_spark.functions.arrowmap import arrow_map
 from mock_map_reduce_spark.operators import multimodal as mm
+from mock_map_reduce_spark.plans import executed_plan
+from mock_map_reduce_spark.sources import load_table
 
 
 @pytest.fixture(scope="module")
@@ -281,3 +288,93 @@ def test_media_payloads_survive_parquet_round_trip(spark, tmp_path):
         direct = sorted(map(tuple, feats(synth(docs)).collect()))
         reread = sorted(map(tuple, feats(stored).collect()))
         assert direct == reread, name
+
+
+# -- back-to-back maps share one Python worker (functions/arrowmap.py) --
+
+# Each chain entry, rebuilt with a transformation between its two maps,
+# which keeps them apart: the JVM round trip between two workers.
+UNFUSED = {
+    "multimodal_image_features": lambda docs: mm.image_features(
+        mm.synthesize_image_table(docs).filter(F.lit(True))
+    ),
+    "multimodal_audio_features": lambda docs: mm.audio_features(
+        mm.synthesize_audio_table(docs).filter(F.lit(True))
+    ),
+    "multimodal_video_frames": lambda docs: mm.video_frame_features(
+        mm.synthesize_video_table(docs).filter(F.lit(True))
+    ),
+    "multimodal_resize_features": lambda docs: mm.byte_features(
+        mm.resize_payload(mm.attach_binary_payload(docs), factor=4).filter(F.lit(True))
+    ),
+}
+
+
+def _maps(df) -> int:
+    """MapInArrow nodes in the plan that runs (AQE prints its initial
+    plan after the final one once the query ran)."""
+    return executed_plan(df).split("== Initial Plan ==")[0].count("MapInArrow")
+
+
+@pytest.fixture(scope="module")
+def sf001(sf_dir):
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(path):
+        pytest.skip(f"{path} not present")
+    return path
+
+
+@pytest.mark.parametrize("name", sorted(UNFUSED))
+def test_chain_entry_runs_both_maps_in_one_worker(spark, sf001, name):
+    """The entry's two maps are one MapInArrow, building it runs no
+    Spark job, and its rows equal those of the two maps kept apart."""
+    registry.load_all()
+    build = registry.QUERIES[name]
+    build(spark, sf001)  # the first load of a table infers its schema in a job
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build only")
+    try:
+        fused = build(spark, sf001)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    got = sorted(map(tuple, fused.collect()))
+    assert _maps(fused) == 1
+
+    unfused = UNFUSED[name](load_table(spark, sf001, "documents"))
+    want = sorted(map(tuple, unfused.collect()))
+    assert _maps(unfused) == 2
+    assert got == want
+
+
+def test_cached_producer_is_not_fused(spark):
+    docs = spark.createDataFrame([Row(doc_id=i) for i in (3, 6, 7)])
+    produced = mm.synthesize_image_table(docs).cache()
+    try:
+        consumer = mm.image_features(produced)
+        rows = sorted(map(tuple, consumer.collect()))
+        assert "InMemoryTableScan" in executed_plan(consumer)
+    finally:
+        produced.unpersist()
+    assert rows == sorted(map(tuple, mm.image_features(mm.synthesize_image_table(docs)).collect()))
+
+
+def test_fused_map_checks_the_producer_schema(spark):
+    """Between two fused maps, a batch that is not the producer's
+    declared schema raises the ValueError Spark's boundary check would,
+    naming the producer, even when the consumer could read it."""
+
+    def narrow_ids(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays([batch.column(0).cast(pa.int32())], names=["id"])
+
+    def widen_ids(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays([batch.column(0).cast(pa.int64())], names=["id"])
+
+    producer = arrow_map(narrow_ids, spark.range(4), ["id"], "id long")
+    consumer = arrow_map(widen_ids, producer, ["id"], "id long")
+    assert _maps(consumer) == 1
+    with pytest.raises(Exception, match=r"arrow_map producer \S*narrow_ids returned id: int32"):
+        consumer.collect()

@@ -137,6 +137,7 @@ def test_zip_shipped_after_install_stays_importable(spark, tmp_path):
 
 # DataFrame / RDD methods whose function argument runs in a Python worker.
 WORKER_METHODS = {
+    "arrow_map",  # functions/arrowmap.py: its kernel argument
     "mapInArrow",
     "mapInPandas",
     "applyInPandas",
@@ -296,6 +297,8 @@ def test_every_worker_function_calls_the_helper_first():
         ("@F.pandas_udf('double')\ndef f(s):\n    reuse_zip_directories()\n    return s\n", True),
         ("def f(s):\n    return s\ng = pandas_udf(f, 'double')", False),
         ("df.mapInArrow(imported_kernel, 's')", False),
+        ("def k(b):\n    return b\narrow_map(k, df, ['doc_id'], 's')", False),
+        ("def k(b):\n    reuse_zip_directories()\n    return b\narrow_map(k, df, ['doc_id'], 's')", True),
     ],
 )
 def test_guard_catches_a_worker_function_without_the_helper(src, ok):
