@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mock_map_reduce_spark.functions.arrowcols import rows_batch, schema as arrow_schema
 from mock_map_reduce_spark.functions.materialize import materialize
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.operators.skew import salted_word_count
 from mock_map_reduce_spark.registry import query
 from mock_map_reduce_spark.sources import load_table, register_views
@@ -65,7 +64,6 @@ def q_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        reuse_zip_directories()
         m = pdf["c_acctbal"].mean()
         sd = pdf["c_acctbal"].std(ddof=0)
         out = pdf[["c_custkey", "c_mktsegment"]].copy()
@@ -383,7 +381,6 @@ def q_arrow_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = arrow_schema(out_ddl)
 
     def weighted(table: pa.Table) -> pa.Table:
-        reuse_zip_directories()
         import math
 
         et = table.column("event_type")[0].as_py()
@@ -531,7 +528,6 @@ def q_arrow_map_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
 
     def stats(batches):
-        reuse_zip_directories()
         for b in batches:
             text = b.column(b.schema.get_field_index("text"))
             yield pa.RecordBatch.from_arrays(

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.operators import clustering as cl
 from mock_map_reduce_spark.operators import text as tx
 from mock_map_reduce_spark.registry import query
@@ -602,7 +601,6 @@ def q_udtf_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="chunk_idx int, n_tokens int")
     class Chunker:
         def eval(self, text: str):
-            reuse_zip_directories()
             toks = [t for t in (text or "").split() if t]
             if not toks:
                 yield 0, 0

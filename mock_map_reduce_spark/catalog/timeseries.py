@@ -14,7 +14,6 @@ from pyspark.sql.window import Window
 from mock_map_reduce_spark.operators import timeseries as ts
 from mock_map_reduce_spark.registry import query
 from mock_map_reduce_spark.functions.localdf import local_df
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.sources import load_table
 
 _E = "e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS t, event_type, value FROM events)"
@@ -174,7 +173,6 @@ def q_asof_join_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        reuse_zip_directories()
         # left = one user's purchases, right = that user's clicks;
         # either side may be empty (cogroup is full-outer on keys).
         if left.empty or right.empty:

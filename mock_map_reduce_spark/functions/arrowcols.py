@@ -241,6 +241,6 @@ def fixed_dim(
     return numbers(vals).reshape(n, dim)
 
 
-# Ship by value, like functions/zipimports.py: a worker runs the helpers
+# Ship by value, like operators/multimodal.py: a worker runs the helpers
 # without the repo on its sys.path.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame
 
 from mock_map_reduce_spark.functions.arrowcols import schema as arrow_schema
 from mock_map_reduce_spark.functions.partitioning import spread
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 Kernel = Callable[[Iterator[pa.RecordBatch]], Iterable[pa.RecordBatch]]
 
@@ -58,7 +57,6 @@ def arrow_map(
         source, stages = spread(df.select(*columns), heavy=True), ((kernel, None, declared),)
 
     def run(batches):
-        reuse_zip_directories()
         out = stages[0][0](batches)
         for (producer, _, schema), (consumer, cols, _) in zip(stages, stages[1:]):
             out = consumer(_handed_over(out, producer, schema, cols))

@@ -18,18 +18,20 @@ gets a new importer, which reads its directory when it is created, so
 it stays importable. A zip rewritten in place with the same size and
 modification time is not noticed.
 
-The rule: every function the engine hands to a Python worker calls
-``reuse_zip_directories()`` first (``tests/test_zipimports.py`` scans
-for it).
+How the workers get it: run as ``__main__``, this module is the Python
+worker daemon. ``get_spark`` names it in ``spark.python.daemon.module``
+and puts the package's parent directory on the workers' ``PYTHONPATH``.
+The daemon installs the change once, then runs ``pyspark.daemon``'s
+``manager()``, so every worker it forks has it before its first task
+and no engine function needs to install it. A session built some other
+way uses PySpark's own daemon: the same results, with the re-read on
+every task.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 import zipimport
-
-from pyspark import cloudpickle
 
 
 def reuse_zip_directories() -> bool:
@@ -62,6 +64,10 @@ def reuse_zip_directories() -> bool:
     return True
 
 
-# Ship by value, like operators.multimodal: a worker runs the helper
-# without the repo on its sys.path.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
+if __name__ == "__main__":
+    # Worker daemon: ``sys.argv`` is left as Spark passed it, since
+    # ``pyspark.daemon`` reads the worker module to fork from argv[1].
+    reuse_zip_directories()
+    from pyspark.daemon import manager
+
+    manager()

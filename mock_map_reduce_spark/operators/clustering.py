@@ -35,7 +35,6 @@ from mock_map_reduce_spark.functions.arrowcols import decimals, fixed_dim, numbe
 from mock_map_reduce_spark.functions.localdf import local_df
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 from mock_map_reduce_spark.operators.similarity import as_double_array
 
 
@@ -83,7 +82,6 @@ def _assign_arrow(
         return v.select(*cols).filter(F.lit(False))
 
     def fn(batches):
-        reuse_zip_directories()
         C = np.asarray(cmat, dtype=np.float64)  # k × d
         ids = np.asarray(cids, dtype=np.int64)
         d = C.shape[1]
@@ -398,7 +396,6 @@ def semdedup(
     thr = float(threshold)
 
     def _dominated_ids(key, tbl):
-        reuse_zip_directories()
         import numpy as np
         import pyarrow as pa
 
@@ -534,7 +531,6 @@ def power_iteration_pc1(
     # (rows, d) matrix is a zero-copy reshape (arrowcols.fixed_dim); the
     # partial sums leave as decimal128 built from the exact Python ints.
     def _gram_partials(batches):
-        reuse_zip_directories()
         import numpy as np
         import pyarrow as pa
 

@@ -28,7 +28,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from mock_map_reduce_spark.functions.arrowcols import fixed_width, numeric, strings
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread as _spread
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 # Normalized tokens for fuzzy dedup: lowercase alphabetic runs.
 _TOKEN_RE = "[^A-Za-z]+"
@@ -98,7 +97,6 @@ def shingles(
     chunk = _GRAMS_PER_CHUNK  # read here, so a patched value ships
 
     def _gram_kernel(batches):
-        reuse_zip_directories()
         import re
 
         import pyarrow as pa
@@ -183,7 +181,6 @@ def minhash_signatures(
     )
 
     def _sig_kernel(batches):
-        reuse_zip_directories()
         import hashlib
         import re
 
@@ -572,7 +569,6 @@ def simhash(
     nib_count = bits // 4
 
     def _simhash_kernel(batches):
-        reuse_zip_directories()
         import hashlib
         import re
 

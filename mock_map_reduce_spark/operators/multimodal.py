@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.arrowcols import rows_batch, schema as arrow_schema
 from mock_map_reduce_spark.functions.arrowmap import arrow_map
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 
 def _ship_module_by_value() -> None:
@@ -297,7 +296,6 @@ def image_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     out = arrow_schema(IMAGE_FEATURE_SCHEMA)
 
     def extract(batches):
-        reuse_zip_directories()
         import numpy as np
 
         for batch in batches:
@@ -329,7 +327,6 @@ def synthesize_image_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     out = arrow_schema(PAYLOAD_SCHEMA)
 
     def build(batches):
-        reuse_zip_directories()
         for batch in batches:
             yield rows_batch([(i, synthesize_image(i)) for i in _ids(batch, id_col, "image")], out)
 
@@ -423,7 +420,6 @@ def audio_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     out = arrow_schema(AUDIO_FEATURE_SCHEMA)
 
     def extract(batches):
-        reuse_zip_directories()
         import numpy as np
 
         for batch in batches:
@@ -452,7 +448,6 @@ def synthesize_audio_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     out = arrow_schema(PAYLOAD_SCHEMA)
 
     def build(batches):
-        reuse_zip_directories()
         for batch in batches:
             yield rows_batch([(i, synthesize_audio(i)) for i in _ids(batch, id_col, "audio")], out)
 
@@ -491,7 +486,6 @@ def video_frame_features(
     out = arrow_schema(VIDEO_FRAME_SCHEMA)
 
     def extract(batches):
-        reuse_zip_directories()
         import numpy as np
 
         for batch in batches:
@@ -513,7 +507,6 @@ def synthesize_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     out = arrow_schema(PAYLOAD_SCHEMA)
 
     def build(batches):
-        reuse_zip_directories()
         for batch in batches:
             yield rows_batch([(i, synthesize_video(i)) for i in _ids(batch, id_col, "video")], out)
 
@@ -533,7 +526,6 @@ def byte_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     out = arrow_schema(FEATURE_SCHEMA)
 
     def extract(batches):
-        reuse_zip_directories()
         import math
 
         import numpy as np
@@ -592,7 +584,6 @@ def frame_sample(media: DataFrame, frame_size: int = 256, stride: int = 2, id_co
     out = arrow_schema(FRAME_SCHEMA)
 
     def sample(batches):
-        reuse_zip_directories()
         import numpy as np
 
         for batch in batches:
@@ -624,7 +615,6 @@ def resize_payload(media: DataFrame, factor: int = 4, id_col: str = "doc_id") ->
     out = arrow_schema(RESIZE_SCHEMA)
 
     def shrink(batches):
-        reuse_zip_directories()
         for batch in batches:
             rows = []
             for doc_id, payload in zip(*_payloads(batch, id_col, "media")):

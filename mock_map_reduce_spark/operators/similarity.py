@@ -27,7 +27,6 @@ from pyspark.sql.window import Window
 
 from mock_map_reduce_spark.functions.arrowcols import fixed_dim, numeric
 from mock_map_reduce_spark.functions.partitioning import spread
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
 
 
 def as_double_array(col: str | Column) -> Column:
@@ -489,7 +488,6 @@ def pq_codes(
         )
 
     def fn(batches):
-        reuse_zip_directories()
         import numpy as np
         import pyarrow as pa
 

@@ -14,6 +14,10 @@ correct in both regimes:
   DuckDB oracle (UTC-naive) bit-for-bit.
 * Arrow enabled — every Pandas UDF / toPandas crosses the JVM/Python
   boundary in columnar batches.
+* Python workers fork from the engine's daemon
+  (``functions/zipimports.py``), which stops each task re-reading
+  ``pyspark.zip`` and the Spark jar; the package's parent directory is
+  on the workers' ``PYTHONPATH`` so the daemon imports from any cwd.
 """
 
 from __future__ import annotations
@@ -21,6 +25,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Named, not imported: the daemon runs this module as ``__main__``, and
+# runpy warns when the package import has already loaded it.
+_DAEMON_MODULE = "mock_map_reduce_spark.functions.zipimports"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -65,6 +74,8 @@ def get_spark(
         # events.parquet stores ts as TIMESTAMP(NANOS), which the Spark
         # parquet reader rejects; read as long and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", _DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

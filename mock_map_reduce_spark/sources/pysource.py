@@ -39,8 +39,6 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
-
 SCHEMA = "doc_id bigint, shard int, text string, n_chars int"
 
 
@@ -101,7 +99,6 @@ class SynthDocsReader(DataSourceReader):
         return out or [Shard(0, 0, 0)]
 
     def read(self, partition: Shard):
-        reuse_zip_directories()
         for i in range(partition.start, partition.end):
             doc_id, _, text, n = synth_row(i)
             yield (doc_id, partition.index, text, n)
@@ -188,7 +185,6 @@ class JsonlDirWriter(DataSourceWriter):
         self.overwrite = overwrite
 
     def write(self, iterator) -> _TaskFile:  # noqa: ANN001
-        reuse_zip_directories()
         import json
         import os
 

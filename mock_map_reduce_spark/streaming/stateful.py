@@ -19,8 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from mock_map_reduce_spark.functions.zipimports import reuse_zip_directories
-
 RUNNING_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
 
@@ -36,7 +34,6 @@ def running_totals_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
@@ -76,7 +73,6 @@ def distinct_types_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         seen, n = state.get if state.exists else ([], 0)
         seen = set(seen)
         for pdf in pdfs:
@@ -115,7 +111,6 @@ def type_counts_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         counts = dict(state.get[0]) if state.exists else {}
         for pdf in pdfs:
             for t, c in pdf["event_type"].value_counts().items():
@@ -164,7 +159,6 @@ def scd2_stream_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         cur, since = state.get if state.exists else (None, None)
         out: list[tuple] = []
         for pdf in pdfs:
@@ -221,7 +215,6 @@ def forward_fill_stream_per_user(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         last = state.get[0] if state.exists else None
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts_us", "event_id"])
@@ -274,7 +267,6 @@ def ewma_stream_per_user(events: DataFrame, alpha: float = 0.2) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         y = state.get[0] if state.exists else None
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts_us", "event_id"])
@@ -343,7 +335,6 @@ def session_timeout_evictions(
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        reuse_zip_directories()
         if state.hasTimedOut:
             start, last, n = state.get
             state.remove()

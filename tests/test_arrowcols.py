@@ -11,6 +11,7 @@ import os
 import subprocess
 import sys
 from decimal import Decimal
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
@@ -25,8 +26,7 @@ from mock_map_reduce_spark.operators import dedup as dd
 from mock_map_reduce_spark.operators import multimodal as mm
 from mock_map_reduce_spark.operators import similarity as sim
 
-import test_zipimports
-from test_zipimports import ENGINE
+ENGINE = Path(__file__).resolve().parent.parent / "mock_map_reduce_spark"
 
 # Every output type a kernel emits.
 ALL_TYPES = "i int, l bigint, d double, s string, b binary, m decimal(38,0)"
@@ -311,22 +311,20 @@ KERNELS = {
 }
 
 
-def test_every_arrow_kernel_is_in_the_pandas_free_list(monkeypatch):
-    """(file, top-level def) of every mapInArrow/applyInArrow site the
-    zip-import guard finds under operators/ and in catalog/scale.py."""
-    monkeypatch.setattr(
-        test_zipimports, "WORKER_METHODS", {"mapInArrow", "applyInArrow", "arrow_map"}
-    )
+def test_every_arrow_kernel_is_in_the_pandas_free_list():
+    """(file, enclosing top-level def) of every mapInArrow, applyInArrow
+    and arrow_map call under operators/ and in catalog/scale.py."""
+    calls = {"mapInArrow", "applyInArrow", "arrow_map"}
     sites = set()
     paths = sorted((ENGINE / "operators").glob("*.py")) + [ENGINE / "catalog" / "scale.py"]
     for path in paths:
-        tree = ast.parse(path.read_text())
-        entries, problems = test_zipimports._worker_entry_points(tree)
-        assert not problems
-        tops = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
-        for fn in entries:
-            (top,) = [t for t in tops if t.lineno <= fn.lineno <= t.end_lineno]
-            sites.add((str(path.relative_to(ENGINE)), top.name))
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) and (
+                    getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+                ) in calls:
+                    where = top.name if isinstance(top, ast.FunctionDef) else node.lineno
+                    sites.add((str(path.relative_to(ENGINE)), where))
     assert len(sites) >= 18
     assert sites == set(KERNELS)
 
@@ -402,7 +400,6 @@ def test_fused_chain_runs_without_pandas(spark, monkeypatch, tmp_path):
 )
 def test_null_payload_names_its_id(spark, monkeypatch, operator, synth, kind):
     fn = _kernel(spark, monkeypatch, operator.__name__, lambda: operator(_media(spark, synth)))
-    monkeypatch.setattr(mm, "reuse_zip_directories", lambda: False)  # worker-only set-up
     batch = _batch(
         doc_id=ac.numeric([4, 5], pa.int64()),
         payload=ac.column([synth(4), None], pa.binary()),
@@ -421,7 +418,6 @@ def test_null_payload_names_its_id(spark, monkeypatch, operator, synth, kind):
 )
 def test_null_id_names_its_column(spark, monkeypatch, synthesizer, kind):
     fn = _kernel(spark, monkeypatch, synthesizer.__name__, lambda: synthesizer(_docs(spark)))
-    monkeypatch.setattr(mm, "reuse_zip_directories", lambda: False)  # worker-only set-up
     batch = _batch(doc_id=ac.numeric([4, 0], pa.int64(), valid=[True, False]))
     with pytest.raises(ValueError, match=f"^null doc_id: no {kind} payload to synthesize$"):
         list(fn([batch]))

@@ -104,7 +104,6 @@ def _mapinarrow_kernel(monkeypatch, df, build):
     with monkeypatch.context() as m:
         m.setattr(DataFrame, "mapInArrow", capture)
         build(df)
-    monkeypatch.setattr(dd, "reuse_zip_directories", lambda: False)  # worker-only set-up
     (fn,) = seen
     return fn
 

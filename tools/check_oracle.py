@@ -27,12 +27,6 @@ import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-# Python WORKERS inherit cwd + PYTHONPATH, not the driver's sys.path:
-# keep the repo importable on executors when the tool runs from
-# another directory (pickled Python-data-source classes need it).
-os.environ["PYTHONPATH"] = (
-    REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -153,6 +147,14 @@ def main() -> int:
         # stays the driver's local[*].
         from pyspark.sql import SparkSession
 
+        # A bare session does not get get_spark's worker PYTHONPATH, and
+        # Python workers inherit cwd + PYTHONPATH, not the driver's
+        # sys.path: keep the repo importable on executors when the tool
+        # runs from another directory (pickled Python-data-source
+        # classes need it).
+        os.environ["PYTHONPATH"] = (
+            REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
+        ).rstrip(os.pathsep)
         master = os.environ.get("MMR_VANILLA_MASTER", "local[*]")
         builder = SparkSession.builder.master(master)
         # GATE infrastructure, not an engine conf: the streaming-hash

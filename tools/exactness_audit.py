@@ -38,13 +38,6 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-# Python WORKERS inherit cwd + PYTHONPATH, not the driver's sys.path:
-# without this, running the tool from outside the repo root breaks
-# every query that ships a pickled Python class to executors (the
-# custom data source) with PYTHON_DATA_SOURCE_ERROR.
-os.environ["PYTHONPATH"] = (
-    REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
 
 from check_oracle import TABLES, _norm_cell  # noqa: E402
 
