@@ -55,14 +55,13 @@ def release(df: DataFrame) -> None:
 def materialize(
     df: DataFrame,
     cut_lineage: bool = False,
-    supersedes: DataFrame | None = None,
     eager: bool = True,
 ) -> DataFrame:
     """Pin ``df``'s result so downstream consumers reuse ONE computation,
     without sacrificing fault tolerance (see module docstring).
 
     ``cut_lineage=True`` is for PER-ROUND pins inside iterative loops
-    (k-means, BPE, connected components): with lineage kept, each
+    (k-means, connected components): with lineage kept, each
     round's plan nests every prior round's, so Catalyst analysis cost
     grows quadratically with the iteration count (measured: +31-37%
     on the semdedup/BPE bench queries when round 9 first swapped
@@ -74,11 +73,6 @@ def materialize(
     storage (HDFS/S3) — the deployment-correct backing for iterative
     lineage cuts — and every ``materialize`` call then uses it.
 
-    ``supersedes`` names the frame this pin REPLACES (the previous
-    round's pin in an iterative loop): it is released AFTER the new
-    pin is fully computed — both pin paths are eager, so the old
-    blocks are never needed again by the time release runs.
-
     ``eager=False`` (persist path only; round-10): skip the forcing
     count() — the FIRST consumer's action computes and populates the
     pin, later consumers reuse it. Correct whenever the first consumer
@@ -86,15 +80,8 @@ def materialize(
     single-threaded query builders) and nothing scoped (a temporarily
     raised conf) must be captured at pin time; it saves one full job
     per pin. Sites that force execution inside a scoped-conf window
-    (the recursive CTE) or release a superseded pin keep eager=True.
+    (the recursive CTE) keep eager=True.
     """
-    out = _materialize(df, cut_lineage, eager or supersedes is not None)
-    if supersedes is not None:
-        release(supersedes)
-    return out
-
-
-def _materialize(df: DataFrame, cut_lineage: bool, eager: bool = True) -> DataFrame:
     sc = df.sparkSession.sparkContext
     if cut_lineage:
         if sc.getCheckpointDir() is None and sc.master.startswith("local"):

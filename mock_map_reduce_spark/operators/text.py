@@ -8,10 +8,11 @@ divisions so results are bit-identical across engines.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.localdf import local_df
-from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
@@ -532,24 +533,29 @@ def bpe_train(
     Algorithm (Sennrich et al. 2016, the public BPE formulation):
     symbols start as characters; each round counts adjacent symbol
     pairs weighted by word frequency, merges the most frequent pair
-    (ties: count DESC, pair ASC — deterministic across engines and
-    retries), rewrites the sequences, repeats. Pair application is
-    canonical greedy left-to-right non-overlapping merging, realized
-    as TWO passes of space-padded ``replace``: pass one consumes the
+    (ties: count DESC, pair ASC on the space-joined pair string —
+    tokens are [a-z], so Python's str order is Spark's and DuckDB's
+    binary order), rewrites the sequences, repeats; it stops early
+    when no word has two symbols left. Pair application is canonical
+    greedy left-to-right non-overlapping merging, realized as TWO
+    passes of space-padded ``replace``: pass one consumes the
     separating space of an immediately-following occurrence, pass two
     picks those up; no new occurrence of the same pair can be created
     by a replacement (merged tokens contain no space), so two passes
     are exact.
 
-    Scale shape: ONE corpus-scale shuffle total — the word-frequency
-    groupBy (map-side combined). Every iteration after that runs on
-    the distinct-word vocabulary (≪ corpus, frequency-weighted), so
-    training cost is independent of corpus size past the first pass;
-    per round: one codegen'd pair explode + partial-agg'd count, a
-    1-row TakeOrdered collect (the driver-side merge decision, same
-    scalar pattern as k-means convergence), and a column rewrite.
-    materialize pins each round's vocabulary so plan size doesn't
-    grow with n_merges.
+    Scale shape: the word-frequency groupBy (map-side combined) is the
+    one corpus-scale pass and the only Spark work; its result, the
+    distinct-word vocabulary, is collected and the merge rounds run on
+    the driver over the (word, freq) rows (the power_iteration_pc1 split:
+    distributed accumulation, small-state iterations on the driver),
+    so training cost is independent of corpus size past the first
+    pass and no round fires a job. Limit: the driver holds the
+    vocabulary, about distinct words × average word length. The bench
+    corpora have 31 distinct words at sf0.01 and sf0.1 (sf1 from
+    tools/gen_sf.py replicates sf0.1, so it has the same 31).
+    Pair counts are recounted each round, not updated incrementally:
+    8 merges over the 31 words take about 1 ms on a 4-vCPU host.
     """
     spark = docs_in.sparkSession
     # spread(heavy=True): the tokenize+explode feeding the word-freq
@@ -563,79 +569,26 @@ def bpe_train(
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
+        .collect()
     )
-    seqs = materialize(wf.select(
-        "freq",
-        F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("seq"),
-    ))
-
-    # Round-10 loop shape: the per-round rewrite STAYS A COLUMN
-    # EXPRESSION chained onto the pinned round-0 vocabulary instead of
-    # being checkpointed every round — exactly how bpe_segment_vocab
-    # applies a learned merge list. Each round's pair-count job then
-    # re-evaluates the (rank-1) codegen'd replaces over the pinned
-    # vocab (vocabulary-sized work, ≪ the checkpoint write+read+job it
-    # replaces: the old loop ran 2 jobs/round, this runs 1). Expression
-    # depth is re-pinned every _RECHAIN_EVERY rounds so a large
-    # n_merges cannot grow the plan unboundedly. Merge decisions are
-    # identical: the same replaces produce the same strings whether
-    # applied lazily or from a checkpoint.
-    _RECHAIN_EVERY = 16
-    seq_expr = F.col("seq")
+    vocab = [(" ".join(r.word), r.freq) for r in wf]
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
-        cur = seqs.select("freq", seq_expr.alias("seq"))
-        # Round-11: split ONCE into a materialized token-array column —
-        # the previous inline form referenced split(seq,' ') inside the
-        # transform lambda (`split(seq,' ')[i+1]`), which re-ran the
-        # split once PER ELEMENT (no common-subexpression elimination
-        # inside higher-order functions) — the same O(tokens²) trap
-        # repetition_ratio's gram transform avoids. Pair strings are
-        # unchanged.
-        pairs = (
-            cur.select("freq", F.split("seq", " ").alias("__t"))
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(slice(__t, 1, size(__t) - 1),"
-                        " (x, i) -> concat(x, ' ', __t[i + 1]))"
-                    )
-                ).alias("pair"),
-            )
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("freq").alias("c"))
-            .orderBy(F.col("c").desc(), F.col("pair").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        counts: Counter[str] = Counter()
+        for seq, freq in vocab:
+            toks = seq.split(" ")
+            for a, b in zip(toks, toks[1:]):
+                counts[f"{a} {b}"] += freq
+        if not counts:
             break
-        pair, c = top[0].pair, int(top[0].c)
+        pair, c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         token = pair.replace(" ", "")
         merges.append((rank, pair, token, c))
-        padded_pair, padded_token = f" {pair} ", f" {token} "
-        applied = F.replace(
-            F.replace(
-                F.concat(F.lit(" "), seq_expr, F.lit(" ")),
-                F.lit(padded_pair),
-                F.lit(padded_token),
-            ),
-            F.lit(padded_pair),
-            F.lit(padded_token),
-        )
-        seq_expr = F.trim(applied)
-        if rank % _RECHAIN_EVERY == 0:
-            seqs = materialize(
-                seqs.select("freq", seq_expr.alias("seq")),
-                cut_lineage=True,
-                supersedes=seqs,
-            )
-            seq_expr = F.col("seq")
-
-    release(seqs)  # merges are driver-side; the vocab pin is dead
+        pp, pt = f" {pair} ", f" {token} "
+        vocab = [
+            (f" {s} ".replace(pp, pt).replace(pp, pt).strip(), freq)
+            for s, freq in vocab
+        ]
     return local_df(
         spark, merges, "merge_rank int, pair string, token string, c bigint"
     )
@@ -646,8 +599,9 @@ def bpe_segment_vocab(
 ) -> DataFrame:
     """Segment the corpus VOCABULARY with an ordered list of learned
     BPE merges: (word, n_toks) where n_toks is the word's token count
-    under the merges. Application is the same exact two-pass greedy
-    replace as training (see bpe_train).
+    under the merges. Each merge is the trainer's rewrite rule (see
+    bpe_train): the same exact two-pass space-padded greedy replace,
+    here as a column expression, so segmentation matches training.
 
     Scale shape: merges apply to DISTINCT words, not the corpus — the
     whole rewrite chain is one shuffle (the distinct) plus pure

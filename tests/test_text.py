@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -236,24 +237,43 @@ def test_entropy_uniform_distribution_is_ln_n(spark):
     assert abs(r.entropy_nats - math.log(4)) < 1e-6
 
 
-def test_bpe_train_matches_canonical_reference(spark):
+_BPE_CORPUS = [
+    "aaaa aaaa aaa banana banana bandana",
+    "aaaa banana bananas abracadabra",
+]
+
+
+@pytest.mark.parametrize(
+    "texts, n_merges, n_learned",
+    [
+        (_BPE_CORPUS, 6, 6),
+        ([], 6, 0),
+        (["a b c", None], 6, 0),
+        # every corpus word is one token after 17 merges
+        (_BPE_CORPUS, 50, 17),
+    ],
+    ids=["corpus", "empty", "no_pairs", "more_merges_than_pairs"],
+)
+def test_bpe_train_matches_canonical_reference(spark, texts, n_merges, n_learned):
     """The iterative trainer vs a pure-Python canonical BPE (Sennrich
     et al.: count pairs weighted by word freq, merge the argmax
     greedily left-to-right non-overlapping, repeat). The corpus
     plants 'aaaa'/'aaa' so consecutive overlapping occurrences — the
     case where a single naive string replace under-merges — decide
-    the learned merges."""
-    corpus = [
-        "aaaa aaaa aaa banana banana bandana",
-        "aaaa banana bananas abracadabra",
-    ]
+    the learned merges. An empty frame and a corpus with no pairs
+    (one-letter words, a null text) give a typed empty table; asking
+    for more merges than the corpus can make stops early."""
 
     def canonical_bpe(texts, n_merges):
         import re
         from collections import Counter
 
         wf = Counter(
-            w for t in texts for w in re.split(r"[^a-z]+", t.lower()) if w
+            w
+            for t in texts
+            if t is not None
+            for w in re.split(r"[^a-z]+", t.lower())
+            if w
         )
         seqs = {w: tuple(w) for w in wf}
         merges = []
@@ -280,14 +300,40 @@ def test_bpe_train_matches_canonical_reference(spark):
             seqs = out
         return merges
 
-    docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(corpus)])
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    out = tx.bpe_train(docs, n_merges=n_merges)
+    assert out.schema.simpleString() == (
+        "struct<merge_rank:int,pair:string,token:string,c:bigint>"
+    )
     got = [
         (r.merge_rank, r.pair, r.token, r.c)
-        for r in tx.bpe_train(docs, n_merges=6).orderBy("merge_rank").collect()
+        for r in out.orderBy("merge_rank").collect()
     ]
-    assert got == canonical_bpe(corpus, 6)
-    # sanity: the planted run actually exercised consecutive merging
-    assert any(t == "aa" for _, _, t, _ in got)
+    assert got == canonical_bpe(texts, n_merges)
+    assert len(got) == n_learned
+    if n_learned:
+        # sanity: the planted run actually exercised consecutive merging
+        assert any(t == "aa" for _, _, t, _ in got)
+
+
+def test_bpe_train_fires_at_most_three_jobs_and_pins_nothing(spark, sf_dir):
+    """Training is one distributed word count and a merge loop on the
+    driver: building and collecting the merge table fires at most 3
+    Spark jobs, not one per merge round, and leaves no persisted RDD."""
+    from mock_map_reduce_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    pins = sc._jsc.getPersistentRDDs().size()
+    group = f"bpe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bpe_train")
+    try:
+        rows = tx.bpe_train(docs, n_merges=8).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 8
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert sc._jsc.getPersistentRDDs().size() == pins
 
 
 def test_bpe_segment_vocab_counts(spark):
