@@ -711,12 +711,7 @@ def q_text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     [a-z] word characters, mirrored exactly in the oracle's
     length(word)."""
     docs = load_table(spark, sf_dir, "documents")
-    merges = [
-        r.pair
-        for r in tx.bpe_train(docs, n_merges=_BPE_N_MERGES)
-        .orderBy("merge_rank")
-        .collect()
-    ]
+    merges = [r.pair for r in tx.bpe_train(docs, n_merges=_BPE_N_MERGES).collect()]
     vocab = tx.bpe_segment_vocab(docs, merges)
     dwc = (
         docs.select(

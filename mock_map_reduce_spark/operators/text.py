@@ -527,8 +527,8 @@ def bpe_train(
     docs_in: DataFrame, n_merges: int, text_col: str = "text"
 ) -> DataFrame:
     """Train ``n_merges`` byte-pair-encoding merges over the corpus and
-    return the learned merge table (merge_rank, pair, token, c) — the
-    full iterative trainer whose single round is ``bpe_pair_counts``.
+    return the learned merge table (merge_rank, pair, token, c), its
+    rows in rank order — the full iterative trainer whose single round is ``bpe_pair_counts``.
 
     Algorithm (Sennrich et al. 2016, the public BPE formulation):
     symbols start as characters; each round counts adjacent symbol

@@ -46,59 +46,3 @@ def count_exchanges(df: DataFrame) -> int:
         if "Exchange" in line and "BroadcastExchange" not in line and "ReusedExchange" not in line
     )
 
-
-def stage_totals(spark) -> dict[str, int]:
-    """Cumulative executed-stage metrics for the whole application,
-    read from the Spark UI REST API (requires ``spark.ui.enabled``).
-
-    Plan SHAPE says where exchanges sit; this says how many BYTES
-    actually crossed them — the number that decides whether a query
-    survives a 100x scale-up. Callers snapshot before/after a query
-    and diff (``measure_query``): the delta includes every job the
-    query triggered, including ``materialize()`` pin jobs that a
-    final-plan metric walk would miss.
-
-    Returns totals in bytes/rows:
-      shuffle_write, shuffle_read, input_bytes, output_bytes,
-      input_records, shuffle_write_records.
-    """
-    import json
-    import urllib.request
-
-    sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        raise RuntimeError("spark.ui.enabled is false: no REST endpoint to read")
-    url = f"{base}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    keys = {
-        "shuffle_write": "shuffleWriteBytes",
-        "shuffle_read": "shuffleReadBytes",
-        "input_bytes": "inputBytes",
-        "output_bytes": "outputBytes",
-        "input_records": "inputRecords",
-        "shuffle_write_records": "shuffleWriteRecords",
-    }
-    out = {k: 0 for k in keys}
-    for st in stages:
-        for k, rest_key in keys.items():
-            out[k] += int(st.get(rest_key, 0) or 0)
-    return out
-
-
-def measure_query(spark, fn, sf_dir: str) -> dict[str, int]:
-    """Run catalog query ``fn(spark, sf_dir)`` to completion and return
-    the stage-metric DELTA it caused (see ``stage_totals``), plus
-    ``wall_ms``."""
-    import time
-
-    before = stage_totals(spark)
-    t0 = time.time()
-    df = fn(spark, sf_dir)
-    df.count()
-    wall_ms = int((time.time() - t0) * 1000)
-    after = stage_totals(spark)
-    delta = {k: after[k] - before[k] for k in before}
-    delta["wall_ms"] = wall_ms
-    return delta

@@ -1,8 +1,8 @@
 """Measured-shuffle-volume gate over the committed PLAN_METRICS.json.
 
 tools/plan_audit.py --metrics EXECUTES every catalog query and records
-the actual exchange bytes (REST stage metrics) to PLAN_METRICS.json;
-this test re-validates that record against the dedup-family ceilings —
+the actual exchange bytes (stage metrics read from Spark's status
+store, UI off) to PLAN_METRICS.json; this test re-validates that record against the dedup-family ceilings —
 so a quadratic plan regression (corpus x corpus pairing, a lost
 materialize pin) fails CI even when nobody re-ran the metrics tool,
 and a re-run that ships a blown-up record can't land quietly.
@@ -25,6 +25,21 @@ def metrics() -> dict:
         pytest.skip("PLAN_METRICS.json not generated (run tools/plan_audit.py --metrics)")
     with open(METRICS_PATH) as f:
         return json.load(f)
+
+
+def test_measure_reads_stage_metrics_with_the_ui_off(spark, sf_dir):
+    """The tools' one stage-metric reader works on a get_spark session,
+    which has no web UI: one execution of dedup_exact is charged its
+    Spark jobs and the bytes its exchange wrote."""
+    from mock_map_reduce_spark import registry
+    from perfbench.sparkstats import StatusReader
+    from tools.plan_audit import measure
+
+    registry.load_all()
+    assert spark.sparkContext.uiWebUrl is None
+    _, m = measure(spark, StatusReader(spark), registry.QUERIES["dedup_exact"], sf_dir)
+    assert m["jobs"] >= 1
+    assert m["shuffle_write"] > 0
 
 
 def test_metrics_cover_the_catalog(metrics):

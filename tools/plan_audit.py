@@ -10,12 +10,13 @@ and TakeOrdered usage.
 
 With ``--metrics`` the audit also EXECUTES every query and records the
 measured exchange volume (shuffle bytes written/read, input bytes) per
-query from the Spark REST API — so the 100 TB scale claims ride
-measured bytes, not plan shape alone. Metrics runs default to sf0.01
-(real data volume matters), write machine-readable PLAN_METRICS.json,
-and enforce the DEDUP_SHUFFLE_CEILINGS regression gate: a dedup-family
-query whose shuffle-write volume blows past its pinned ceiling (a
-quadratic blow-up, a lost materialize pin) fails the tool.
+query from Spark's status store (``measure``; the UI stays off) — so
+the 100 TB scale claims ride measured bytes, not plan shape alone.
+Metrics runs default to sf0.01 (real data volume matters), write
+machine-readable PLAN_METRICS.json, and enforce the
+DEDUP_SHUFFLE_CEILINGS regression gate: a dedup-family query whose
+shuffle-write volume blows past its pinned ceiling (a quadratic
+blow-up, a lost materialize pin) fails the tool.
 
 Usage:  python tools/plan_audit.py [--metrics] [sf_dir]
         (default sf0.001 plan-shape-only; sf0.01 with --metrics)
@@ -26,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -64,6 +66,32 @@ DEDUP_SHUFFLE_CEILINGS: dict[str, int] = {
 }
 
 
+def measure(spark, reader, fn, sf_dir: str) -> tuple[str, dict[str, int]]:
+    """Execute catalog query ``fn(spark, sf_dir)`` once; return its final
+    plan and the stage metrics of every Spark job that execution fired
+    (``materialize()`` pin jobs at build time included), read after it
+    from Spark's status store by ``reader``, a
+    ``perfbench.sparkstats.StatusReader`` on ``spark``."""
+    from mock_map_reduce_spark.plans import final_plan
+
+    reader.drain()
+    reader.new_jobs()  # charge nothing that ran before this query
+    t0 = time.time()
+    plan = final_plan(fn(spark, sf_dir))
+    wall_ms = int((time.time() - t0) * 1000)
+    reader.drain()
+    jobs = reader.new_jobs()
+    st = reader.stage_totals([sid for j in jobs for sid in j["stages"]])
+    return plan, {
+        "shuffle_write": int(st["shuffle_write_bytes"]),
+        "shuffle_read": int(st["shuffle_read_bytes"]),
+        "input_bytes": int(st["input_bytes"]),
+        "wall_ms": wall_ms,
+        "jobs": len(jobs),
+        "stages": int(st["stages"]),
+    }
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--metrics"]
     with_metrics = "--metrics" in sys.argv[1:]
@@ -73,16 +101,11 @@ def main() -> int:
 
     from mock_map_reduce_spark import get_spark, registry
     from mock_map_reduce_spark.plans import final_plan
+    from perfbench.sparkstats import StatusReader
 
     registry.load_all()
-    extra = {}
-    if with_metrics:
-        # REST metrics need the UI; retain enough stages that one
-        # query's delta can never be evicted mid-measurement.
-        extra = {"spark.ui.enabled": "true", "spark.ui.retainedStages": "20000"}
-    spark = get_spark("plan-audit", shuffle_partitions=8, extra_conf=extra)
-
-    from mock_map_reduce_spark.plans.inspect import stage_totals
+    spark = get_spark("plan-audit", shuffle_partitions=8)
+    reader = StatusReader(spark)
 
     rows = []
     metrics: dict[str, dict[str, int]] = {}
@@ -93,21 +116,12 @@ def main() -> int:
             # AdaptiveSparkPlan string appends "== Initial Plan ==" after
             # the final plan — drop it or every exchange counts twice.
             # In --metrics mode the SAME single execution provides both
-            # the stage-metric delta and the final plan (running the
-            # query twice doubled metrics-run wall clock).
+            # the stage metrics and the final plan.
             if with_metrics:
-                import time as _time
-
-                before = stage_totals(spark)
-                t0 = _time.time()
-                plan = final_plan(fn(spark, sf_dir)).split("== Initial Plan ==")[0]
-                wall_ms = int((_time.time() - t0) * 1000)
-                after = stage_totals(spark)
-                m = {k: after[k] - before[k] for k in before}
-                m["wall_ms"] = wall_ms
-                metrics[name] = m
+                plan, metrics[name] = measure(spark, reader, fn, sf_dir)
             else:
-                plan = final_plan(fn(spark, sf_dir)).split("== Initial Plan ==")[0]
+                plan = final_plan(fn(spark, sf_dir))
+            plan = plan.split("== Initial Plan ==")[0]
         except Exception as ex:  # noqa: BLE001
             if with_metrics:
                 metrics[name] = {"error": str(ex)[:200]}
@@ -163,9 +177,9 @@ def main() -> int:
             f.write(
                 "shufW/shufR/inMB = MEASURED shuffle bytes written/read "
                 "and input bytes (MB) for one full run of the query at "
-                "this sf (REST stage metrics; includes materialize-pin "
-                "jobs). Ceilings for the dedup family enforced — see "
-                "DEDUP_SHUFFLE_CEILINGS.\n\n"
+                "this sf (status-store stage metrics; includes "
+                "materialize-pin jobs). Ceilings for the dedup family "
+                "enforced — see DEDUP_SHUFFLE_CEILINGS.\n\n"
                 "| query | shuffles | bcasts | NL | codegen | Py | TopK "
                 "| shufW MB | shufR MB | in MB | note |\n"
                 "|---|---|---|---|---|---|---|---|---|---|---|\n"

@@ -1,14 +1,19 @@
-"""Per-query profiler for the bench headliners (optimization rounds).
+"""Per-query layer profiler for the bench headliners (optimization rounds).
 
-Runs each named query once (default: bench.py's HEADLINE list) with
-the Spark event log enabled, forces it with the noop sink (guide
-§1.4 — times the computation, not the sink or driver IO), and then
-attributes per-stage wall/shuffle metrics back to the query via job
-descriptions (guide §1.5).
+Runs each named query once (default: bench.py's HEADLINE list) after
+bench.py's warm-up and splits it in two: the DataFrame build (driver-side
+building plus every Spark job an operator fires on the way, e.g. a
+``materialize`` pin or a collected merge table) and the sink (the noop
+writer, which times the computation, not driver IO). Spark jobs are
+charged to each half by reading Spark's status store right after it
+(``perfbench.sparkstats.StatusReader``; the UI stays off).
 
-Output: a per-query table of
-    wall_s  n_jobs  n_stages  task_time_s  shuffle_read_MB  shuffle_write_MB
-plus, with --stages, the per-stage breakdown of one query.
+Output: one row per query of
+    build_s  jobs  sink_s  jobs  stages  tasks  task_s  cpu_s  shufR_MB  shufW_MB
+(task_s = executor run time, cpu_s = executor CPU time, both summed over
+the stages that ran), plus, with --stages, one row per stage. With
+--plans[=suffix] each query's formatted plan goes to
+plans/$MMR_PLANS_DIR/<query>_<suffix>.txt.
 
 This is a MEASUREMENT tool only — bench.py (the driver contract) is
 unchanged; use this to decide what to fix and bench.py to prove it.
@@ -16,16 +21,19 @@ unchanged; use this to decide what to fix and bench.py to prove it.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-EVDIR = "/tmp/mmr_eventlog"
+
+def _stage_cols(st: dict) -> str:
+    return (
+        f"{int(st['stages']):6d} {int(st['tasks']):5d} {st['busy_s']:7.3f} {st['cpu_s']:7.3f} "
+        f"{st['shuffle_read_bytes'] / 1e6:8.2f} {st['shuffle_write_bytes'] / 1e6:8.2f}"
+    )
 
 
 def main() -> None:
@@ -43,22 +51,13 @@ def main() -> None:
 
     from bench import HEADLINE
     from mock_map_reduce_spark import get_spark, registry
+    from perfbench.sparkstats import StatusReader
 
     registry.load_all()
     if not names:
         names = [n for n in HEADLINE if n in registry.QUERIES]
 
-    shutil.rmtree(EVDIR, ignore_errors=True)
-    os.makedirs(EVDIR, exist_ok=True)
-    spark = get_spark(
-        "profile",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file:{EVDIR}",
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    spark = get_spark("profile")
     sc = spark.sparkContext
 
     # Same warm-up as bench.py: JVM, codegen, parquet footers, Python workers.
@@ -72,15 +71,37 @@ def main() -> None:
     n_cores = sc.defaultParallelism
     spark.range(0, n_cores, 1, n_cores).mapInPandas(_warm, "id long").count()
 
-    walls: dict[str, float] = {}
+    reader = StatusReader(spark)
+
+    def jobs_since() -> list[dict]:
+        reader.drain()
+        return reader.new_jobs()
+
+    stage_head = f"{'stages':>6s} {'tasks':>5s} {'task_s':>7s} {'cpu_s':>7s} {'shufR_MB':>8s} {'shufW_MB':>8s}"
+    print(f"{'query':42s} {'build_s':>7s} {'jobs':>4s} {'sink_s':>7s} {'jobs':>4s} {stage_head}")
+    total = (0.0, 0, 0.0, 0)
+    stage_rows: list[str] = []
     for name in names:
         sc._jvm.System.gc()
-        sc.setJobDescription(f"Q:{name}")
         t0 = time.time()
         df = registry.QUERIES[name](spark, sf_dir)
+        build_s = time.time() - t0
+        build = jobs_since()
+        t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
-        walls[name] = time.time() - t0
-        sc.setJobDescription(None)
+        sink_s = time.time() - t0
+        sink = jobs_since()
+        st = reader.stage_totals([sid for j in build + sink for sid in j["stages"]])
+        row = (build_s, len(build), sink_s, len(sink))
+        total = tuple(a + b for a, b in zip(total, row))
+        print(f"{name:42s} {build_s:7.3f} {len(build):4d} {sink_s:7.3f} {len(sink):4d} "
+              f"{_stage_cols(st)}", flush=True)
+        if want_stages:
+            for half, jobs in (("build", build), ("sink", sink)):
+                for sid in sorted({sid for j in jobs for sid in j["stages"]}):
+                    one = reader.stage_totals([sid])
+                    if one["stages"]:  # a skipped stage (reused shuffle output) ran nothing
+                        stage_rows.append(f"{name:42s} {half:5s} {sid:5d} {_stage_cols(one)}")
         if want_plans:
             os.makedirs(os.path.join(REPO, "plans", plans_dir), exist_ok=True)
             with open(
@@ -93,102 +114,11 @@ def main() -> None:
                         )
                     )
                 )
+    print(f"{'total':42s} {total[0]:7.3f} {total[1]:4d} {total[2]:7.3f} {total[3]:4d}")
     spark.stop()
-
-    # ---- parse the event log ----
-    # Spark 4 rolling event logs are DIRECTORIES (eventlog_v2_*) of
-    # events_* part files; plain logs are single files. Walk both.
-    logs: list[str] = []
-    for root, _dirs, files in os.walk(EVDIR):
-        for f in files:
-            if f.startswith(".") or f.startswith("appstatus_"):
-                continue
-            logs.append(os.path.join(root, f))
-    job_of_desc: dict[int, str] = {}
-    stages_of_job: dict[int, list[int]] = {}
-    stage_rows: dict[int, dict] = {}
-    for lf in logs:
-        with open(lf) as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    desc = ev.get("Properties", {}).get("spark.job.description", "")
-                    if desc.startswith("Q:"):
-                        jid = ev["Job ID"]
-                        job_of_desc[jid] = desc[2:]
-                        stages_of_job[jid] = [
-                            s["Stage ID"] for s in ev.get("Stage Infos", [])
-                        ]
-                elif kind == "SparkListenerStageCompleted":
-                    si = ev["Stage Info"]
-                    sid = si["Stage ID"]
-                    sub = si.get("Submission Time")
-                    comp = si.get("Completion Time")
-                    acc = {
-                        a.get("Name"): a.get("Value")
-                        for a in si.get("Accumulables", [])
-                    }
-                    stage_rows[sid] = {
-                        "name": si.get("Stage Name", ""),
-                        "wall_ms": (comp - sub) if sub and comp else 0,
-                        "tasks": si.get("Number of Tasks", 0),
-                        "run_ms": int(acc.get("internal.metrics.executorRunTime", 0) or 0),
-                        "sr_b": int(
-                            acc.get("internal.metrics.shuffle.read.remoteBytesRead", 0) or 0
-                        )
-                        + int(
-                            acc.get("internal.metrics.shuffle.read.localBytesRead", 0) or 0
-                        ),
-                        "sw_b": int(
-                            acc.get("internal.metrics.shuffle.write.bytesWritten", 0) or 0
-                        ),
-                    }
-
-    agg: dict[str, dict] = {
-        n: {"jobs": 0, "stages": 0, "wall_ms": 0, "run_ms": 0, "sr_b": 0, "sw_b": 0, "tasks": 0}
-        for n in names
-    }
-    per_stage: dict[str, list] = {n: [] for n in names}
-    for jid, qname in job_of_desc.items():
-        if qname not in agg:
-            continue
-        agg[qname]["jobs"] += 1
-        for sid in stages_of_job.get(jid, []):
-            row = stage_rows.get(sid)
-            if row is None:
-                continue  # skipped stage (reused exchange)
-            agg[qname]["stages"] += 1
-            agg[qname]["wall_ms"] += row["wall_ms"]
-            agg[qname]["run_ms"] += row["run_ms"]
-            agg[qname]["sr_b"] += row["sr_b"]
-            agg[qname]["sw_b"] += row["sw_b"]
-            agg[qname]["tasks"] += row["tasks"]
-            per_stage[qname].append((sid, row))
-
-    print(
-        f"{'query':42s} {'wall_s':>7s} {'jobs':>4s} {'stages':>6s} {'tasks':>5s} "
-        f"{'stage_wall_s':>12s} {'task_time_s':>11s} {'shufR_MB':>8s} {'shufW_MB':>8s}"
-    )
-    for n in names:
-        a = agg[n]
-        print(
-            f"{n:42s} {walls[n]:7.3f} {a['jobs']:4d} {a['stages']:6d} {a['tasks']:5d} "
-            f"{a['wall_ms'] / 1e3:12.3f} {a['run_ms'] / 1e3:11.3f} "
-            f"{a['sr_b'] / 1e6:8.2f} {a['sw_b'] / 1e6:8.2f}"
-        )
     if want_stages:
-        for n in names:
-            print(f"\n== {n} per-stage ==")
-            for sid, row in sorted(per_stage[n]):
-                print(
-                    f"  stage {sid:4d} wall={row['wall_ms'] / 1e3:7.3f}s "
-                    f"tasks={row['tasks']:3d} run={row['run_ms'] / 1e3:7.3f}s "
-                    f"sR={row['sr_b'] / 1e6:7.2f}MB sW={row['sw_b'] / 1e6:7.2f}MB  {row['name'][:90]}"
-                )
+        print(f"\n{'query':42s} {'half':5s} {'stage':>5s} {stage_head}")
+        print("\n".join(stage_rows))
 
 
 if __name__ == "__main__":

@@ -72,14 +72,12 @@ def main() -> int:
     step = 10.0  # data ratio between the two dirs
 
     from mock_map_reduce_spark import get_spark, registry
-    from mock_map_reduce_spark.plans.inspect import measure_query
+    from perfbench.sparkstats import StatusReader
+    from tools.plan_audit import measure
 
     registry.load_all()
-    spark = get_spark(
-        "scaling-audit",
-        shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.retainedStages": "40000"},
-    )
+    spark = get_spark("scaling-audit", shuffle_partitions=8)
+    reader = StatusReader(spark)
 
     rows = []
     breaches = []
@@ -89,8 +87,8 @@ def main() -> int:
     for name, fn in items:
         rec = {"query": name}
         try:
-            m_small = measure_query(spark, fn, sf_small)
-            m_big = measure_query(spark, fn, sf_big)
+            _, m_small = measure(spark, reader, fn, sf_small)
+            _, m_big = measure(spark, reader, fn, sf_big)
         except Exception as ex:  # noqa: BLE001
             rec["error"] = str(ex)[:160]
             rows.append(rec)
