@@ -204,7 +204,7 @@ def q_dedup_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.lsh_candidate_pairs(docs, NUM_HASHES, BANDS, NGRAM)
 
 
-MAX_DOC_FREQ = 64  # stop-shingle cap: bounds any shingle's join fan-out to 64^2
+MAX_DOC_FREQ = 64  # stop-shingle cap: bounds any shingle's pair fan-out to 64^2
 
 
 @query(
@@ -233,7 +233,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exposed form is skew-bounded by default: shingles in more than
     MAX_DOC_FREQ docs are stop-listed out of both the intersection and
     the set sizes (the oracle applies the same filter), so no single
-    viral shingle can fan the inverted-index join out past 64² rows —
+    viral shingle can fan its posting list out past 64² pair rows —
     the module's own 100 TB note, now on by default.
     """
     docs = load_table(spark, sf_dir, "documents")

@@ -25,6 +25,7 @@ from mock_map_reduce_spark.operators.relational import (
     top_k_per_group,
 )
 from mock_map_reduce_spark.functions.materialize import materialize
+from mock_map_reduce_spark.functions.pairs import ordered_pairs
 from mock_map_reduce_spark.registry import query
 from mock_map_reduce_spark.sources import load_table, load_tables
 
@@ -878,8 +879,8 @@ def q_basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     order's distinct sorted brand basket (basket size is bounded by
     the catalog's brand count, so the set buffer is constant-ish) and
     that single exchange feeds all three consumers as ReusedExchange:
-    pair generation is basket-LOCAL (sorted-suffix slice-explode,
-    bounded by basket size², never corpus², no self-join and no
+    pair generation is basket-LOCAL (``ordered_pairs`` over the sorted
+    basket, bounded by basket size², never corpus², no self-join and no
     separate distinct pass), the per-brand marginals explode the same
     baskets, and the basket total is a count over them. Pair counts
     partial-agg before their brand-pair exchange and the marginals +
@@ -911,12 +912,7 @@ def q_basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_b"))
     )
     pairs = (
-        baskets.filter(F.size("bs") > 1)
-        .select("bs", F.posexplode("bs").alias("__i", "brand_a"))
-        .select(
-            "brand_a",
-            F.explode(F.expr("slice(bs, __i + 2, size(bs))")).alias("brand_b"),
-        )
+        ordered_pairs(baskets, "bs", "brand_a", "brand_b")
         .groupBy("brand_a", "brand_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .filter(F.col("n_ab") >= 5)

@@ -7,9 +7,15 @@ the bounded label-propagation iteration in ``connected_components``.
 
 Scale design (100 TB):
   * Exact dedup shuffles 16-byte digests, never full texts.
+  * Every pair generator (MinHash- and SimHash-LSH buckets, n-gram
+    and prefix posting lists) groups ids by its key into one sorted
+    list and emits each list's pairs with ``functions.pairs.
+    ordered_pairs``: one shuffle for the grouping, O(list) task
+    memory, and never a self-join or cross join. The one join of
+    bucket rows left is ``incremental_lsh_candidates``' batch x index
+    join, a cross-set result.
   * MinHash-LSH: cost is O(docs x num_hashes) map-side + one shuffle
-    per band groupBy; candidate pairs are generated per-bucket, never
-    via cross join. ``max_bucket_size`` caps degenerate buckets (the
+    per band groupBy. ``max_bucket_size`` caps degenerate buckets (the
     classic boilerplate-text skew guard) — a bucket of B docs emits
     B^2/2 pairs, so one viral boilerplate string would otherwise emit
     billions.
@@ -27,6 +33,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.arrowcols import fixed_width, numeric, strings
 from mock_map_reduce_spark.functions.materialize import materialize, release
+from mock_map_reduce_spark.functions.pairs import ordered_pairs
 from mock_map_reduce_spark.functions.partitioning import spread as _spread
 
 # Normalized tokens for fuzzy dedup: lowercase alphabetic runs.
@@ -276,6 +283,22 @@ def lsh_band_buckets(
     )
 
 
+def _bucket_pairs(
+    buckets: DataFrame, id_col: str, max_bucket_size: int | None = None
+) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (band_idx, bucket) row of
+    ``buckets``: one groupBy(band_idx, bucket) into a sorted id list,
+    then ``ordered_pairs`` per list. ``max_bucket_size`` drops larger
+    buckets before any pair is emitted. Ids must be unique per band."""
+    grouped = buckets.groupBy("band_idx", "bucket").agg(
+        F.sort_array(F.collect_list(id_col)).alias("ids")
+    )
+    if max_bucket_size is not None:
+        grouped = grouped.filter(F.size("ids") <= max_bucket_size)
+    # a pair colliding in several bands is emitted once per band
+    return ordered_pairs(grouped, "ids", "id_a", "id_b").distinct()
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -284,31 +307,17 @@ def lsh_candidate_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    via: str = "group",
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing >= 1 LSH bucket.
 
-    Pairs are generated per-bucket — never a cross join.
-    ``max_bucket_size`` drops degenerate buckets before any pair is
-    emitted (skew guard for boilerplate-heavy corpora).
+    Pairs are generated per bucket (``_bucket_pairs``), never by a
+    join: one shuffle for the grouping, and per-bucket memory is
+    O(bucket). ``max_bucket_size`` drops degenerate buckets before any
+    pair is emitted (skew guard for boilerplate-heavy corpora).
     ``signatures`` lets a caller that already materialized
     minhash_signatures (e.g. for the estimator query) reuse it instead
     of re-running the shingle+signature pipeline.
-
-    Two physical strategies (identical results):
-      * ``via="group"`` (default): groupBy(band, bucket) ->
-        sort_array(collect_list(id)) -> emit each element's ordered
-        suffix as partners (posexplode + slice-explode). One shuffle
-        for the grouping, the skew guard is a size() filter, and the
-        per-bucket memory is O(bucket) — never the O(bucket^2) pair
-        array, since the second explode streams off a bounded slice.
-      * ``via="join"``: classic bucket self-join over one shared
-        exchange (ReusedExchange). Same shuffle count but adds the
-        join + (when capped) a separate bucket-size agg + join; kept
-        for the plan-shape tests and as the fallback if a single
-        bucket's id list could not fit in one task (not reachable
-        with the cap on).
     """
     sig = (
         signatures
@@ -316,49 +325,51 @@ def lsh_candidate_pairs(
         else minhash_signatures(docs, num_hashes, n, text_col, id_col)
     )
     buckets = lsh_band_buckets(sig, num_hashes, bands, id_col)
-    if via == "group":
-        grouped = buckets.groupBy("band_idx", "bucket").agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids")
-        )
-        grouped = grouped.filter(F.size("ids") > 1)
-        if max_bucket_size is not None:
-            grouped = grouped.filter(F.size("ids") <= max_bucket_size)
-        return (
-            grouped.select("ids", F.posexplode("ids").alias("__i", "id_a"))
-            # partners = the sorted suffix after position __i (0-based),
-            # so id_a < id_b holds by construction and each unordered
-            # pair is emitted once per colliding bucket
-            .select(
-                "id_a",
-                F.explode(F.expr("slice(ids, __i + 2, size(ids))")).alias("id_b"),
-            )
-            .distinct()
-        )
-    # via="join": materialize one exchange on the join keys so both
-    # sides of the self-join share it (ReusedExchange) and the
-    # signature computation runs exactly once.
-    buckets = buckets.repartition("band_idx", "bucket")
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band_idx", "bucket").agg(F.count("*").alias("bsz"))
-        buckets = buckets.join(
-            sizes.filter(F.col("bsz") <= max_bucket_size).drop("bsz"),
-            ["band_idx", "bucket"],
-        )
-    a = buckets.select(
-        F.col(id_col).alias("id_a"), "band_idx", "bucket"
-    )
-    b = buckets.select(F.col(id_col).alias("id_b"), "band_idx", "bucket")
-    return (
-        a.join(b, ["band_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _bucket_pairs(buckets, id_col, max_bucket_size)
 
 
 # ---------------------------------------------------------------------------
 # Exact n-gram Jaccard (verification pass over candidates, or standalone)
 # ---------------------------------------------------------------------------
+
+
+def _shared_gram_counts(
+    docs: DataFrame,
+    n: int,
+    text_col: str,
+    id_col: str,
+    max_doc_freq: int | None,
+) -> DataFrame:
+    """(id_a, id_b, n_shared, na, nb) for every doc pair sharing >= 1
+    kept shingle; na, nb are the two docs' kept-shingle counts.
+
+    ONE groupBy(gram) builds each gram's sorted posting list. The
+    ``max_doc_freq`` stop-shingle cap is a size filter on it, so the
+    capped grams leave both the intersection and the set sizes. Pairs
+    come from ``ordered_pairs`` per list and the per-doc sizes
+    re-derive from the same lists: both consumers read the
+    groupBy(gram) exchange as ReusedExchange, so the scan + tokenize +
+    shingle lineage shuffle-writes once.
+    """
+    grouped = shingles(docs, n, text_col, id_col).groupBy("gram").agg(
+        F.sort_array(F.collect_list(id_col)).alias("ids")
+    )
+    if max_doc_freq is not None:
+        grouped = grouped.filter(F.size("ids") <= max_doc_freq)
+    kept = grouped.select("ids")
+    sizes = (
+        kept.select(F.explode("ids").alias(id_col))
+        .groupBy(id_col)
+        .agg(F.count("*").alias("n_grams"))
+    )
+    shared = (
+        ordered_pairs(kept, "ids", "id_a", "id_b")
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("n_shared"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"))
+    return shared.join(sa, "id_a").join(sb, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -368,24 +379,13 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_doc_freq: int | None = None,
-    via: str = "group",
 ) -> DataFrame:
     """Exact Jaccard over word n-gram sets: (id_a, id_b, jaccard).
 
-    Pairs are generated ONLY through shared shingles (inverted index),
-    so disjoint docs never meet — no cross join. jaccard is a ratio of
-    exact integer counts: bit-identical across engines.
-
-    ``via="group"`` (default): ONE groupBy(gram) builds each gram's
-    sorted posting list; pairs are emitted per-list with the ordered-
-    suffix slice-explode (the lsh_candidate_pairs trick) and the
-    ``max_doc_freq`` stop-shingle cap becomes a plain size(ids) filter
-    on the grouped row — the doc-freq pre-aggregation, the broadcast
-    anti-join, AND the gram self-join all disappear. Per-doc kept-gram
-    sizes re-derive from the same posting lists, so the shingle
-    lineage runs once. ``via="join"`` keeps the classic two-sided
-    inverted-index join formulation (one materialized gram exchange
-    consumed by both sides as ReusedExchange).
+    Pairs are generated ONLY through shared shingles (inverted index,
+    ``_shared_gram_counts``), so disjoint docs never meet — no cross
+    join. jaccard is a ratio of exact integer counts: bit-identical
+    across engines.
 
     100 TB note: a shingle shared by D docs emits D(D-1)/2 pair rows;
     for web-scale corpora run this AFTER lsh_candidate_pairs
@@ -394,81 +394,8 @@ def ngram_jaccard_pairs(
     from BOTH the intersection and the set sizes (jaccard is then over
     the non-stop shingle sets), bounding any one shingle's fan-out.
     """
-    g = shingles(docs, n, text_col, id_col)
-    if via == "group":
-        grouped = g.groupBy("gram").agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids")
-        )
-        if max_doc_freq is not None:
-            grouped = grouped.filter(F.size("ids") <= max_doc_freq)
-        # Both consumers below share the groupBy(gram) exchange as
-        # ReusedExchange — the scan+tokenize+shingle lineage (the
-        # expensive part) shuffle-writes once; only the cheap final agg
-        # over posting lists re-runs per consumer.
-        kept = grouped.select("ids")
-        sizes = (
-            kept.select(F.explode("ids").alias(id_col))
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_grams"))
-        )
-        shared = (
-            kept.filter(F.size("ids") > 1)
-            .select("ids", F.posexplode("ids").alias("__i", "id_a"))
-            .select(
-                "id_a",
-                F.explode(F.expr("slice(ids, __i + 2, size(ids))")).alias("id_b"),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_shared"))
-        )
-        sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"))
-        sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"))
-        return (
-            shared.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "jaccard",
-                F.col("n_shared").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_shared")).cast("double"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    if max_doc_freq is not None:
-        # anti-join against the STOP list (grams above the cap) — that
-        # list is tiny by construction, so it broadcasts even when the
-        # full vocabulary would not. The doc-freq agg has map-side
-        # combine, so the viral gram costs one partial row per input
-        # partition — skew-safe where a count-over-window would pile
-        # every copy of the hot gram into one task.
-        stop = (
-            g.groupBy("gram")
-            .agg(F.count("*").alias("gdf"))
-            .filter(F.col("gdf") > max_doc_freq)
-            .select("gram")
-        )
-        g = g.join(F.broadcast(stop), "gram", "left_anti")
-    # Materialize ONE gram-hash exchange that every downstream consumer
-    # shares: both self-join sides read it as ReusedExchange (the join's
-    # distribution requirement is already satisfied — no further
-    # shuffle), and sizes' partial count collapses before its own small
-    # exchange. Without this, the scan+tokenize+shingle lineage re-runs
-    # per consumer.
-    g = g.repartition("gram")
-    sizes = g.groupBy(id_col).agg(F.count("*").alias("n_grams"))
-    a = g.select(F.col(id_col).alias("id_a"), "gram")
-    b = g.select(F.col(id_col).alias("id_b"), "gram")
-    shared = (
-        a.join(b, "gram")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"))
     return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shared_gram_counts(docs, n, text_col, id_col, max_doc_freq)
         .withColumn(
             "jaccard",
             F.col("n_shared").cast("double")
@@ -494,37 +421,12 @@ def ngram_containment_pairs(
     but containment ~1.0 — the quote/boilerplate/subset case a
     training-corpus dedup pass must catch (the motivation for
     suffix-based substring dedup; this is its shingle-set
-    approximation). Same grouped posting-list plan as
-    ngram_jaccard_pairs via="group": ONE groupBy(gram) exchange, pairs
-    emitted per posting list by ordered-suffix slice-explode,
-    max_doc_freq as a plain size filter, ratios of exact integer
-    counts (bit-identical across engines).
+    approximation). Same shared-shingle counts as ngram_jaccard_pairs
+    (``_shared_gram_counts``), ratios of exact integer counts
+    (bit-identical across engines).
     """
-    g = shingles(docs, n, text_col, id_col)
-    grouped = g.groupBy("gram").agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-    if max_doc_freq is not None:
-        grouped = grouped.filter(F.size("ids") <= max_doc_freq)
-    kept = grouped.select("ids")
-    sizes = (
-        kept.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_grams"))
-    )
-    shared = (
-        kept.filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("__i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(ids, __i + 2, size(ids))")).alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"))
     return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shared_gram_counts(docs, n, text_col, id_col, max_doc_freq)
         .withColumn(
             "containment",
             F.col("n_shared").cast("double") / F.least("na", "nb").cast("double"),
@@ -638,14 +540,14 @@ def simhash_candidate_pairs(
     """Pairs whose simhash matches on >= 1 of ``bands`` bit-blocks.
 
     Standard Hamming-LSH: two docs within (bands-1) bit flips always
-    share a block. Block extraction via shift/mask, grouped join as in
-    MinHash-LSH.
+    share a block. Block extraction via shift/mask; each (band, block)
+    is a bucket, paired by the same ``_bucket_pairs`` as MinHash-LSH.
     """
     block_bits = bits // bands
     mask = (1 << block_bits) - 1
     sh = simhash(docs, bits, text_col, id_col)
-    # One pass over the (shuffle-produced) simhash column — a unionAll
-    # would recompute the whole simhash aggregation per band.
+    # One pass over the simhash column: a unionAll of per-band selects
+    # would recompute the simhash kernel per band.
     block_arr = F.array(
         *[
             F.shiftright(F.col("simhash"), b * block_bits).bitwiseAND(F.lit(mask))
@@ -655,14 +557,7 @@ def simhash_candidate_pairs(
     blocks = sh.select(
         F.col(id_col), F.posexplode(block_arr).alias("band_idx", "bucket")
     )
-    a = blocks.select(F.col(id_col).alias("id_a"), "band_idx", "bucket")
-    b2 = blocks.select(F.col(id_col).alias("id_b"), "band_idx", "bucket")
-    return (
-        a.join(b2, ["band_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _bucket_pairs(blocks, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -905,8 +800,7 @@ def _prefix_filter_doc_grams(
     generation and exact verify; callers materialize it ONCE
     (materialize) because its consumers are keyed differently."""
     g = shingles(docs, n, text_col, id_col)
-    # The grouped posting-list trick (ngram_jaccard_pairs' default
-    # formulation): ONE groupBy(gram) yields both the stop-gram cap
+    # The grouped posting-list trick (as in _shared_gram_counts): ONE groupBy(gram) yields both the stop-gram cap
     # (a size filter on the grouped row) and the document frequency
     # (the list's own length) — no separate df aggregate and no
     # gram-keyed join back. The per-doc sort is partition-local and
@@ -955,23 +849,17 @@ def prefix_filter_candidates(
         m.alias("m"),
         F.explode(F.slice(F.col("grams"), F.lit(1), p)).alias("gram"),
     )
-    # Pairs emit per prefix-gram posting list with the ordered-suffix
-    # slice-explode (the lsh_candidate_pairs trick) — one groupBy(gram)
-    # exchange instead of a two-sided self-join, O(list) task memory.
+    # Pairs emit per prefix-gram posting list (ordered_pairs): one
+    # groupBy(gram) exchange instead of a two-sided self-join, O(list)
+    # task memory.
     grouped = pre.groupBy("gram").agg(
         F.sort_array(F.collect_list(F.struct(F.col(id_col), F.col("m")))).alias("ids")
     )
-    pairs = (
-        grouped.filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("__i", "a"))
-        .select(
-            F.col("a")[id_col].alias("id_a"),
-            F.col("a")["m"].alias("ma"),
-            F.explode(F.expr("slice(ids, __i + 2, size(ids))")).alias("b"),
-        )
-        .select(
-            "id_a", "ma", F.col("b")[id_col].alias("id_b"), F.col("b")["m"].alias("mb")
-        )
+    pairs = ordered_pairs(grouped, "ids", "a", "b").select(
+        F.col("a")[id_col].alias("id_a"),
+        F.col("a")["m"].alias("ma"),
+        F.col("b")[id_col].alias("id_b"),
+        F.col("b")["m"].alias("mb"),
     )
     return (
         pairs.filter(F.col("mb").cast("double") >= F.lit(threshold) * F.col("ma"))

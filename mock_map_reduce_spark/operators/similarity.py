@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mock_map_reduce_spark.functions.arrowcols import fixed_dim, numeric
+from mock_map_reduce_spark.functions.pairs import ordered_pairs
 from mock_map_reduce_spark.functions.partitioning import spread
 
 
@@ -346,23 +347,16 @@ def embedding_near_dup_lsh(
     grouped = tagged.groupBy("bucket").agg(
         F.sort_array(F.collect_list(F.struct(id_col, "vec"))).alias("members")
     )
-    grouped = grouped.filter(F.size("members") > 1)
     if max_bucket_size is not None:
         grouped = grouped.filter(F.size("members") <= max_bucket_size)
+    # one bucket per vector, so each pair is emitted once
     pairs = (
-        grouped.select("members", F.posexplode("members").alias("__i", "a"))
+        ordered_pairs(grouped, "members", "a", "b")
         .select(
             F.col("a").getField(id_col).alias("id_a"),
-            F.col("a").getField("vec").alias("va"),
-            F.explode(F.expr("slice(members, __i + 2, size(members))")).alias("b"),
-        )
-        .select(
-            "id_a",
             F.col("b").getField(id_col).alias("id_b"),
-            cosine(F.col("va"), F.col("b").getField("vec")).alias("cosine"),
+            cosine(F.col("a").getField("vec"), F.col("b").getField("vec")).alias("cosine"),
         )
-        # a pair can collide in multiple... no: one bucket per vector
-        # at nprobe=1, so pairs are already unique
         .filter(F.col("cosine") >= threshold)
     )
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))

@@ -191,14 +191,40 @@ def test_lsh_bucket_size_cap(docs):
     assert pairs == []
 
 
-def test_lsh_group_and_join_strategies_agree(docs):
-    # the collect_list pair generator and the bucket self-join are two
-    # physical plans for one logical result — must match exactly,
-    # capped and uncapped
+def _bucket_reference(rows, cap=None):
+    """Plain-Python pairs: (a < b) sharing a (band_idx, bucket), buckets
+    of more than ``cap`` ids dropped."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    buckets = defaultdict(list)
+    for doc_id, band, bucket in rows:
+        buckets[band, bucket].append(doc_id)
+    return {
+        pair
+        for ids in buckets.values()
+        if cap is None or len(ids) <= cap
+        for pair in combinations(sorted(ids), 2)
+    }
+
+
+def test_lsh_candidates_match_bucket_reference(docs):
+    sig = dd.minhash_signatures(docs)
+    rows = [tuple(r) for r in dd.lsh_band_buckets(sig, bands=8).collect()]
     for cap in (None, 2):
-        g = {(r.id_a, r.id_b) for r in dd.lsh_candidate_pairs(docs, bands=8, max_bucket_size=cap, via="group").collect()}
-        j = {(r.id_a, r.id_b) for r in dd.lsh_candidate_pairs(docs, bands=8, max_bucket_size=cap, via="join").collect()}
-        assert g == j
+        want = _bucket_reference(rows, cap)
+        got = {(r.id_a, r.id_b) for r in dd.lsh_candidate_pairs(docs, bands=8, max_bucket_size=cap).collect()}
+        assert got == want
+    assert _bucket_reference(rows)  # the planted dups collide
+
+
+def test_simhash_candidates_match_bucket_reference(docs):
+    # 4 bands of 16 bits: band b's bucket is bits [16b, 16b + 16)
+    digests = [(r.doc_id, r.simhash) for r in dd.simhash(docs).collect()]
+    rows = [(d, b, (h >> (16 * b)) & 0xFFFF) for d, h in digests for b in range(4)]
+    want = _bucket_reference(rows)
+    got = {(r.id_a, r.id_b) for r in dd.simhash_candidate_pairs(docs).collect()}
+    assert got == want and want
 
 
 def test_ngram_jaccard_values(docs):
@@ -325,13 +351,43 @@ def test_incremental_candidates_cross_set_only(docs):
     assert not any(o == 4 for _, o in pairs)
 
 
-def test_ngram_group_and_join_formulations_agree(docs):
-    for cap in (None, 64):
-        g = {(r.id_a, r.id_b, round(r.jaccard, 9))
-             for r in dd.ngram_jaccard_pairs(docs, 3, 0.1, max_doc_freq=cap, via="group").collect()}
-        j = {(r.id_a, r.id_b, round(r.jaccard, 9))
-             for r in dd.ngram_jaccard_pairs(docs, 3, 0.1, max_doc_freq=cap, via="join").collect()}
-        assert g == j and g  # identical, and non-empty on the planted dups
+def _shingle_sets(texts, n=3):
+    import re
+
+    out = {}
+    for doc_id, text in texts:
+        toks = [t for t in re.split("[^A-Za-z]+", (text or "").lower()) if t]
+        grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        if grams:
+            out[doc_id] = grams
+    return out
+
+
+def test_ngram_pairs_match_python_reference(docs):
+    """Jaccard and containment against Python shingle sets, grams in
+    more than ``cap`` docs dropped from both sets first."""
+    from collections import Counter
+    from itertools import combinations
+
+    sets = _shingle_sets((r.doc_id, r.text) for r in docs.collect())
+    df = Counter(g for grams in sets.values() for g in grams)
+    for cap in (None, 2):
+        kept = {
+            d: {g for g in grams if cap is None or df[g] <= cap}
+            for d, grams in sets.items()
+        }
+        jac, con = set(), set()
+        for a, b in combinations(sorted(d for d in kept if kept[d]), 2):
+            ns = len(kept[a] & kept[b])
+            if ns:
+                jac.add((a, b, round(ns / len(kept[a] | kept[b]), 9)))
+                con.add((a, b, round(ns / min(len(kept[a]), len(kept[b])), 9)))
+        got_jac = {(r.id_a, r.id_b, round(r.jaccard, 9))
+                   for r in dd.ngram_jaccard_pairs(docs, 3, 0.1, max_doc_freq=cap).collect()}
+        got_con = {(r.id_a, r.id_b, round(r.containment, 9))
+                   for r in dd.ngram_containment_pairs(docs, 3, 0.1, max_doc_freq=cap).collect()}
+        assert got_jac == {p for p in jac if p[2] >= 0.1} and got_jac
+        assert got_con == {p for p in con if p[2] >= 0.1} and got_con
 
 
 def test_survivors_by_quality_picks_best_member(spark):

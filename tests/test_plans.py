@@ -94,15 +94,16 @@ def test_minhash_signatures_bounded_shuffle(spark, sf_dir):
     assert "HashAggregate" not in plan
 
 
-def test_lsh_group_pair_generation_plan(spark, sf_dir):
+@pytest.mark.parametrize("pairs_fn", ["lsh_candidate_pairs", "simhash_candidate_pairs"])
+def test_lsh_group_pair_generation_plan(spark, sf_dir, pairs_fn):
     from mock_map_reduce_spark.operators import dedup as dd
     from mock_map_reduce_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dd.lsh_candidate_pairs(docs)
-    # grouped formulation: spread + sig agg + bucket collect + distinct,
-    # and NO join operator anywhere — pairs come from the per-bucket
-    # sorted-suffix explode
+    pairs = getattr(dd, pairs_fn)(docs)
+    # grouped formulation: spread + bucket collect + distinct, and NO
+    # join operator anywhere — pairs come from ordered_pairs over each
+    # bucket's sorted id list
     assert count_exchanges(pairs) <= 4
     plan = executed_plan(pairs)
     assert "Join" not in plan

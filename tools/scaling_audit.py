@@ -19,8 +19,9 @@ partitioning/compression, so the exponent is reproducible where
 timings are host-noise.
 
 Usage:  python tools/scaling_audit.py [sf_small] [sf_big] [query ...]
-        (with explicit queries, results append to SCALING.md's
-        focused-run section instead of rewriting the full table)
+        (with explicit queries, results append to SCALING.md as a
+        focused-run section instead of rewriting the full table; a
+        full run keeps the focused-run sections already there)
 """
 
 from __future__ import annotations
@@ -63,6 +64,61 @@ SUPERLINEAR_ALLOW = {
 
 ALPHA_GATE = 1.3
 MIN_BYTES = 64 * 1024  # below this, exponents are partition-overhead noise
+
+
+FOCUSED_HEADING = "\n## Focused run: "
+
+
+def _table(rows: list[dict]) -> str:
+    """The markdown table of measured rows, in the given order."""
+    lines = [
+        "| query | shufW small | shufW big | alpha | class |",
+        "|---|---|---|---|---|",
+    ]
+    for r in rows:
+        if "error" in r:
+            lines.append(f"| {r['query']} | - | - | - | ERROR: {r['error']} |")
+        else:
+            alpha = r["alpha"] if r["alpha"] is not None else "-"
+            lines.append(
+                f"| {r['query']} | {r['bytes_small']} | {r['bytes_big']} "
+                f"| {alpha} | {r['class']} |"
+            )
+    return "\n".join(lines) + "\n"
+
+
+def append_focused_run(path: str, sf_small: str, sf_big: str, rows: list[dict]) -> None:
+    """Append a ``## Focused run`` section for ``rows`` to the report."""
+    with open(path, "a") as f:
+        f.write(f"{FOCUSED_HEADING}{sf_small} -> {sf_big}\n\n{_table(rows)}")
+
+
+def write_full_report(path: str, sf_small: str, sf_big: str, rows: list[dict]) -> None:
+    """Rewrite the report's full table; the focused-run sections an
+    existing report holds are carried over after it."""
+    kept = ""
+    if os.path.exists(path):
+        with open(path) as f:
+            text = f.read()
+        at = text.find(FOCUSED_HEADING)
+        kept = text[at:] if at >= 0 else ""
+    ranked = sorted(
+        rows, key=lambda r: -r["alpha"] if r.get("alpha") is not None else 2.0
+    )
+    with open(path, "w") as f:
+        f.write(
+            "# SCALING — measured shuffle-write growth exponents "
+            "(generated by tools/scaling_audit.py)\n\n"
+            f"Data step: {sf_small} → {sf_big} (10x). alpha = "
+            "log10(bytes_big/bytes_small); const = under "
+            f"{MIN_BYTES // 1024} KB at the larger sf (partition-"
+            "overhead noise floor). Gate: alpha > "
+            f"{ALPHA_GATE} fails unless on the reviewed "
+            "SUPERLINEAR_ALLOW list (pair-emitting dedup queries whose "
+            "candidate volume tracks the corpus's planted duplicate "
+            "rate, not the plan).\n\n"
+        )
+        f.write(_table(ranked) + kept)
 
 
 def main() -> int:
@@ -115,52 +171,12 @@ def main() -> int:
 
     out = os.path.join(REPO, "SCALING.md")
     if only:
-        with open(out, "a") as f:
-            f.write(
-                f"\n## Focused run: {sf_small} -> {sf_big}\n\n"
-                "| query | shufW small | shufW big | alpha | class |\n"
-                "|---|---|---|---|---|\n"
-            )
-            for r in rows:
-                if "error" in r:
-                    f.write(f"| {r['query']} | - | - | - | ERROR: {r['error']} |\n")
-                else:
-                    f.write(
-                        f"| {r['query']} | {r['bytes_small']} | {r['bytes_big']} "
-                        f"| {r['alpha'] if r['alpha'] is not None else '-'} "
-                        f"| {r['class']} |\n"
-                    )
+        append_focused_run(out, sf_small, sf_big, rows)
         for b in breaches:
             print("SCALING BREACH:", b)
         print(f"appended focused run to {out}: {len(rows)} queries")
         return 1 if breaches else 0
-    with open(out, "w") as f:
-        f.write(
-            "# SCALING — measured shuffle-write growth exponents "
-            "(generated by tools/scaling_audit.py)\n\n"
-            f"Data step: {sf_small} → {sf_big} (10x). alpha = "
-            "log10(bytes_big/bytes_small); const = under "
-            f"{MIN_BYTES // 1024} KB at the larger sf (partition-"
-            "overhead noise floor). Gate: alpha > "
-            f"{ALPHA_GATE} fails unless on the reviewed "
-            "SUPERLINEAR_ALLOW list (pair-emitting dedup queries whose "
-            "candidate volume tracks the corpus's planted duplicate "
-            "rate, not the plan).\n\n"
-            "| query | shufW small | shufW big | alpha | class |\n"
-            "|---|---|---|---|---|\n"
-        )
-        for r in sorted(
-            rows,
-            key=lambda r: -r["alpha"] if r.get("alpha") is not None else 2.0,
-        ):
-            if "error" in r:
-                f.write(f"| {r['query']} | - | - | - | ERROR: {r['error']} |\n")
-            else:
-                f.write(
-                    f"| {r['query']} | {r['bytes_small']} | {r['bytes_big']} "
-                    f"| {r['alpha'] if r['alpha'] is not None else '-'} "
-                    f"| {r['class']} |\n"
-                )
+    write_full_report(out, sf_small, sf_big, rows)
     with open(os.path.join(REPO, "SCALING.json"), "w") as f:
         json.dump({"sf_small": sf_small, "sf_big": sf_big, "rows": rows}, f, indent=1)
 
