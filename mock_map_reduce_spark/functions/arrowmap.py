@@ -1,24 +1,24 @@
-"""One Python-worker map over Arrow batches, fused with the map before it.
+"""One Python-worker map over Arrow batches: every per-record kernel.
 
-``arrow_map(kernel, df, columns, out_schema)`` is
-``spread(df.select(*columns), heavy=True).mapInArrow(kernel, out_schema)``,
-the shape of every per-record media map. Spark does not merge adjacent
-``MapInArrow`` nodes, so two such maps in a row hold two Python workers
-per task and send the payload across the JVM/Python boundary twice.
-``arrow_map`` therefore runs its kernel in the same worker as the map
-that produced ``df`` when all of these hold:
+``arrow_map(kernel, df, columns, out_schema)`` runs ``kernel`` over
+``df.select(*columns)`` with ``mapInArrow`` and owns where it runs:
 
-* ``df`` is the very DataFrame an earlier ``arrow_map`` returned, so no
-  transformation sits in between;
-* ``df`` is not persisted (``cache()``, ``persist()`` and
-  ``materialize`` return the same object, so this is checked here);
-* ``columns`` are among that map's output columns.
+* ``df`` is pinned (``cache()``, ``persist()`` and ``materialize``
+  return the same object, so ``df.is_cached`` says so): in place.
+  Spreading a pin would reshuffle its cached blocks.
+* ``df`` is the very DataFrame an earlier ``arrow_map`` returned and
+  ``columns`` are among its columns: fused with that map (below).
+* Otherwise over ``spread(df.select(*columns), heavy=True)``. Callers
+  hand over their unspread projection: spread's probe over an earlier
+  spread fires a Spark job.
 
-The fused map reads the producer's spread source and runs producer
-kernel -> schema check -> column selection -> consumer kernel. The check
-is the one Spark makes between two maps: every intermediate batch must
-have the producer's declared Arrow schema, or a ValueError names the
-producer. Chains of any length compose the same way.
+Spark does not merge adjacent ``MapInArrow`` nodes, so two maps in a row
+hold two Python workers per task and send the payload across the
+JVM/Python boundary twice. A fused map reads the producer's source and
+runs producer kernel -> schema check -> column selection -> consumer
+kernel. The check is the one Spark makes between two maps: every
+intermediate batch must have the producer's declared Arrow schema, or a
+ValueError names the producer. Chains of any length compose the same way.
 """
 
 from __future__ import annotations
@@ -35,9 +35,9 @@ from mock_map_reduce_spark.functions.partitioning import spread
 
 Kernel = Callable[[Iterator[pa.RecordBatch]], Iterable[pa.RecordBatch]]
 
-# Set on each DataFrame arrow_map returns: (spread source, stages), one
-# stage per kernel: (kernel, the columns it reads from the previous
-# stage's output or None for the first, declared output schema).
+# Set on each DataFrame arrow_map returns: (source, stages), one stage
+# per kernel: (kernel, the columns it reads from the previous stage's
+# output or None for the first, declared output DDL).
 _CHAIN = "_arrow_map_chain"
 
 
@@ -45,20 +45,22 @@ def arrow_map(
     kernel: Kernel, df: DataFrame, columns: Sequence[str], out_schema: str
 ) -> DataFrame:
     """``kernel`` over the Arrow batches of ``df``'s ``columns`` in a
-    Python worker, returning ``out_schema`` (a flat Spark DDL string);
-    fused with the ``arrow_map`` that produced ``df`` when it can be
-    (see the module docstring)."""
+    Python worker, returning ``out_schema`` (a Spark DDL string); see
+    the module docstring for where it runs."""
     columns = list(columns)
-    declared = arrow_schema(out_schema)
     source, stages = vars(df).get(_CHAIN, (None, ()))
-    if stages and not df.is_cached and set(columns) <= set(stages[-1][2].names):
-        stages += ((kernel, columns, declared),)
+    if df.is_cached:
+        source, stages = df.select(*columns), ((kernel, None, out_schema),)
+    elif stages and set(columns) <= set(df.columns):
+        stages += ((kernel, columns, out_schema),)
     else:
-        source, stages = spread(df.select(*columns), heavy=True), ((kernel, None, declared),)
+        source, stages = spread(df.select(*columns), heavy=True), ((kernel, None, out_schema),)
+    # only a producer's output is checked, so only its DDL must be flat
+    checks = [arrow_schema(ddl) for _, _, ddl in stages[:-1]]
 
     def run(batches):
         out = stages[0][0](batches)
-        for (producer, _, schema), (consumer, cols, _) in zip(stages, stages[1:]):
+        for (producer, _, _), schema, (consumer, cols, _) in zip(stages, checks, stages[1:]):
             out = consumer(_handed_over(out, producer, schema, cols))
         yield from out
 

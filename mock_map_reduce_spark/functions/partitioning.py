@@ -6,6 +6,9 @@ import os
 
 from pyspark.sql import DataFrame
 
+# Below this many source bytes a light (not ``heavy``) spread is a no-op.
+_MIN_BYTES = 64 << 20
+
 
 def _input_bytes(df: DataFrame) -> int | None:
     """Total size of the DataFrame's source files (None if unknowable)."""
@@ -28,12 +31,7 @@ def _input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def spread(
-    df: DataFrame,
-    parallelism: int | None = None,
-    heavy: bool = False,
-    min_bytes: int = 64 << 20,
-) -> DataFrame:
+def spread(df: DataFrame, heavy: bool = False) -> DataFrame:
     """Repartition to full parallelism before expensive per-row compute
     — ADAPTIVELY: a no-op whenever the shuffle cannot pay for itself.
 
@@ -45,7 +43,7 @@ def spread(
 
     * already parallel (>= half the target partitions): no-op — the
       100 TB case, where file splits provide the parallelism for free;
-    * small source (< ``min_bytes``) and not ``heavy``: no-op — a
+    * small source (< ``_MIN_BYTES``, 64 MiB) and not ``heavy``: no-op — a
       single-core scan of a few MB beats shuffling it (measured 2x on
       word_count/tf_idf at the bench scale);
     * ``heavy=True`` callers (per-shingle md5 pipelines and similar,
@@ -53,7 +51,7 @@ def spread(
       otherwise coalesce their small shuffles onto too few cores)
       repartition whenever under-parallel, regardless of size.
     """
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     try:
         parts = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001
@@ -62,6 +60,6 @@ def spread(
         return df
     if not heavy:
         total = _input_bytes(df)
-        if total is not None and total < min_bytes:
+        if total is not None and total < _MIN_BYTES:
             return df
     return df.repartition(n)

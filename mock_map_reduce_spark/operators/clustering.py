@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mock_map_reduce_spark.functions.arrowcols import decimals, fixed_dim, numbers, numeric
+from mock_map_reduce_spark.functions.arrowmap import arrow_map
 from mock_map_reduce_spark.functions.localdf import local_df
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.partitioning import spread
@@ -51,7 +52,7 @@ def _assign_arrow(
     executor CPU for 16k cosines cold, ~0.6 s/pass warm at sf0.1).
     Centroids are bounded driver state by contract (k×dim doubles —
     the Lloyd loop collects them every round anyway), so assignment
-    is now a single ``mapInArrow`` pass: NumPy evaluates the SAME
+    is now a single ``arrow_map`` pass: NumPy evaluates the SAME
     IEEE operation sequence vectorized across rows (guide §4.2) and
     no Exchange exists at all — at 100 TB the pass rides the scan.
 
@@ -63,7 +64,9 @@ def _assign_arrow(
     same double. Argmax ties break to the FIRST (= lowest cid, rows
     sorted by cid) exactly like the window's (cos DESC, cid ASC);
     NaN cosines (zero vectors) rank above any number in both: Spark
-    orders NaN largest, np.argmax propagates NaN.
+    orders NaN largest, np.argmax propagates NaN. A float ``e`` is
+    widened to double in the worker, exactly as ``as_double_array``
+    would, so callers spread the narrower raw column.
     """
     import numpy as np
     import pyarrow as pa
@@ -76,7 +79,7 @@ def _assign_arrow(
     if not cent_rows:  # no centroids -> no assignments (empty-pool edge)
         cols = [
             F.col("vec_id"),
-            F.col("e"),
+            as_double_array("e").alias("e"),
             F.lit(None).cast("bigint").alias("cell"),
         ] + ([F.lit(None).cast("double").alias("cos")] if with_cos else [])
         return v.select(*cols).filter(F.lit(False))
@@ -94,6 +97,8 @@ def _assign_arrow(
             if n == 0:
                 continue
             ecol = tbl.column(tbl.schema.get_field_index("e"))
+            if ecol.type.value_type != pa.float64():
+                ecol = ecol.cast(pa.list_(pa.float64()))
             # raises on ragged/null rows instead of silently
             # mis-assigning every vector after the first bad row
             E = fixed_dim(ecol, "assignment", dim=d)
@@ -116,7 +121,7 @@ def _assign_arrow(
                 names.append("cos")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return v.select("vec_id", "e").mapInArrow(fn, out_schema)
+    return arrow_map(fn, v, ["vec_id", "e"], out_schema)
 
 
 def _update(assigned: DataFrame, dim: int) -> DataFrame:
@@ -192,13 +197,13 @@ def _lloyd_rows(
     update, one k-row exchange, one bounded collect. Values are
     unchanged from the crossJoin/window formulation (see
     _assign_arrow), so the oracle is unaffected."""
-    # Round-11: pin the converted vector frame for the duration of the
+    # Round-11: pin the spread vector frame for the duration of the
     # loop — the seed collect and every Lloyd round scan it, and
-    # without the pin each pass re-ran the scan → double-array
-    # conversion lineage (n_iter+1 corpus passes instead of one). The
-    # MLlib convention (k-means persists its training input); released
-    # before returning, so nothing outlives the loop.
-    pinned = materialize(v, eager=False)
+    # without the pin each pass re-ran the scan lineage (n_iter+1
+    # corpus passes instead of one). The MLlib convention (k-means
+    # persists its training input); released before returning, so
+    # nothing outlives the loop. arrow_map maps the pin in place.
+    pinned = materialize(spread(v, heavy=True), eager=False)
     try:
         rows = _collect_cents(
             pinned.filter(F.col("vec_id") < k).select(
@@ -306,9 +311,8 @@ def kmeans_lloyd(
     A cell that loses all members simply drops out (no re-seeding) —
     deterministic and mirrored by the SQL oracle's inner joins.
     """
-    v = spread(
-        emb, heavy=True
-    ).select(F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("e"))
+    # raw floats, unspread: the spread moves 4-byte values (see _assign_arrow)
+    v = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e"))
     if init is not None:
         rows = _collect_cents(init)
         if rows:
@@ -359,9 +363,7 @@ def semdedup(
     of a cluster (by id) participate in pruning, bounding any one
     cluster's pair fan-out.
     """
-    v = spread(
-        emb, heavy=True
-    ).select(F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("e"))
+    v = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e"))
     rows = _lloyd_rows(v, k, n_iter)
     # Pin the final assignment: it feeds BOTH the pruning pool and the
     # final kept-flag join, so without this the corpus assignment pass
@@ -466,8 +468,6 @@ def pca_quantized(
     work. Exposed separately so the plan-pin test can assert the
     repartition on the stage that must scale (the returned PC1 frame
     itself is a constant-size driver-built table)."""
-    from mock_map_reduce_spark.functions.partitioning import spread
-
     # spread(heavy=True): a 100 TB embedding table arrives well-split,
     # but a small parquet file is ONE split — and the per-row d×d
     # outer-product accumulation is exactly the per-row-heavy work the
@@ -507,10 +507,10 @@ def power_iteration_pc1(
     oracle replays the identical three steps.
 
     Scale (100 TB of vectors): ONE corpus pass builds the d² Gram
-    cells — mapInArrow folds each Arrow batch into a d×d integer
-    Gram with numpy matmul, so only d(d+1)/2+d partial rows leave
-    each partition (d²·parts rows exchanged total, corpus never
-    re-read); the constant-size d×d result collects to the driver
+    cells — an arrow_map over the pin folds each Arrow batch into a
+    d×d integer Gram with numpy matmul, so only d(d+1)/2+d partial
+    rows leave each partition (d²·parts rows exchanged total, corpus
+    never re-read); the constant-size d×d result collects to the driver
     for the vocabulary-scale power steps — the split Spark MLlib's
     computePrincipalComponents uses. Driver holds only d×d ints.
     """
@@ -573,7 +573,7 @@ def power_iteration_pc1(
         )
 
     partial_rows = (
-        aq.mapInArrow(_gram_partials, "i int, j int, s decimal(38,0)")
+        arrow_map(_gram_partials, aq, ["aq"], "i int, j int, s decimal(38,0)")
         .groupBy("i", "j")
         .agg(F.sum("s").cast(_D38).alias("s"))
         .collect()

@@ -29,12 +29,17 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import re
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mock_map_reduce_spark.functions.arrowcols import fixed_width, numeric, strings
+from mock_map_reduce_spark.functions.arrowmap import arrow_map
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.pairs import ordered_pairs
-from mock_map_reduce_spark.functions.partitioning import spread as _spread
+from mock_map_reduce_spark.functions.partitioning import spread
 
 # Normalized tokens for fuzzy dedup: lowercase alphabetic runs.
 _TOKEN_RE = "[^A-Za-z]+"
@@ -47,6 +52,23 @@ _GRAMS_PER_CHUNK = 1 << 18
 def _norm_tokens(text_col: str) -> Column:
     toks = F.split(F.lower(F.col(text_col)), _TOKEN_RE)
     return F.filter(toks, lambda x: x != "")
+
+
+def _doc_tokens(batches, id_col: str, text_col: str):
+    """The tokenizer of the Arrow text kernels: per batch, its id column
+    and an iterator of (row, tokens) over its docs. Tokens are the
+    non-empty pieces of the lowercased text's UTF-8 bytes split on
+    ``_TOKEN_RE`` (a null text has none): ASCII letters are single
+    bytes and every other character encodes to bytes >= 0x80, so the
+    split is the one ``_norm_tokens`` makes on the str, and the tokens
+    are md5-ready keys. Kernels take their ids by row position."""
+    tok_re = re.compile(_TOKEN_RE.encode())
+    for batch in batches:
+        texts = batch.column(batch.schema.get_field_index(text_col)).to_pylist()
+        yield batch.column(batch.schema.get_field_index(id_col)), (
+            (row, [t for t in tok_re.split((text or "").lower().encode()) if t])
+            for row, text in enumerate(texts)
+        )
 
 
 def content_hash(text_col: str = "text") -> Column:
@@ -104,11 +126,7 @@ def shingles(
     chunk = _GRAMS_PER_CHUNK  # read here, so a patched value ships
 
     def _gram_kernel(batches):
-        import re
-
         import pyarrow as pa
-
-        tok_re = re.compile(_TOKEN_RE)
 
         def gram_batch(id_arr, rows, grams):
             return pa.RecordBatch.from_arrays(
@@ -116,20 +134,15 @@ def shingles(
                 names=[id_col, "gram"],
             )
 
-        for batch in batches:
-            id_arr = batch.column(batch.schema.get_field_index(id_col))
-            texts = batch.column(
-                batch.schema.get_field_index(text_col)
-            ).to_pylist()
+        for id_arr, docs in _doc_tokens(batches, id_col, text_col):
             out_row: list[int] = []  # batch position of each gram's doc
-            out_gram: list[str] = []
-            for row, text in enumerate(texts):
-                toks = [t for t in tok_re.split((text or "").lower()) if t]
+            out_gram: list[bytes] = []
+            for row, toks in docs:
                 if len(toks) < n:
                     continue
                 # dict.fromkeys == array_distinct: first occurrence wins
                 grams = dict.fromkeys(
-                    " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+                    b" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
                 )
                 out_row.extend([row] * len(grams))
                 out_gram.extend(grams)
@@ -140,9 +153,7 @@ def shingles(
             if out_gram:
                 yield gram_batch(id_arr, out_row, out_gram)
 
-    return _spread(
-        docs.select(F.col(id_col), F.col(text_col)), heavy=True
-    ).mapInArrow(_gram_kernel, out_schema)
+    return arrow_map(_gram_kernel, docs, [id_col, text_col], out_schema)
 
 
 def minhash_signatures(
@@ -189,15 +200,10 @@ def minhash_signatures(
 
     def _sig_kernel(batches):
         import hashlib
-        import re
 
         import numpy as np
         import pyarrow as pa
 
-        # bytes tokens: ASCII letters are single UTF-8 bytes and every
-        # other character encodes to bytes >= 0x80, so the split is
-        # the same as on the str, and the grams are md5-ready keys
-        tok_re = re.compile(_TOKEN_RE.encode())
         md5 = hashlib.md5
         seeds = [f"{s}|".encode() for s in range(n_digests)]
         names = [id_col] + [f"h{i}" for i in range(num_hashes)]
@@ -222,9 +228,7 @@ def minhash_signatures(
                 names=names,
             )
 
-        for batch in batches:
-            id_arr = batch.column(batch.schema.get_field_index(id_col))
-            texts = batch.column(batch.schema.get_field_index(text_col)).to_pylist()
+        for id_arr, docs in _doc_tokens(batches, id_col, text_col):
             # rows: batch positions of the docs in this chunk;
             # codes: every gram's code, doc after doc; starts: each
             # doc's first position in codes; grams: gram -> code
@@ -233,8 +237,7 @@ def minhash_signatures(
             codes: list[int] = []
             starts: list[int] = []
             grams: dict[bytes, int] = {}
-            for row, text in enumerate(texts):
-                toks = [t for t in tok_re.split((text or "").lower().encode()) if t]
+            for row, toks in docs:
                 if len(toks) < n:
                     continue
                 rows.append(row)
@@ -251,9 +254,7 @@ def minhash_signatures(
             if rows:
                 yield signatures(id_arr, rows, codes, starts, grams)
 
-    return _spread(
-        docs.select(F.col(id_col), F.col(text_col)), heavy=True
-    ).mapInArrow(_sig_kernel, out_schema)
+    return arrow_map(_sig_kernel, docs, [id_col, text_col], out_schema)
 
 
 def lsh_band_buckets(
@@ -472,31 +473,22 @@ def simhash(
 
     def _simhash_kernel(batches):
         import hashlib
-        import re
 
         import numpy as np
         import pyarrow as pa
 
-        tok_re = re.compile(_TOKEN_RE)
         md5 = hashlib.md5
         nbytes = (nib_count + 1) // 2
         bitpos = np.arange(bits)
         nibidx = bitpos // 4
         shift = bitpos % 4
-        for batch in batches:
-            id_arr = batch.column(batch.schema.get_field_index(id_col))
-            texts = batch.column(
-                batch.schema.get_field_index(text_col)
-            ).to_pylist()
+        for id_arr, docs in _doc_tokens(batches, id_col, text_col):
             out_row: list[int] = []
             out_sh: list[int] = []
-            for row, text in enumerate(texts):
-                toks = [
-                    t for t in tok_re.split((text or "").lower()) if t
-                ]
+            for row, toks in docs:
                 if not toks:
                     continue  # explode semantics: no tokens, no row
-                raw = b"".join(md5(t.encode()).digest()[:nbytes] for t in toks)
+                raw = b"".join(md5(t).digest()[:nbytes] for t in toks)
                 d = np.frombuffer(raw, dtype=np.uint8).reshape(
                     len(toks), nbytes
                 )
@@ -525,9 +517,7 @@ def simhash(
                 names=[id_col, "simhash"],
             )
 
-    return _spread(
-        docs.select(F.col(id_col), F.col(text_col)), heavy=True
-    ).mapInArrow(_simhash_kernel, out_schema)
+    return arrow_map(_simhash_kernel, docs, [id_col, text_col], out_schema)
 
 
 def simhash_candidate_pairs(
@@ -730,7 +720,7 @@ def duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    toks = _spread(
+    toks = spread(
         docs.select(F.col(id_col), F.col(text_col)), heavy=True
     ).select(F.col(id_col), _norm_tokens(text_col).alias("__toks"))
     idx = F.when(
@@ -924,3 +914,8 @@ def prefix_filter_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+# Ship by value, like operators/multimodal.py: the text kernels call
+# _doc_tokens in a worker without the repo on its sys.path.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mock_map_reduce_spark.functions.arrowcols import fixed_dim, numeric
+from mock_map_reduce_spark.functions.arrowmap import arrow_map
 from mock_map_reduce_spark.functions.pairs import ordered_pairs
 from mock_map_reduce_spark.functions.partitioning import spread
 
@@ -270,9 +271,7 @@ def ivf_assign(
             F.col(id_col).alias("cid"), as_double_array(vec_col).alias("ce")
         )
     )
-    v = spread(
-        vectors.select(F.col(id_col), as_double_array(vec_col).alias("vec")), heavy=True
-    ).select(F.col(id_col).alias("vec_id"), F.col("vec").alias("e"))
+    v = vectors.select(F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("e"))
     return _assign_arrow(v, rows, with_cos=False).select(
         F.col("vec_id").alias(id_col), "cell", F.col("e").alias("vec")
     )
@@ -448,7 +447,11 @@ def pq_codes(
     if dim % m:
         raise ValueError("dim must divide evenly into m subspaces")
     sub = dim // m
-    v = spread(vectors.select(F.col(id_col), as_double_array(vec_col).alias("e")), heavy=True)
+    # unspread: the codebook collect reads only the id < k rows, and
+    # arrow_map spreads the coding pass
+    v = vectors.select(
+        F.col(id_col).cast("bigint").alias(id_col), as_double_array(vec_col).alias("e")
+    )
     # Round-10: per-subspace argmin is the same map-only Arrow kernel
     # shape as the k-means assignment (operators/clustering
     # _assign_arrow) — the previous posexplode (m× rows) × broadcast
@@ -462,18 +465,18 @@ def pq_codes(
     # broadcast already implied).
     cb_rows = sorted(
         (int(r[0]), [float(x) for x in r[1]])
-        for r in v.filter(F.col(id_col) < k).select(id_col, "e").collect()
+        for r in v.filter(F.col(id_col) < k).collect()
     )
     if not cb_rows:
         # Empty codebook (no rows with id < k): the old broadcast-join
         # formulation returned an empty frame; np.argmin over a
         # zero-width array would instead raise on executors — mirror
         # _assign_arrow's empty-centroid guard (round-10 ADVICE). Both
-        # branches cast the id to bigint, so they return one schema
+        # branches read the bigint id of v, so they return one schema
         # whatever the source id type.
         return (
             v.select(
-                F.col(id_col).cast("bigint").alias(id_col),
+                F.col(id_col),
                 F.lit(None).cast("int").alias("subspace"),
                 F.lit(None).cast("bigint").alias("code"),
                 F.lit(None).cast("double").alias("sqdist"),
@@ -514,8 +517,8 @@ def pq_codes(
                 names=[id_col, "subspace", "code", "d"],
             )
 
-    coded = v.select(F.col(id_col).cast("bigint").alias(id_col), "e").mapInArrow(
-        fn, f"{id_col} bigint, subspace int, code bigint, d double"
+    coded = arrow_map(
+        fn, v, [id_col, "e"], f"{id_col} bigint, subspace int, code bigint, d double"
     )
     return coded.select(
         F.col(id_col),
@@ -554,7 +557,7 @@ def ann_topk_pq_adc(
     codes = pq_codes(vectors, dim, m, k, id_col, vec_col).select(
         id_col, "subspace", "code"
     )
-    v = spread(vectors.select(F.col(id_col), as_double_array(vec_col).alias("e")), heavy=True)
+    v = vectors.select(F.col(id_col), as_double_array(vec_col).alias("e"))
     slices = F.array(*[F.slice(F.col("e"), s * sub + 1, sub) for s in range(m)])
     cb = (
         v.filter(F.col(id_col) < k)
@@ -697,7 +700,7 @@ def ann_topk_ivf_pq(
     )
     coded = codes.join(cells, id_col)
     sub = dim // m
-    v = spread(vectors.select(F.col(id_col), as_double_array(vec_col).alias("e")), heavy=True)
+    v = vectors.select(F.col(id_col), as_double_array(vec_col).alias("e"))
     slices = F.array(*[F.slice(F.col("e"), s * sub + 1, sub) for s in range(m)])
     cb = (
         v.filter(F.col(id_col) < k)

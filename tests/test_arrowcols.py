@@ -21,6 +21,7 @@ from pyspark.sql import Row
 
 from mock_map_reduce_spark.catalog import scale
 from mock_map_reduce_spark.functions import arrowcols as ac
+from mock_map_reduce_spark.functions.arrowmap import arrow_map as am
 from mock_map_reduce_spark.operators import clustering as cl
 from mock_map_reduce_spark.operators import dedup as dd
 from mock_map_reduce_spark.operators import multimodal as mm
@@ -151,7 +152,7 @@ def _kernel(spark, monkeypatch, outer: str, run):
         real = getattr(owner, name)
 
         def wrapper(*args, **kwargs):
-            seen.append(args[0] if owner is mm else args[1])  # arrow_map(kernel, ...)
+            seen.append(args[0] if name == "arrow_map" else args[1])  # arrow_map(kernel, ...)
             return real(*args, **kwargs)
 
         m.setattr(owner, name, wrapper)
@@ -159,7 +160,9 @@ def _kernel(spark, monkeypatch, outer: str, run):
     with monkeypatch.context() as m:
         capture(m, type(df), "mapInArrow")  # the session's DataFrame class
         capture(m, type(df.groupBy("id")), "applyInArrow")
-        capture(m, mm, "arrow_map")
+        for modname, module in list(sys.modules.items()):  # every engine module importing it
+            if modname.startswith("mock_map_reduce_spark.") and vars(module).get("arrow_map") is am:
+                capture(m, module, "arrow_map")
         run()
     mine = [f for f in seen if f.__qualname__.split(".<locals>.")[0] == outer]
     assert mine, f"{outer} handed no function to mapInArrow/applyInArrow"
@@ -374,6 +377,21 @@ def test_kernel_runs_without_pandas(spark, sf_dir, monkeypatch, tmp_path, site):
     fn = _kernel(spark, monkeypatch, site[1], lambda: build(spark, sf_dir))
     got = _run_fresh(fn, grouped, make_input(), tmp_path)
     assert not got["pandas"], f"{site[1]}'s kernel imported pandas"
+
+
+def test_assignment_widens_float_vectors_exactly(spark, monkeypatch, tmp_path):
+    """k-means hands _assign_arrow its raw float vectors, so the spread
+    moves 4-byte values; the kernel widens them to the doubles
+    as_double_array would give, without pandas."""
+    build, _, _ = KERNELS[("operators/clustering.py", "_assign_arrow")]
+    fn = _kernel(spark, monkeypatch, "_assign_arrow", lambda: build(spark, None))
+    ids = ac.numeric(range(len(VECS)), pa.int64())
+    narrow = _batch(vec_id=ids, e=_lists(VECS, pa.float32()))
+    widened = [[float(np.float32(x)) for x in v] for v in VECS]
+    (got,), (want,) = fn([narrow]), fn([_batch(vec_id=ids, e=_lists(widened))])
+    assert got.to_pylist() == want.to_pylist()
+    assert got.schema == want.schema
+    assert not _run_fresh(fn, False, narrow, tmp_path)["pandas"]
 
 
 def test_fused_chain_runs_without_pandas(spark, monkeypatch, tmp_path):

@@ -12,6 +12,7 @@ from pyspark.sql import Row, functions as F
 
 from mock_map_reduce_spark import registry
 from mock_map_reduce_spark.functions.arrowmap import arrow_map
+from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.operators import multimodal as mm
 from mock_map_reduce_spark.plans import executed_plan
 from mock_map_reduce_spark.sources import load_table
@@ -324,6 +325,18 @@ def sf001(sf_dir):
     return path
 
 
+def _built(spark, build):
+    """The DataFrame ``build()`` returns and the Spark jobs it fired."""
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build only")
+    try:
+        df = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("name", sorted(UNFUSED))
 def test_chain_entry_runs_both_maps_in_one_worker(spark, sf001, name):
     """The entry's two maps are one MapInArrow, building it runs no
@@ -331,14 +344,8 @@ def test_chain_entry_runs_both_maps_in_one_worker(spark, sf001, name):
     registry.load_all()
     build = registry.QUERIES[name]
     build(spark, sf001)  # the first load of a table infers its schema in a job
-    sc = spark.sparkContext
-    group = f"build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "build only")
-    try:
-        fused = build(spark, sf001)
-    finally:
-        sc._jsc.clearJobGroup()
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    fused, jobs = _built(spark, lambda: build(spark, sf001))
+    assert jobs == []
     got = sorted(map(tuple, fused.collect()))
     assert _maps(fused) == 1
 
@@ -358,6 +365,42 @@ def test_cached_producer_is_not_fused(spark):
     finally:
         produced.unpersist()
     assert rows == sorted(map(tuple, mm.image_features(mm.synthesize_image_table(docs)).collect()))
+
+
+def test_arrow_map_reads_a_pin_in_place(spark, sf_dir):
+    """Over a pinned frame arrow_map maps the cached blocks where they
+    are: no RoundRobin exchange, and no Spark job while building (no
+    spread probe). The same single-split scan unpinned is spread."""
+
+    def ids(batches):
+        yield from batches
+
+    docs = load_table(spark, sf_dir, "documents")
+    n = spark.sparkContext.defaultParallelism
+    assert docs.rdd.getNumPartitions() < max(2, n // 2)  # under-parallel here
+    spread_map = arrow_map(ids, docs, ["doc_id"], "doc_id bigint")
+    assert "RoundRobinPartitioning" in executed_plan(spread_map)
+
+    pinned = materialize(docs.select("doc_id", "text"))
+    try:
+        mapped, jobs = _built(spark, lambda: arrow_map(ids, pinned, ["doc_id"], "doc_id bigint"))
+        assert jobs == []
+        plan = executed_plan(mapped)
+        assert "InMemoryTableScan" in plan
+        assert "RoundRobinPartitioning" not in plan
+        assert sorted(mapped.collect()) == sorted(spread_map.collect())
+    finally:
+        release(pinned)
+
+
+def test_pq_codes_build_fires_at_most_one_job(spark, sf_dir):
+    """Building similarity_pq_codes collects its k-row codebook straight
+    from the scan (one job) and leaves the spread to its arrow_map, so
+    no RoundRobin exchange runs at build time."""
+    registry.load_all()
+    build = registry.QUERIES["similarity_pq_codes"]
+    build(spark, sf_dir)  # the first load of a table infers its schema in a job
+    assert len(_built(spark, lambda: build(spark, sf_dir))[1]) <= 1
 
 
 def test_fused_map_checks_the_producer_schema(spark):
