@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mock_map_reduce_spark.operators import retrieval as ir
+from mock_map_reduce_spark.operators.text import word_tokens
 from mock_map_reduce_spark.registry import query
 from mock_map_reduce_spark.sources import load_table
 
@@ -177,15 +178,12 @@ def q_text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mock_map_reduce_spark.functions.partitioning import spread
 
     docs = load_table(spark, sf_dir, "documents")
-    # heavy=True: 3 md5 evals per token is exactly the per-row-heavy
-    # regime the adaptive spread exists for (measured 1.20 s -> 0.77 s
-    # at sf0.1, where the corpus arrives as one split); a no-op at
-    # 100 TB where splits already provide the parallelism.
-    toks = spread(docs.select("doc_id", "text"), heavy=True).select(
-        "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), "[^a-z]+"), lambda x: x != F.lit(""))
-        ).alias("word"),
+    # spread: 3 md5 evals per token is exactly the per-row-heavy regime
+    # spread exists for (measured 1.20 s -> 0.77 s at sf0.1, where the
+    # corpus arrives as one split); a no-op at 100 TB where splits
+    # already provide the parallelism.
+    toks = spread(docs.select("doc_id", "text")).select(
+        "doc_id", F.explode(word_tokens("text")).alias("word")
     )
     hexpos = "instr('0123456789abcdef', substring(md5(concat('fh|', word)), {}, 1)) - 1"
     h = toks.select(

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mock_map_reduce_spark.functions.materialize import materialize
+from mock_map_reduce_spark.operators.text import word_tokens
 from mock_map_reduce_spark.registry import query
 from mock_map_reduce_spark.sources import load_table
 
@@ -288,11 +289,7 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
-        docs.select(
-            F.explode(
-                F.filter(F.split(F.lower("text"), "[^a-z]+"), lambda x: x != F.lit(""))
-            ).alias("word")
-        )
+        docs.select(F.explode(word_tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

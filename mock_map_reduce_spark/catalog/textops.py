@@ -716,7 +716,7 @@ def q_text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     dwc = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word"),
+            F.explode(F.split(F.lower(F.col("text")), tx.WORD_SPLIT_RE)).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("doc_id", "word")
@@ -937,12 +937,7 @@ def q_text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()  # scalar, constant driver state (kmeans contract)
-    words = docs.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), "[^a-z]+"), lambda x: x != F.lit(""))
-        ).alias("word"),
-    )
+    words = docs.select("doc_id", F.explode(tx.word_tokens("text")).alias("word"))
     aggs = []
     for p in _VOCAB_PCTS:
         t = n * p // 100

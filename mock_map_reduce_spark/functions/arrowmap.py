@@ -8,9 +8,9 @@
   Spreading a pin would reshuffle its cached blocks.
 * ``df`` is the very DataFrame an earlier ``arrow_map`` returned and
   ``columns`` are among its columns: fused with that map (below).
-* Otherwise over ``spread(df.select(*columns), heavy=True)``. Callers
-  hand over their unspread projection: spread's probe over an earlier
-  spread fires a Spark job.
+* Otherwise over ``spread(df.select(*columns))``: a kernel is per-row
+  heavy work. Callers hand over their unspread projection: spread's
+  probe over an earlier spread fires a Spark job.
 
 Spark does not merge adjacent ``MapInArrow`` nodes, so two maps in a row
 hold two Python workers per task and send the payload across the
@@ -54,7 +54,7 @@ def arrow_map(
     elif stages and set(columns) <= set(df.columns):
         stages += ((kernel, columns, out_schema),)
     else:
-        source, stages = spread(df.select(*columns), heavy=True), ((kernel, None, out_schema),)
+        source, stages = spread(df.select(*columns)), ((kernel, None, out_schema),)
     # only a producer's output is checked, so only its DDL must be flat
     checks = [arrow_schema(ddl) for _, _, ddl in stages[:-1]]
 

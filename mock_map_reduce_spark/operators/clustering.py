@@ -165,20 +165,6 @@ def _update(assigned: DataFrame, dim: int) -> DataFrame:
     )
 
 
-def _pin_centroids(cents: DataFrame) -> DataFrame:
-    """Collect a (cid, ce) centroid frame (k x dim doubles — bounded)
-    and rebuild it as a LocalRelation leaf, so iterative loops carry
-    no lineage between rounds — the Spark-MLlib k-means convention.
-    Round 10: the leaf is a TRUE JVM LocalRelation (functions/localdf)
-    — the old list createDataFrame executed as a 32-task PythonRDD on
-    every broadcast/scan of the pinned frame."""
-    return local_df(
-        cents.sparkSession,
-        _collect_cents(cents),
-        "cid bigint, ce array<double>",
-    )
-
-
 def _collect_cents(cents: DataFrame) -> list[tuple[int, list[float]]]:
     """Driver-side centroid rows, cid-ascending (bounded k×dim)."""
     return sorted(
@@ -203,7 +189,7 @@ def _lloyd_rows(
     # corpus passes instead of one). The MLlib convention (k-means
     # persists its training input); released before returning, so
     # nothing outlives the loop. arrow_map maps the pin in place.
-    pinned = materialize(spread(v, heavy=True), eager=False)
+    pinned = materialize(spread(v), eager=False)
     try:
         rows = _collect_cents(
             pinned.filter(F.col("vec_id") < k).select(
@@ -252,9 +238,9 @@ def kcenter_init(
     merge decision and MLlib's own k-means); the argmin pick itself
     stays a DataFrame.
     """
-    v = spread(
-        emb, heavy=True
-    ).select(F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("e"))
+    v = spread(emb).select(
+        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("e")
+    )
     # Round-11: PIN the candidate pool — every one of the k selection
     # rounds below scans it, and without the pin each round re-ran the
     # full scan → md5-prefix filter → double-array conversion lineage
@@ -268,9 +254,8 @@ def kcenter_init(
         ),
         eager=False,
     )
-    # Round-10 shape: the chosen set is driver rows (≤k×dim — the same
-    # bounded-collect convention as before, which pinned per round via
-    # _pin_centroids); each selection round is ONE map-only Arrow
+    # Round-10 shape: the chosen set is driver rows (≤k×dim — the
+    # bounded-collect convention); each selection round is ONE map-only Arrow
     # best-cosine pass (_assign_arrow's cos IS max-cosine-to-the-set)
     # reduced by a single min-struct aggregate — the crossJoin ×
     # groupBy(vec_id) × pick-join chain per round is gone. Values are
@@ -464,21 +449,20 @@ def pca_quantized(
     vecs: DataFrame, vec_col: str = "embedding", q: int = 1_000_000
 ) -> DataFrame:
     """Corpus-scale stage of power_iteration_pc1: quantize each vector
-    to integer micro-units and spread(heavy=True) for the per-row Gram
-    work. Exposed separately so the plan-pin test can assert the
+    to integer micro-units and spread it for the per-row Gram work.
+    Exposed separately so the plan-pin test can assert the
     repartition on the stage that must scale (the returned PC1 frame
     itself is a constant-size driver-built table)."""
-    # spread(heavy=True): a 100 TB embedding table arrives well-split,
-    # but a small parquet file is ONE split — and the per-row d×d
-    # outer-product accumulation is exactly the per-row-heavy work the
-    # adaptive policy exists for (measured 4x on the bench query).
+    # spread: a 100 TB embedding table arrives well-split, but a small
+    # parquet file is ONE split — and the per-row d×d outer-product
+    # accumulation is exactly the per-row-heavy work spread exists for
+    # (measured 4x on the bench query).
     return spread(
         vecs.select(
             F.expr(
                 f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * {q} + 0.5) AS BIGINT))"
             ).alias("aq")
-        ),
-        heavy=True,
+        )
     )
 
 
@@ -512,12 +496,9 @@ def power_iteration_pc1(
     rows leave each partition (d²·parts rows exchanged total, corpus
     never re-read); the constant-size d×d result collects to the driver
     for the vocabulary-scale power steps — the split Spark MLlib's
-    computePrincipalComponents uses. Driver holds only d×d ints.
+    computePrincipalComponents uses. Driver holds only d×d ints. The
+    pin is released before returning, also when a batch fails.
     """
-    aq = materialize(pca_quantized(vecs, vec_col, q))
-    nd = aq.agg(F.count(F.lit(1)).alias("n"), F.max(F.size("aq")).alias("d")).first()
-    n, d = int(nd["n"]), int(nd["d"])
-
     # Gram accumulation via mapInArrow: each Arrow batch folds its rows
     # into ONE d×d integer Gram (numpy int64 matmul) plus the column-sum
     # vector, emitted as d(d+1)/2 + d partial rows per PARTITION — the
@@ -572,12 +553,18 @@ def power_iteration_pc1(
             names=["i", "j", "s"],
         )
 
-    partial_rows = (
-        arrow_map(_gram_partials, aq, ["aq"], "i int, j int, s decimal(38,0)")
-        .groupBy("i", "j")
-        .agg(F.sum("s").cast(_D38).alias("s"))
-        .collect()
-    )
+    aq = materialize(pca_quantized(vecs, vec_col, q))
+    try:
+        nd = aq.agg(F.count(F.lit(1)).alias("n"), F.max(F.size("aq")).alias("d")).first()
+        partial_rows = (
+            arrow_map(_gram_partials, aq, ["aq"], "i int, j int, s decimal(38,0)")
+            .groupBy("i", "j")
+            .agg(F.sum("s").cast(_D38).alias("s"))
+            .collect()
+        )
+    finally:
+        release(aq)
+    n, d = int(nd["n"]), int(nd["d"])
     sums_i = {int(r.i): int(r.s) for r in partial_rows if r.j == -1}
     # Rescale by 1/n after the exact accumulation (a scalar multiple —
     # identical eigenvectors): keeps every later magnitude, including
@@ -656,7 +643,8 @@ def train_hinge_classifier(
     partial-aggregate map-side and the weights travel as literals in
     the task closures (k doubles); the driver holds only the k-vector
     between steps (same contract as kmeans centroids). materialize
-    pins the feature frame once; steps never re-derive it.
+    pins the feature frame once; steps never re-derive it, and the pin
+    is released before returning.
     """
     spark = feats.sparkSession
     f = materialize(feats)
@@ -666,18 +654,21 @@ def train_hinge_classifier(
         dot = sum(F.col(f"x{i}") * F.lit(gw[i]) for i in range(n_features))
         return F.col("y") * dot
 
-    for _ in range(n_steps):
-        viol = f.filter(margin_num() < scale)
-        grads = viol.agg(
-            *[F.sum(F.col("y") * F.col(f"x{i}")).alias(f"g{i}") for i in range(n_features)]
-        ).first()
-        for i in range(n_features):
-            gw[i] += int(grads[f"g{i}"] or 0)
+    try:
+        for _ in range(n_steps):
+            viol = f.filter(margin_num() < scale)
+            grads = viol.agg(
+                *[F.sum(F.col("y") * F.col(f"x{i}")).alias(f"g{i}") for i in range(n_features)]
+            ).first()
+            for i in range(n_features):
+                gw[i] += int(grads[f"g{i}"] or 0)
 
-    counts = f.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((margin_num() > 0).cast("long")).alias("c"),
-    ).first()
+        counts = f.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((margin_num() > 0).cast("long")).alias("c"),
+        ).first()
+    finally:
+        release(f)
     rows = [(f"w_{i}", gw[i]) for i in range(n_features)]
     rows += [("__n_train", int(counts["n"])), ("__n_correct", int(counts["c"] or 0))]
     return local_df(spark, rows, "name string, value bigint")

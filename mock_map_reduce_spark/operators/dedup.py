@@ -40,29 +40,22 @@ from mock_map_reduce_spark.functions.arrowmap import arrow_map
 from mock_map_reduce_spark.functions.materialize import materialize, release
 from mock_map_reduce_spark.functions.pairs import ordered_pairs
 from mock_map_reduce_spark.functions.partitioning import spread
-
-# Normalized tokens for fuzzy dedup: lowercase alphabetic runs.
-_TOKEN_RE = "[^A-Za-z]+"
+from mock_map_reduce_spark.operators.text import WORD_SPLIT_RE, word_tokens
 
 # Grams a Python-worker kernel buffers before it emits (shingles) or
 # hashes and reduces (MinHash) them. Read when the DataFrame is built.
 _GRAMS_PER_CHUNK = 1 << 18
 
 
-def _norm_tokens(text_col: str) -> Column:
-    toks = F.split(F.lower(F.col(text_col)), _TOKEN_RE)
-    return F.filter(toks, lambda x: x != "")
-
-
 def _doc_tokens(batches, id_col: str, text_col: str):
     """The tokenizer of the Arrow text kernels: per batch, its id column
     and an iterator of (row, tokens) over its docs. Tokens are the
     non-empty pieces of the lowercased text's UTF-8 bytes split on
-    ``_TOKEN_RE`` (a null text has none): ASCII letters are single
+    ``WORD_SPLIT_RE`` (a null text has none): ASCII letters are single
     bytes and every other character encodes to bytes >= 0x80, so the
-    split is the one ``_norm_tokens`` makes on the str, and the tokens
+    split is the one ``word_tokens`` makes on the str, and the tokens
     are md5-ready keys. Kernels take their ids by row position."""
-    tok_re = re.compile(_TOKEN_RE.encode())
+    tok_re = re.compile(WORD_SPLIT_RE.encode())
     for batch in batches:
         texts = batch.column(batch.schema.get_field_index(text_col)).to_pylist()
         yield batch.column(batch.schema.get_field_index(id_col)), (
@@ -110,7 +103,7 @@ def shingles(
     """Distinct word n-gram shingles per doc: (id, gram).
 
     Round-11: ONE map-only Arrow pass — the Python worker tokenizes
-    (same ``[^A-Za-z]+`` split on the same lowercased text as the JVM
+    (same ``WORD_SPLIT_RE`` split on the same lowercased text as the JVM
     formulation) and emits each doc's distinct grams in first-
     occurrence order, exactly what the previous split → transform →
     array_distinct → explode expression chain produced (verified
@@ -178,7 +171,7 @@ def minhash_signatures(
     #
     # One map-only Arrow pass per partition, emitting exactly one
     # row per doc with >= n tokens and no exchange. The worker
-    # tokenizes (the same [^A-Za-z]+ split on the same lowercased
+    # tokenizes (the same WORD_SPLIT_RE split on the same lowercased
     # text as DuckDB) and gives each gram an integer code from a
     # dict local to a chunk of about _GRAMS_PER_CHUNK grams (a
     # chunk ends at a doc boundary), so each distinct gram is
@@ -720,9 +713,9 @@ def duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    toks = spread(
-        docs.select(F.col(id_col), F.col(text_col)), heavy=True
-    ).select(F.col(id_col), _norm_tokens(text_col).alias("__toks"))
+    toks = spread(docs.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), word_tokens(text_col).alias("__toks")
+    )
     idx = F.when(
         F.size("__toks") >= w, F.sequence(F.lit(0), F.size("__toks") - w)
     ).otherwise(F.array().cast("array<int>"))

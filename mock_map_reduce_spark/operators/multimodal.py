@@ -15,7 +15,7 @@ same ``decode_image`` seam via PIL when present. ``byte_features``
 remains the codec-free extractor (byte-histogram moments).
 
 Scale notes (100 TB of media): payloads dominate row size — they may
-move at most ONCE through the adaptive ``spread`` round-robin when the
+move at most ONCE through the ``spread`` round-robin when the
 source is under-parallel (the same tradeoff as every heavy operator),
 and must NEVER enter a keyed shuffle (select metadata before groupBy /
 join; feature-extract first, then drop the payload). ``mapInArrow``

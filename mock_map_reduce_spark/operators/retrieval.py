@@ -24,14 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# Tokenizer shared with operators/text.py: lowercase, alpha runs only.
-_SPLIT = r"[^a-z]+"
-
-
-def _tokens(text_col: str) -> Column:
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), _SPLIT), lambda x: x != F.lit("")
-    )
+from mock_map_reduce_spark.operators.text import word_tokens
 
 
 def bm25_topk(
@@ -60,11 +53,11 @@ def bm25_topk(
     def _tf(term: str) -> Column:
         # NOTE: the lambda must be unary — PySpark treats a 2-parameter
         # callable (even one with a default) as (element, index).
-        return F.size(F.filter(_tokens(text_col), lambda x: x == F.lit(term)))
+        return F.size(F.filter(word_tokens(text_col), lambda x: x == F.lit(term)))
 
     per_doc = docs.select(
         F.col(id_col),
-        F.size(_tokens(text_col)).alias("dl"),
+        F.size(word_tokens(text_col)).alias("dl"),
         *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
     )
     stats = per_doc.agg(
@@ -123,7 +116,7 @@ def inverted_index(
     the oracle.
     """
     pairs = (
-        docs.select(F.col(id_col), F.explode(F.array_distinct(_tokens(text_col))).alias("term"))
+        docs.select(F.col(id_col), F.explode(F.array_distinct(word_tokens(text_col))).alias("term"))
     )
     return (
         pairs.groupBy("term")
@@ -162,7 +155,7 @@ def spelling_variants(
     trade, exactly as in record-linkage practice.
     """
     vocab = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
+        docs.select(F.explode(word_tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("df"))
         .withColumn("blk", F.substring("word", 1, prefix_len))

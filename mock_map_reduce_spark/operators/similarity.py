@@ -89,7 +89,7 @@ def brute_force_topk(
         qcols.append(F.col(exclude_label_col).alias("__qlabel"))
         ccols.append(F.col(exclude_label_col).alias("__nlabel"))
     q = queries.select(*qcols)
-    c = spread(corpus.select(*ccols), heavy=True)
+    c = spread(corpus.select(*ccols))
     joined = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col(query_id_col)
     )
@@ -122,7 +122,7 @@ def cosine_pairs_above(
     verification pass over LSH candidates at scale (pass a candidate
     pair DataFrame through ``score_pairs`` instead for that).
     """
-    a = spread(emb.select(F.col(id_col).alias("id_a"), as_double_array(vec_col).alias("va")), heavy=True)
+    a = spread(emb.select(F.col(id_col).alias("id_a"), as_double_array(vec_col).alias("va")))
     b = emb.select(F.col(id_col).alias("id_b"), as_double_array(vec_col).alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -195,7 +195,7 @@ def ann_topk_lsh(
     shrinks ~2^b-fold per probe; multiprobe trades (b+1)x candidates
     for much better recall.
     """
-    c = spread(corpus.select(F.col(id_col), F.col(vec_col)), heavy=True).select(
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col))).select(
         F.col(id_col).alias("neighbor_id"),
         as_double_array(vec_col).alias("cvec"),
         lsh_bucket(F.col(vec_col), dim, nbits, seed).alias("bucket"),
@@ -338,7 +338,7 @@ def embedding_near_dup_lsh(
     near-identical vectors (the dedup regime) almost always do — use
     fewer bits or multiprobe for looser thresholds.
     """
-    tagged = spread(emb.select(F.col(id_col), F.col(vec_col)), heavy=True).select(
+    tagged = spread(emb.select(F.col(id_col), F.col(vec_col))).select(
         F.col(id_col),
         as_double_array(vec_col).alias("vec"),
         lsh_bucket(F.col(vec_col), dim, nbits, seed).alias("bucket"),
@@ -614,7 +614,7 @@ def ivf_assign_multi(
     c = centroids.select(
         F.col(id_col).alias(centroid_id_col), as_double_array(vec_col).alias("cent")
     )
-    v = spread(vectors.select(F.col(id_col), as_double_array(vec_col).alias("vec")), heavy=True)
+    v = spread(vectors.select(F.col(id_col), as_double_array(vec_col).alias("vec")))
     scored = v.crossJoin(F.broadcast(c)).select(
         id_col,
         "vec",

@@ -27,6 +27,9 @@ STOPWORDS = {
 }
 
 _WS_RE = r"\s+"
+# The word rule of the text, dedup and retrieval operators: lowercase,
+# split on every non-[a-z] run, drop the empty tokens.
+WORD_SPLIT_RE = "[^a-z]+"
 # BPE-ish pre-tokenization: letter runs, digit runs, or single
 # non-space symbols — the common GPT-2-style pre-split shape.
 _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -36,16 +39,16 @@ def _ws_tokens(text_col: str) -> Column:
     return F.filter(F.split(F.col(text_col), _WS_RE), lambda x: x != "")
 
 
-def _word_tokens(text_col: str) -> Column:
+def word_tokens(text_col: str) -> Column:
+    """The lowercase word tokens of ``text_col`` (``WORD_SPLIT_RE``)."""
     return F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda x: x != ""
+        F.split(F.lower(F.col(text_col)), WORD_SPLIT_RE), lambda x: x != ""
     )
 
 
 def token_stats(docs_in: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Token counts per doc: whitespace tokens, BPE-ish pieces, chars."""
-    docs = spread(docs_in.select(id_col, text_col))
-    return docs.select(
+    return docs_in.select(
         F.col(id_col),
         F.size(_ws_tokens(text_col)).cast("long").alias("n_ws_tokens"),
         F.size(F.regexp_extract_all(F.col(text_col), F.lit(_BPE_RE), 0)).cast("long").alias("n_bpe_pieces"),
@@ -63,7 +66,7 @@ def quality_score(docs_in: DataFrame, text_col: str = "text", id_col: str = "doc
       * dedup_token_ratio — distinct tokens / tokens (repetition guard)
     score = weighted blend, bounded [0, 1]-ish; rounded to 6.
     """
-    toks = _word_tokens(text_col)
+    toks = word_tokens(text_col)
     n_toks = F.size(toks)
     sw = F.array([F.lit(w) for w in STOPWORDS["en"]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
@@ -81,8 +84,7 @@ def quality_score(docs_in: DataFrame, text_col: str = "text", id_col: str = "doc
         + alpha_ratio * 0.25
         + distinct_ratio * 0.25
     )
-    docs = spread(docs_in.select(id_col, text_col))
-    return docs.select(
+    return docs_in.select(
         F.col(id_col),
         F.round(mean_word_len, 6).alias("mean_word_len"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
@@ -99,7 +101,7 @@ def language_id(docs_in: DataFrame, text_col: str = "text", id_col: str = "doc_i
     argmax with deterministic tie-break on language code. 'und' when
     no list scores > 0.
     """
-    toks = _word_tokens(text_col)
+    toks = word_tokens(text_col)
     n_toks = F.size(toks)
     scores = []
     for lang in sorted(STOPWORDS):
@@ -115,8 +117,7 @@ def language_id(docs_in: DataFrame, text_col: str = "text", id_col: str = "doc_i
     # equal scores tie-break to the lexicographically LARGEST language
     # code (documented contract, mirrored in the SQL oracle).
     best = F.array_max(F.array(*scores))
-    docs = spread(docs_in.select(id_col, text_col))
-    return docs.select(
+    return docs_in.select(
         F.col(id_col),
         F.when(best["score"] > 0, best["lang"]).otherwise("und").alias("lang_pred"),
         F.round(best["score"], 6).alias("lang_score"),
@@ -130,9 +131,8 @@ def fingerprint(docs_in: DataFrame, text_col: str = "text", id_col: str = "doc_i
     spaces — robust to case/punctuation/whitespace-only edits. md5 so
     the DuckDB oracle reproduces it bit-for-bit.
     """
-    normalized = F.array_join(_word_tokens(text_col), " ")
-    docs = spread(docs_in.select(id_col, text_col))
-    return docs.select(
+    normalized = F.array_join(word_tokens(text_col), " ")
+    return docs_in.select(
         F.col(id_col), F.md5(normalized).alias("fingerprint")
     )
 
@@ -154,7 +154,6 @@ def rolling_fingerprint(
     2^31-1 so acc*base + v stays far below 2^63 (DuckDB BIGINT raises
     on overflow; Java would wrap silently — the mod keeps both exact).
     """
-    docs = spread(docs_in.select(id_col, text_col))
     # Token hashing must run as a flat codegen projection, NOT inside
     # the fold: CollapseProject re-inlines a single-use projected
     # array into the aggregate operand, and HOF lambdas re-evaluate
@@ -164,8 +163,8 @@ def rolling_fingerprint(
     # doc (the same partial-collapse shape as minhash: a doc's tokens
     # stay in one partition, so collect_list sees one partial row
     # group pre-shuffle).
-    toked = docs.select(
-        F.col(id_col), F.posexplode_outer(_word_tokens(text_col)).alias("__p", "__t")
+    toked = docs_in.select(
+        F.col(id_col), F.posexplode_outer(word_tokens(text_col)).alias("__p", "__t")
     )
     hashed = toked.select(
         F.col(id_col),
@@ -202,8 +201,8 @@ def tf_idf(
     is vocabulary-sized (small) and broadcast; the tf side never
     re-shuffles the corpus.
     """
-    words = spread(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(_word_tokens(text_col)).alias("word")
+    words = docs.select(
+        F.col(id_col), F.explode(word_tokens(text_col)).alias("word")
     )
     tf = words.groupBy(id_col, "word").agg(F.count("*").alias("tf"))
     df = tf.groupBy("word").agg(F.count("*").alias("df")).filter(F.col("df") >= min_df)
@@ -247,8 +246,8 @@ def tf_idf_by_language(
     join) and never again.
     """
     langs = language_id(docs, text_col, id_col).select(id_col, "lang_pred")
-    words = spread(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(_word_tokens(text_col)).alias("word")
+    words = docs.select(
+        F.col(id_col), F.explode(word_tokens(text_col)).alias("word")
     )
     tf = words.groupBy(id_col, "word").agg(F.count("*").alias("tf"))
     tfl = tf.join(langs, id_col)
@@ -286,7 +285,7 @@ def repetition_ratio(
     # transform references it per element, and an inline tokenizer
     # would re-run the regex split once per gram: a higher-order
     # function's lambda re-evaluates its operand expression per element.
-    base = docs_in.select(F.col(id_col), _word_tokens(text_col).alias("__w"))
+    base = docs_in.select(F.col(id_col), word_tokens(text_col).alias("__w"))
     grams = F.when(
         F.size("__w") >= n,
         F.transform(
@@ -354,8 +353,8 @@ def rank_surprisal(
     """
     from pyspark.sql.window import Window
 
-    toks = spread(docs_in.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(_word_tokens(text_col)).alias("tok")
+    toks = docs_in.select(
+        F.col(id_col), F.explode(word_tokens(text_col)).alias("tok")
     )
     # per-doc term counts first: the corpus-sized shuffle happens once
     tf = toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
@@ -445,7 +444,7 @@ def profile_features(
     ``include_digest=False`` when you don't need it — it is the one
     expensive extra column in the projection.
     """
-    toks = _word_tokens(text_col)
+    toks = word_tokens(text_col)
     n_toks = F.size(toks)
     # language vote (mirrors language_id)
     scores = []
@@ -476,7 +475,6 @@ def profile_features(
         + alpha_ratio * 0.25
         + distinct_ratio * 0.25
     )
-    docs = spread(docs_in.select(id_col, text_col))
     cols = [
         F.col(id_col),
         F.when(best["score"] > 0, best["lang"]).otherwise("und").alias("lang_pred"),
@@ -486,7 +484,7 @@ def profile_features(
     ]
     if include_digest:
         cols.append(F.sha2(F.col(text_col), 256).alias("__digest"))
-    return docs.select(*cols)
+    return docs_in.select(*cols)
 
 
 def bpe_pair_counts(
@@ -506,8 +504,7 @@ def bpe_pair_counts(
     across engines and retries.
     """
     words = (
-        spread(docs_in.select(text_col))
-        .select(F.explode(F.split(F.col(text_col), "[^A-Za-z]+")).alias("word"))
+        docs_in.select(F.explode(F.split(F.col(text_col), "[^A-Za-z]+")).alias("word"))
         .filter(F.length("word") >= 2)
     )
     pairs = words.select(
@@ -558,14 +555,14 @@ def bpe_train(
     8 merges over the 31 words take about 1 ms on a 4-vCPU host.
     """
     spark = docs_in.sparkSession
-    # spread(heavy=True): the tokenize+explode feeding the word-freq
-    # groupBy is per-row-heavy (regex split per doc) and the bench
-    # corpus arrives as ONE split — round-11 profiling showed this
+    # spread: the tokenize+explode feeding the word-freq groupBy is
+    # per-row-heavy (regex split per doc) and the bench corpus arrives
+    # as ONE split — round-11 profiling showed this
     # stage running 2.2 s on a single task. No-op at 100 TB where file
     # splits provide parallelism (same policy as text_feature_hashing).
     wf = (
-        spread(docs_in.select(text_col), heavy=True)
-        .select(F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("word"))
+        spread(docs_in.select(text_col))
+        .select(F.explode(F.split(F.lower(F.col(text_col)), WORD_SPLIT_RE)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -611,8 +608,7 @@ def bpe_segment_vocab(
     scan: segmentation cost is O(vocab), accounting is a join.
     """
     seqs = (
-        spread(docs_in.select(text_col))
-        .select(F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("word"))
+        docs_in.select(F.explode(F.split(F.lower(F.col(text_col)), WORD_SPLIT_RE)).alias("word"))
         .filter(F.col("word") != "")
         .distinct()
         .select("word", F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("seq"))
@@ -655,8 +651,8 @@ def bigram_logprob(
     falls back to a sort-merge join on (w1, w2); the plan shape
     downstream is unchanged.
     """
-    t = spread(docs.select(id_col, text_col), heavy=True).select(
-        F.col(id_col), _word_tokens(text_col).alias("w")
+    t = spread(docs.select(id_col, text_col)).select(
+        F.col(id_col), word_tokens(text_col).alias("w")
     )
     # sequence(1, size-1) DESCENDS when size < 2 — filter first.
     b = (
@@ -677,9 +673,9 @@ def bigram_logprob(
     # exactly Σ_w2 c(w1,w2), so aggregating the distinct-bigram table
     # (model-scale) replaces a second corpus-scale tokenize+explode
     # pass — same exact integers, one fewer full pass (guide §1.2:
-    # don't compute what another stage already holds). heavy=True on
-    # the tokenize spread: three corpus passes of per-row
-    # explode/aggregate work ran single-split at bench scale.
+    # don't compute what another stage already holds). The tokenize is
+    # spread: three corpus passes of per-row explode/aggregate work ran
+    # single-split at bench scale.
     uni = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = t.select(F.explode("w").alias("tok")).agg(
         F.countDistinct("tok").alias("vocab")

@@ -41,8 +41,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from mock_map_reduce_spark.functions.partitioning import spread
-
 # Maximal alphabetic runs: the reference splits on every non-alphabetic
 # character via isalpha() (slave.cc:87-97), preserving case (§1.4.5).
 TOKEN_DELIM_RE = "[^A-Za-z]+"
@@ -56,8 +54,7 @@ def tokenize(df: DataFrame, text_col: str = "text", out_col: str = "word") -> Da
     semantics the reference only approximates (SURVEY §1.4.2).
     """
     return (
-        spread(df.select(F.col(text_col)))
-        .select(F.explode(F.split(F.col(text_col), TOKEN_DELIM_RE)).alias(out_col))
+        df.select(F.explode(F.split(F.col(text_col), TOKEN_DELIM_RE)).alias(out_col))
         .filter(F.col(out_col) != "")
     )
 

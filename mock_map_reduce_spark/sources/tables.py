@@ -129,24 +129,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(path)
     else:
         df = spark.read.parquet(path)
-    if name == "events":
-        # Normalize ts to a real UTC TimestampType whatever the file
-        # encodes — the generator has shipped BOTH of these:
-        #   * TIMESTAMP(NANOS): with nanosAsLong it arrives as a long;
-        #     truncate nanos -> micros (the truncation DuckDB's
-        #     CAST(ts_ns AS TIMESTAMP) performs).
-        #   * timestamp[us] isAdjustedToUTC=false: Spark 4 infers
-        #     TIMESTAMP_NTZ, which unix_micros()/watermarks reject;
-        #     with the session zone pinned to UTC (above), a plain cast
-        #     reinterprets the same wall-clock instant losslessly.
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
+    return utc_ts(df) if name == "events" else df
 
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+
+def utc_ts(events: DataFrame) -> DataFrame:
+    """``events`` (a batch or streaming frame) with ``ts`` as a real UTC
+    TimestampType, whatever the file encodes — the generator has
+    shipped BOTH of these:
+
+    * TIMESTAMP(NANOS): with nanosAsLong it arrives as a long; truncate
+      nanos -> micros (the truncation DuckDB's CAST(ts_ns AS TIMESTAMP)
+      performs).
+    * timestamp[us] isAdjustedToUTC=false: Spark 4 infers TIMESTAMP_NTZ,
+      which unix_micros()/watermarks reject; with the session zone
+      pinned to UTC (``ensure_session_confs``), a plain cast
+      reinterprets the same wall-clock instant losslessly.
+    """
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    ts_type = events.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, TimestampNTZType):
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

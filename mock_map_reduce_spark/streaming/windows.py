@@ -35,7 +35,7 @@ EVENTS_SCHEMA = _EVENTS_SCHEMA_FMT.format(ts_type="long")
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import ensure_session_confs
+    from ..sources.tables import _table_schema, ensure_session_confs, utc_ts
 
     # Even with an explicit schema, the parquet stream source rejects
     # TIMESTAMP(NANOS) columns on a vanilla session; set the runtime
@@ -45,8 +45,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream schema matches the file's actual ts encoding; declaring
     # `long` against a micros file would silently reinterpret
     # microseconds as nanoseconds and collapse every event into 1970.
-    from ..sources.tables import _table_schema
-
     path = f"{sf_dir}/events.parquet"
     sch = _table_schema(spark, path)
     if sch is None:
@@ -60,11 +58,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if probed == "bigint":  # TIMESTAMP(NANOS) -> truncate to micros
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if probed == "timestamp_ntz":  # UTC session zone: lossless reinterpret
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return utc_ts(raw)
 
 
 def tumbling_stream(

@@ -142,6 +142,35 @@ def test_hinge_classifier_query_beats_base_rate(spark, sf_dir):
     assert acc >= base + 0.15, (acc, base)
 
 
+def test_pca_and_hinge_release_their_pins(spark, sf_dir):
+    """power_iteration_pc1 and train_hinge_classifier return a
+    driver-built table, so nothing reads their pins afterwards: building
+    and collecting either catalog entry, or a PCA whose Gram kernel
+    raises on a ragged vector, leaves the persisted-RDD count as it
+    was."""
+    from mock_map_reduce_spark import registry
+
+    registry.load_all()
+
+    def pins() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    for name in ("embedding_pca_pc1", "ml_train_hinge_classifier"):
+        before = pins()
+        registry.QUERIES[name](spark, sf_dir).collect()
+        assert pins() == before, name
+
+    # every third row is short, so each spread partition mixes lengths
+    # and the Gram kernel sees a ragged batch
+    ragged = spark.createDataFrame(
+        [Row(embedding=[1.0, 0.0, 0.0] if i % 3 else [0.0, 1.0]) for i in range(24)]
+    )
+    before = pins()
+    with pytest.raises(Exception, match="ragged or null"):
+        cl.power_iteration_pc1(ragged)
+    assert pins() == before
+
+
 def test_semdedup_prunes_planted_duplicates(planted):
     """Within each planted cluster the lowest id survives; all
     near-identical higher ids are pruned at a high threshold."""

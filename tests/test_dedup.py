@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Row
 
 from mock_map_reduce_spark.operators import dedup as dd
+from mock_map_reduce_spark.operators.text import WORD_SPLIT_RE
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -76,7 +77,7 @@ def _per_gram_signature(text: str | None, num_hashes: int, n: int = 3):
     import hashlib
     import re
 
-    toks = [t for t in re.split(dd._TOKEN_RE, (text or "").lower()) if t]
+    toks = [t for t in re.split(WORD_SPLIT_RE, (text or "").lower()) if t]
     grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
     if not grams:
         return None

@@ -57,8 +57,8 @@ def test_word_count_partial_aggregation(q):
 
 
 def test_word_count_single_shuffle(q):
-    # tokenize's spread() repartition + the groupBy exchange; no more
-    assert count_exchanges(q("word_count")) <= 2
+    # the groupBy exchange is the only one: tokenize rides the scan
+    assert count_exchanges(q("word_count")) == 1
 
 
 def test_whole_stage_codegen_on_flagship(q):
@@ -218,33 +218,44 @@ def test_join_hints_switch_physical_strategy(spark, sf_dir):
         assert got == want, hint  # strategy never changes the answer
 
 
-def test_spread_policy_heavy_vs_light(spark, sf_dir):
-    """Pin the adaptive spread() policy (functions/partitioning.py) —
-    load-bearing for both bench latency and 100 TB behavior:
-      * heavy=True + under-parallel: repartition even on a tiny source
-        (per-row md5/vector folds must not run on one core);
-      * light + small file-backed source: NO shuffle (a single-core
-        scan of a few MB beats moving it);
-      * no file scan behind the plan: size is UNKNOWN, not zero —
-        under-parallel non-file sources must still spread."""
+def test_spread_rule(spark, sf_dir):
+    """spread(df) (functions/partitioning.py) has one rule: a frame with
+    fewer than max(2, n // 2) partitions is repartitioned round-robin to
+    n = defaultParallelism, whatever its size or source; any other
+    frame is returned unchanged, as the same object."""
     from mock_map_reduce_spark.functions.partitioning import spread
-    from mock_map_reduce_spark.plans import executed_plan
     from mock_map_reduce_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = spark.sparkContext.defaultParallelism
     assert docs.rdd.getNumPartitions() < max(2, n // 2)  # under-parallel here
-    assert "RoundRobinPartitioning" in executed_plan(spread(docs, heavy=True))
-    assert spread(docs) is docs  # light + small: identical no-op
-    mem = spark.range(100).toDF("doc_id").coalesce(1)
+    spread_docs = spread(docs)
+    assert "RoundRobinPartitioning" in executed_plan(spread_docs)
+    assert spread_docs.rdd.getNumPartitions() == n
+    wide = docs.repartition(max(2, n // 2))
+    assert spread(wide) is wide
+    mem = spark.range(100).toDF("doc_id").coalesce(1)  # no file behind it
     assert "RoundRobinPartitioning" in executed_plan(spread(mem))
+
+
+def test_cheap_text_projections_do_not_spread(spark):
+    """Word count and TF-IDF tokenize on their input's own partitions:
+    even a single-partition in-memory frame plans no round-robin."""
+    from mock_map_reduce_spark.operators.text import tf_idf
+    from mock_map_reduce_spark.operators.wordcount import word_count
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat"), (2, "the dog ran")], "doc_id long, text string"
+    ).coalesce(1)
+    for df in (word_count(docs), tf_idf(docs)):
+        assert "RoundRobinPartitioning" not in executed_plan(df)
 
 
 def test_heavy_catalog_queries_spread_when_under_parallel(q):
     """Every catalog family doing per-row-heavy work (md5 shingles,
     vector folds, Arrow-batched decode) plans the spread repartition
     at this under-parallel SF; a new heavy operator that forgets
-    spread(heavy=True) fails here."""
+    spread() fails here."""
     from mock_map_reduce_spark.plans import executed_plan
 
     for name in (
